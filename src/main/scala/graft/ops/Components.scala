@@ -1,13 +1,15 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.GraftIterativeCheckpoint.{statsResetLocalCheckpoint, statsResetLocalCheckpointWithLongSum}
 import org.apache.spark.sql.functions._
 
 /** Distributed connected components over an undirected pair list,
   * shared by the text near-dup clustering (MinHash-LSH candidate
   * edges, `dedup_clusters`) and the embedding semantic-dedup
-  * clustering (cosine-LSH near-dup edges, `embed_dedup_clusters*`).
+  * clustering (cosine-LSH near-dup edges, `embed_dedup_clusters*`),
+  * plus the one incremental append kernel both families maintain their
+  * clusters with ([[Components.appendClusters]]).
   *
   * Algorithm: per round, (1) min-label propagation — every node takes
   * the minimum label over itself and its neighbors — followed by
@@ -26,10 +28,9 @@ import org.apache.spark.sql.functions._
   * the registered dup graphs are clique-shaped (every near-dup pair
   * is an edge), converge in 2 propagation rounds, and never execute
   * the label-x-label self-join at all; a path graph defers its first
-  * hop by at most one round. Measured on a 10,000-node path graph
-  * (the adversarial diameter case, ComponentsSpec): 14 rounds vs
-  * 9,999 for pure propagation, and 2 rounds on clique graphs; the
-  * spec pins rounds <= 2*ceil(log2 n) + 1 on the path and <= 3 on
+  * hop by at most one round. ComponentsSpec pins rounds <=
+  * 2*ceil(log2 n) + 1 on a 10,000-node path graph (the adversarial
+  * diameter case; 9,999 rounds for pure propagation) and <= 3 on
   * cliques.
   *
   * Scale shape: per round, ONE shuffle join (edge x label, with a
@@ -45,32 +46,18 @@ import org.apache.spark.sql.functions._
   * children's sizes, the carried BigInt squares per round — digits
   * double per iteration and from ~round 9 the driver burns minutes in
   * BigInteger multiplies while stages finish in milliseconds (see the
-  * helper's scaladoc for the measured cliff and jstack evidence).
-  * With fresh leaf stats per round the loop is flat; AQE re-plans
-  * broadcasts from actual runtime sizes, so static-planner stats are
-  * not needed at any scale.
+  * helper's scaladoc). With fresh leaf stats per round the loop is
+  * flat; AQE re-plans broadcasts from actual runtime sizes, so
+  * static-planner stats are not needed at any scale.
   *
-  * Measured on the 12-round sf0.1 hirecall chain graph (spark-shell,
-  * per-round instrumentation): every round 0.3-0.5 s, loop total 7.0 s
-  * — vs the stats-snowball variant's 82 s round 12 and 225 s hop.
-  * QBench cold-JVM min-of-2 at sf0.1: `dedup_clusters` 1.38-1.42s
-  * (double gate, r10's unconditional doubling was +35% on the
-  * clique-shaped common case) and `embed_dedup_clusters_hirecall`
-  * 6.4s (pre-r11: 6.73-7.08s) with the O(log n) path bound intact.
-  *
-  * TWO-REGIME kernel (r15): below [[DefaultLocalEdgeGate]] directed
-  * edges the kernel short-circuits to a driver-local union-find
-  * ([[localUnionFind]]) — at small graph sizes the loop's cost is
-  * pure scheduler round-trips (O(log n) rounds x 1-2 jobs each),
-  * and small graphs are a PRODUCTION regime (every streaming
-  * micro-batch append clusters a batch-bounded candidate graph,
-  * whatever the standing corpus size). Same gate philosophy as
-  * TextDedup.pruneIndexByProbedKeys' 10k-key literal/broadcast
-  * switch; frame equality local-vs-loop is spec-pinned on path,
-  * clique, star, and mixed graphs. Measured (QBench cold-JVM sf0.1
-  * steady state): `dedup_clusters` 1.38 -> 0.17s,
-  * `embed_dedup_clusters_hirecall` 6.4 -> 0.85s — the loop floor was
-  * the dominant term of every registered cluster query at bench SF. */
+  * TWO REGIMES: below [[DefaultLocalEdgeGate]] directed edges the
+  * kernel short-circuits to a driver-local union-find
+  * ([[localUnionFind]]). At small graph sizes the loop's cost is pure
+  * scheduler round-trips (O(log n) rounds x 1-2 jobs each), and small
+  * graphs are a PRODUCTION regime: every streaming micro-batch append
+  * clusters a batch-bounded candidate graph, whatever the standing
+  * corpus size. Frame equality local-vs-loop is spec-pinned on path,
+  * clique, star, and mixed graphs. */
 object Components {
 
   /** Cluster an undirected pair list. `aCol`/`bCol` name the pair
@@ -94,7 +81,7 @@ object Components {
   /** Size gate (edges) below which the kernel runs a driver-local
     * union-find instead of the distributed loop — the same
     * scale-aware two-regime shape as TextDedup.pruneIndexByProbedKeys'
-    * 10k-key literal/broadcast gate (r14). 1M directed edges is
+    * 10k-key literal/broadcast gate. 1M directed edges is
     * ~16 MB of raw id payload (the collect is bounded the same way a
     * broadcast-side build is), far above any registered bench graph
     * (the sf0.1 hi-recall graph is 908 edges) and any sane streaming
@@ -212,14 +199,14 @@ object Components {
         org.apache.spark.sql.GraftIterativeCheckpoint
           .statsResetLocalCheckpointCounted(directedPlan)
     } // one generator evaluation total
-    // SIZE-GATED driver-local fast path (r15): below `localEdgeGate`
+    // SIZE-GATED driver-local fast path: below `localEdgeGate`
     // directed edges, cluster on the driver with a union-find instead
     // of running the distributed loop. Rationale: the loop's cost at
     // small graph sizes is pure scheduler round-trips — O(log n)
     // rounds x 1-2 jobs/round ~ seconds of wall clock to cluster a
     // few thousand edges — and SMALL GRAPHS ARE A PRODUCTION REGIME,
     // not just a test artifact: every streaming micro-batch append
-    // (appendClusters* / the embed twins) clusters a candidate graph
+    // ([[appendClusters]], both families) clusters a candidate graph
     // bounded by the BATCH size however large the standing corpus is.
     // The collect is bounded exactly like a broadcast build side
     // (<= gate edges, two longs each, default ~16 MB); union-by-min
@@ -345,18 +332,11 @@ object Components {
     (out, rounds)
   }
 
-  /** Star edges replaying a (idCol, cluster_id, ...) cluster table,
-    * with the DELETE semantics applied uniformly (r15 review): when a
-    * takedown set is present, tombstoned members are excluded and each
+  /** Star edges replaying a (idCol, cluster_id, ...) cluster table.
+    * With a takedown set, tombstoned members are excluded and each
     * cluster's hub re-elects to its minimum LIVE member, so a deleted
-    * hub doesn't anchor its old cluster. Shared by the four append
-    * paths (text/embed x single-shot/cumulative) — previously four
-    * hand-copies that had already drifted: the cumulative forms
-    * replayed their prior output UNFILTERED, so a takedown written
-    * under quiesce after the stream had produced output silently
-    * never took effect (tombstoned docs persisted in every future
-    * output, no error). Without tombstones the hub IS cluster_id (the
-    * min member) and the replay is a plain filter. */
+    * hub doesn't anchor its old cluster. Without tombstones the hub IS
+    * cluster_id (the min member) and the replay is a plain filter. */
   private[ops] def starEdges(table: DataFrame, idCol: String, outA: String,
       outB: String, tombstones: Option[DataFrame]): DataFrame = tombstones match {
     case None =>
@@ -368,6 +348,143 @@ object Components {
           live.groupBy("cluster_id").agg(min(col(idCol)).as("hub")), "cluster_id")
         .filter(col(idCol) =!= col("hub"))
         .select(col("hub").as(outA), col(idCol).as(outB))
+  }
+
+  /** One family's per-batch candidate source for [[appendClusters]].
+    * `keys` is the batch's band-key table (probed on `probeKey`; its
+    * columns are also the persisted `bands` state projection), and
+    * `sidecars` are further per-batch tables the cross term reads next
+    * to the keys (the embed family's `vecs`), each persisted under the
+    * same name in the standing root and the state dir. `cross(keyed,
+    * sidecars)` turns an already pruned and tombstone-filtered keyed
+    * table plus its matching sidecars into (aCol, bCol) candidate
+    * pairs against the batch; `within` is the batch's own pairs.
+    * `release` drops the family's caches once the eager components
+    * pass has consumed them. */
+  private[graft] final case class ClusterTerms(idCol: String, aCol: String,
+      bCol: String, keys: DataFrame, probeKey: String,
+      sidecars: Seq[(String, DataFrame)], within: DataFrame,
+      cross: (DataFrame, Seq[DataFrame]) => DataFrame, release: () => Unit)
+
+  /** Cluster a batch against the standing artifacts under `root`
+    * through batch-sized work only: the one append kernel of the text
+    * (MinHash) and embedding (cosine-LSH) cluster families. `family`
+    * builds the batch's [[ClusterTerms]]; `state = Some((batchId,
+    * stateDir))` makes the append CUMULATIVE (each batch also clusters
+    * against every earlier batch of the stream), `None` is the
+    * single-shot append against the standing corpus only.
+    *
+    * Edge terms: batch x standing index (probed keys pushed into the
+    * index scan through the size-gated
+    * [[TextDedup.pruneIndexByProbedKeys]]), batch x batch, the replayed
+    * STAR of the latest cluster table (standing sidecar, or the prior
+    * cumulative output), and in cumulative mode batch x prior-batch
+    * band state. The star, not the sidecar's sizes or survivors, is
+    * replayed because a batch edge can merge two standing clusters and
+    * re-elect the survivor.
+    *
+    * STAR REPLACEMENT: band keys are per-record, so the full corpus's
+    * candidate edge set partitions into old x old, new x old and
+    * new x new. The kernel supplies the last two directly, and
+    * replacing the old x old subgraph by the star of its connected
+    * components preserves global connectivity (each old cluster stays
+    * connected through its hub, and no old-old connection existed
+    * outside those components). So the output equals the full rebuild
+    * and shares its DuckDB oracle. By induction over batches the same
+    * holds for the cumulative form: after batch N the star of batch
+    * N-1's output holds exactly the components of standing ∪ batches
+    * 1..N-1, and the band state supplies every batch-N-incident edge.
+    *
+    * TOMBSTONES (the standing root's table, unioned with an explicit
+    * `tombstoneTable`) filter every STANDING-LIKE term uniformly: the
+    * standing index scan (after the key prune), the prior-batch band
+    * state (before it), and the replayed star source (with live-hub
+    * re-election). Only the current batch is never filtered. So a
+    * takedown written under quiesce at any point of a stream's life
+    * takes effect from the next batch, and with a standing-only
+    * takedown list the cumulative output equals the single-shot one.
+    * Connectivity a deleted record contributed persists until the
+    * next full rebuild (the star records membership, not edges).
+    *
+    * REPLAY SAFETY (exactly-once over a replayable source with
+    * idempotent state writes): batch N reads only state with
+    * batch_id < N and writes only its own batch_id partitions (dynamic
+    * overwrite through [[graft.streaming.StreamingPipeline.writeBatchIdempotentAll]]),
+    * so a replayed batch reads the state it read the first time and
+    * rewrites only itself. State reads are gated on committed data
+    * through one fused listing, so a batch that died mid-state-write
+    * reads as never written; the prior cross needs EVERY state table
+    * present (a crash between two state writes must not crash every
+    * replay at plan time). `batch_id` is cast to long on read (it is a
+    * partition column, inferred back as int). Successful state writes
+    * are noted in `memo` even when a sibling write fails, since the
+    * memo negative-caches state tables for the stream's life.
+    *
+    * The three edge terms each run a bounded collect at construction
+    * (the key prune, the max-batch_id lookup), so they are built on
+    * concurrent threads. State is deliberately not range-laid: a
+    * batch-sized probe key set intersects almost every per-batch file,
+    * so a range write would cost a sampler job and a shuffle per batch
+    * for no skip; compaction range-lays the fold instead. */
+  private[graft] def appendClusters(spark: SparkSession,
+      family: (DataFrame, Int) => ClusterTerms, batch: DataFrame, root: String,
+      state: Option[(Long, String)] = None,
+      maxKeyLiterals: Int = TextDedup.probeKeyLiteralMax,
+      tombstoneTable: Option[DataFrame] = None,
+      memo: Core.FsMemo = new Core.FsMemo): DataFrame = {
+    val t = family(batch, maxKeyLiterals)
+    val id = t.idCol
+    try {
+      val tombstones = Core.resolveTombstones(spark, s"$root/tombstones",
+        tombstoneTable, id, memo).map(_.withColumnRenamed("tomb_id", id))
+      def dropTombstoned(df: DataFrame): DataFrame = tombstones match {
+        case Some(tb) => df.join(broadcast(tb), Seq(id), "left_anti")
+        case None => df
+      }
+      def prune(keyed: DataFrame): DataFrame =
+        TextDedup.pruneIndexByProbedKeys(keyed, t.keys, t.probeKey, maxKeyLiterals)
+      val stateTables = ("bands" -> t.keys) +: t.sidecars
+      val names = stateTables.map(_._1) :+ "clusters"
+      val present = state.fold(Map.empty[String, Boolean]) { case (_, dir) =>
+        memo.tablesExistUnder(spark, dir, names)
+      }
+      val standing = "cross-standing" -> (() => Option(t.cross(
+        dropTombstoned(prune(spark.read.parquet(s"$root/bandidx"))),
+        t.sidecars.map { case (n, _) => spark.read.parquet(s"$root/$n") })))
+      val stateTerms = state.toSeq.flatMap { case (batchId, dir) =>
+        def priorState(n: String, cols: Seq[String]) =
+          spark.read.parquet(s"$dir/$n").filter(col("batch_id").cast("long") < batchId)
+            .select(cols.map(col): _*)
+        Seq(
+          "cross-prior" -> (() =>
+            if (!stateTables.forall { case (n, _) => present(n) }) None
+            else Some(t.cross(prune(dropTombstoned(priorState("bands", t.keys.columns))),
+              t.sidecars.map { case (n, f) => priorState(n, f.columns) }))),
+          "prior-out" -> (() =>
+            if (!present("clusters")) None
+            else {
+              val out = spark.read.parquet(s"$dir/clusters")
+                .withColumn("batch_id", col("batch_id").cast("long"))
+                .filter(col("batch_id") < batchId)
+              val last = out.agg(max(col("batch_id"))).first()
+              if (last.isNullAt(0)) None
+              else Some(out.filter(col("batch_id") === last.getLong(0)).drop("batch_id"))
+            }))
+      }
+      val Seq(crossStanding, crossPrior, priorOut) =
+        Core.inParallel(standing +: stateTerms).padTo(3, None)
+      val star = starEdges(priorOut.getOrElse(spark.read.parquet(s"$root/clusters")),
+        id, t.aCol, t.bCol, tombstones)
+      val edges = crossPrior.foldLeft(crossStanding.get.union(t.within).union(star))(_ union _)
+      val out = clusterPairs(edges.distinct(), t.aCol, t.bCol, id)
+      state.foreach { case (batchId, dir) =>
+        val targets = names.map(n => s"$dir/$n")
+        graft.streaming.StreamingPipeline.writeBatchIdempotentAll(
+          (stateTables.map(_._2) :+ out).zip(targets), batchId,
+          onWritten = i => memo.noteWritten(spark, targets(i)))
+      }
+      out
+    } finally t.release()
   }
 
   /** Driver-local union-find over a (src, dst) edge frame that fits

@@ -146,8 +146,8 @@ object Core {
   /** The optional-PARQUET-TABLE gate: true iff `path` exists AND holds
     * at least one COMMITTED data file — a non-hidden file reachable
     * without crossing a `_`/`.`-prefixed entry. [[pathExists]] alone
-    * is the wrong guard before an optional `spark.read.parquet`
-    * (r15 review): a writer that dies MID-write (first tombstone
+    * is the wrong guard before an optional `spark.read.parquet`: a
+    * writer that dies MID-write (first tombstone
     * append, first state-dir write of a replayed micro-batch) leaves
     * the directory containing only `_temporary/` — the dir EXISTS,
     * but Spark's file index sees no data files and the read throws
@@ -160,19 +160,33 @@ object Core {
     * own `InMemoryFileIndex` filters, so this gate answers true iff
     * the read it guards can plan. Cost: one recursive listing of a
     * state/tombstone dir (small by contract); hidden subtrees are
-    * pruned without descent. */
+    * pruned without descent, and a directory deleted under the walk
+    * reads as absent ([[listOrEmpty]]). */
   def tableExists(spark: SparkSession, path: String): Boolean = {
     tableListings.incrementAndGet()
     val hPath = new org.apache.hadoop.fs.Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def hidden(n: String) = n.startsWith("_") || n.startsWith(".")
-    def hasData(p: org.apache.hadoop.fs.Path): Boolean =
-      fs.listStatus(p).exists { st =>
-        !hidden(st.getPath.getName) &&
-          (st.isFile || hasData(st.getPath))
-      }
-    fs.exists(hPath) && hasData(hPath)
+    fs.exists(hPath) && hasCommittedData(fs, hPath)
   }
+
+  private def hiddenName(n: String): Boolean = n.startsWith("_") || n.startsWith(".")
+
+  /** A directory listing that reads a path deleted since it was seen
+    * (a concurrent compaction or cleanup) as empty, so an existence
+    * gate answers "absent" instead of crashing the batch. */
+  private def listOrEmpty(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] =
+    try fs.listStatus(p)
+    catch { case _: java.io.FileNotFoundException => Array.empty }
+
+  /** Whether a non-hidden file is reachable under `p` without crossing
+    * a `_`/`.`-prefixed entry: the committed-data test of [[tableExists]]. */
+  private def hasCommittedData(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path): Boolean =
+    listOrEmpty(fs, p).exists { st =>
+      !hiddenName(st.getPath.getName) &&
+        (st.isFile || hasCommittedData(fs, st.getPath))
+    }
 
   /** Count of [[tableExists]] invocations (each is one recursive FS
     * listing) — the observable FsMemoSpec's steady-state bound is
@@ -181,8 +195,8 @@ object Core {
     * memoize (r16, VERDICT r15 #4). */
   private[graft] val tableListings = new java.util.concurrent.atomic.AtomicLong
 
-  /** FUSED existence check for several sibling tables under one parent
-    * (r18, VERDICT r17 #3): the cumulative cluster appends gate on 2-3
+  /** FUSED existence check for several sibling tables under one parent:
+    * the cumulative cluster append gates on 2-3
     * state tables per micro-batch (`bands`/`vecs`/`clusters` under one
     * stateDir), and checking each with [[tableExists]] costs a
     * separate exists + recursive walk per table — on an object store,
@@ -199,43 +213,33 @@ object Core {
     tableListings.incrementAndGet()
     val hParent = new org.apache.hadoop.fs.Path(parentDir)
     val fs = hParent.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def hidden(n: String) = n.startsWith("_") || n.startsWith(".")
-    def hasData(p: org.apache.hadoop.fs.Path): Boolean =
-      fs.listStatus(p).exists { st =>
-        !hidden(st.getPath.getName) &&
-          (st.isFile || hasData(st.getPath))
-      }
-    if (!fs.exists(hParent)) children.map(_ -> false).toMap
-    else {
-      val present = fs.listStatus(hParent)
-        .filter(st => st.isDirectory && !hidden(st.getPath.getName))
+    val present =
+      if (!fs.exists(hParent)) Set.empty[String]
+      else listOrEmpty(fs, hParent)
+        .filter(st => st.isDirectory && !hiddenName(st.getPath.getName))
         .map(_.getPath.getName).toSet
-      children.map(c => c -> (present.contains(c) &&
-        hasData(new org.apache.hadoop.fs.Path(hParent, c)))).toMap
-    }
+    children.map(c => c -> (present.contains(c) &&
+      hasCommittedData(fs, new org.apache.hadoop.fs.Path(hParent, c)))).toMap
   }
 
   /** Run INDEPENDENT driver-side tasks on fresh threads and join them
-    * all (guide §2.6 "overlap independent jobs" — the generic form of
-    * the r17 concurrent state writes): Spark's scheduler runs jobs
-    * from several driver threads FIFO, so the next task's stages
-    * back-fill executors freed by the current task's straggler tail,
-    * and pure driver/FS gaps (plan time, collect round-trips, commit
-    * waits) overlap instead of serializing.
+    * all: Spark's scheduler runs jobs from several driver threads FIFO,
+    * so the next task's stages back-fill executors freed by the current
+    * task's straggler tail, and pure driver/FS gaps (plan time, collect
+    * round-trips, commit waits) overlap instead of serializing.
     *
-    * Same threading contract as
-    * [[graft.streaming.StreamingPipeline.writeBatchIdempotentAll]]:
-    * FRESH threads created by the CALLING thread (job group / local
-    * properties live in an InheritableThreadLocal captured at thread
-    * creation — a shared pool would run tasks under some earlier
-    * creator's job group), ALL threads joined before any failure
-    * propagates (fail-fast would return control with siblings still
-    * running against live state), results pre-filled with a sentinel
-    * Failure and the runnable catching Throwable (a fatal error must
-    * propagate as itself, not as an NPE over a null slot). Results in
-    * input order; the first failure in input order rethrows. A
-    * single-task (or empty) list runs inline — no thread overhead on
-    * degenerate calls. */
+    * Threading contract: FRESH threads created by the CALLING thread
+    * (job group / local properties live in an InheritableThreadLocal
+    * captured at thread creation, so a shared pool would run tasks
+    * under some earlier creator's job group), and ALL threads joined
+    * before anything propagates, since returning early would leave
+    * siblings running against live state. The join is uninterruptible
+    * for the same reason: an interrupt of the caller is remembered and
+    * re-asserted on the caller's thread once every task has finished.
+    * Results are pre-filled with a sentinel Failure and the runnable
+    * catches Throwable, so a fatal error propagates as itself, not as
+    * an NPE over a null slot. Results in input order; the first failure
+    * in input order rethrows. A single-task (or empty) list runs inline. */
   private[graft] def inParallel[T](tasks: Seq[(String, () => T)]): Seq[T] =
     if (tasks.lengthCompare(2) < 0) tasks.map(_._2())
     else {
@@ -250,7 +254,13 @@ object Core {
         t.start()
         t
       }
-      threads.foreach(_.join())
+      var interrupted = false
+      threads.foreach { t =>
+        while (t.isAlive)
+          try t.join()
+          catch { case _: InterruptedException => interrupted = true }
+      }
+      if (interrupted) Thread.currentThread().interrupt()
       results.toSeq.map(_.get)
     }
 

@@ -507,17 +507,9 @@ object Mixture extends QueryModule {
   def streamingDriftProbe(spark: SparkSession, incoming: DataFrame,
       baselineDir: String, outDir: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    incoming.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val drift = probeDriftBaseline(spark, batch, baselineDir)
-          graft.streaming.StreamingPipeline.writeBatchIdempotent(drift, batchId, outDir)
-          ()
-        }
-      }
-      .start()
+    graft.streaming.StreamingPipeline.probeStream(incoming, outDir, checkpoint) {
+      (batch, _, _) => probeDriftBaseline(spark, batch, baselineDir)
+    }
 
   // --- persisted-baseline mixture gate -------------------------------------
 
@@ -567,17 +559,9 @@ object Mixture extends QueryModule {
   def streamingMixtureGate(spark: SparkSession, incoming: DataFrame,
       baselineDir: String, outDir: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    incoming.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val gated = probeMixtureGate(spark, batch, baselineDir)
-          graft.streaming.StreamingPipeline.writeBatchIdempotent(gated, batchId, outDir)
-          ()
-        }
-      }
-      .start()
+    graft.streaming.StreamingPipeline.probeStream(incoming, outDir, checkpoint) {
+      (batch, _, _) => probeMixtureGate(spark, batch, baselineDir)
+    }
 
   /** Registered CROSS-BATCH form under the hash gate (the index-probe
     * pattern, TextDedup.dedupIndexProbe): publish the baseline from the
@@ -695,17 +679,9 @@ object Mixture extends QueryModule {
   def streamingVocabProbe(spark: SparkSession, incoming: DataFrame,
       indexDir: String, outDir: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    incoming.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val probed = probeVocabIndex(spark, batch, indexDir)
-          graft.streaming.StreamingPipeline.writeBatchIdempotent(probed, batchId, outDir)
-          ()
-        }
-      }
-      .start()
+    graft.streaming.StreamingPipeline.probeStream(incoming, outDir, checkpoint) {
+      (batch, _, _) => probeVocabIndex(spark, batch, indexDir)
+    }
 
   /** Registered cross-batch form under the hash gate (the index-probe
     * pattern): vocabulary from the even-doc_id half, odd half probed

@@ -1032,25 +1032,25 @@ object Similarity extends QueryModule {
     if (!fs.exists(hIdsPath))
       writeIdSidecar(spark.read.parquet(indexDir).select(col("vec_id")),
         idsPath, overwrite = true)
-    // THREE batch guards fused into ONE aggregation job (r18, VERDICT
-    // r17 #4 — the append path's cost was serial driver round-trips,
-    // each a full pass over the batch):
-    //  (a) codebook-range guard (ADVICE r6): min(vec_id) < cells <=>
-    //      some batch row sits inside the codebook recovery range
-    //      `vec_id < cells` — it would shadow a centroid on the NEXT
-    //      codebook read and silently skew every later assignment;
-    //      fail fast at the contract instead (re-embedded documents
+    // The batch guards, fused into ONE aggregation pass:
+    //  (a) codebook range: min(vec_id) < cells <=> some batch row sits
+    //      inside the codebook recovery range `vec_id < cells`; it would
+    //      shadow a centroid on the NEXT codebook read and silently skew
+    //      every later assignment, so fail fast (re-embedded documents
     //      must re-id or trigger the full-rebuild path);
-    //  (b) internal uniqueness (r10 ADVICE): count(vec_id) >
-    //      count_distinct(vec_id) <=> some vec_id repeats — a
-    //      duplicate passes the index-side semi-join (neither id is in
-    //      the index yet) and lands two vectors under one id;
-    //  (c) the batch's id RANGE, feeding the sidecar guard's
+    //  (b) internal uniqueness: count(vec_id) > count_distinct(vec_id)
+    //      <=> some vec_id repeats; a duplicate passes the index-side
+    //      semi-join (neither id is in the index yet) and lands two
+    //      vectors under one id;
+    //  (c) no NULL ids: count(1) > count(vec_id) <=> some id is NULL,
+    //      which every other aggregate ignores, so (a) and (b) would
+    //      pass it and land a vector no id can address;
+    //  (d) the batch's id RANGE, feeding the sidecar guard's
     //      min/max-pruned scan below.
-    // Same four requires, same messages, one batch pass instead of
-    // three.
     val stats = batch.agg(min(col("vec_id")), max(col("vec_id")),
-      count(col("vec_id")), count_distinct(col("vec_id"))).head()
+      count(col("vec_id")), count_distinct(col("vec_id")), count(lit(1))).head()
+    require(stats.getLong(4) == stats.getLong(2),
+      "appendToIvfIndex: batch carries NULL vec_ids")
     if (!stats.isNullAt(0)) {
       val (mn, mx) = (stats.getLong(0), stats.getLong(1))
       require(mn >= cells,
@@ -2032,113 +2032,72 @@ object Similarity extends QueryModule {
     ()
   }
 
-  /** Cluster a batch of vectors against the standing artifacts through
-    * batch-sized + index-sized work only. Same star-replacement
-    * equality argument as the text append ([[TextDedup.appendClusters]]):
-    * the full corpus's VERIFIED pair set partitions into even x even
-    * (replaced by the cluster sidecar's star — connectivity-preserving),
-    * batch x standing (the index probe + cosine verify below), and
-    * batch x batch (the lean generator over the batch); the cosine is
-    * computed by the same commutative expression on every path, so the
-    * union's components EQUAL the full rebuild's and the probe shares
-    * [[embedDedupClustersSql]] verbatim. Probed keys go through the
-    * size-gated [[TextDedup.pruneIndexByProbedKeys]]; the batch side
-    * of the verify joins are batch-sized, the standing side reads only
-    * index-matched vector rows from the sidecar. */
-  private[graft] def appendEmbedClusters(spark: SparkSession, batch: DataFrame,
-      root: String,
-      maxKeyLiterals: Int = TextDedup.probeKeyLiteralMax,
-      tombstoneTable: Option[DataFrame] = None,
-      memo: Core.FsMemo = new Core.FsMemo): DataFrame = {
-    // both batch projections are consumed repeatedly (index prune +
-    // cross join + within-batch candidates for the keys; cross verify
-    // + two within verify joins for the vectors) — cache and release
-    // after the eager components loop, like crossCand below (r15:
-    // uncached, the per-vector plane projection re-ran per consumer).
-    // NOT spreadNarrowScan'd (r17 — measured, then reverted): a batch
-    // frame is micro-batch-sized by contract, its banding/norm map
-    // work is microseconds, and the probe cost is scheduler
-    // round-trips — fanning the caches to core-count partitions only
-    // ADDED an exchange and 32-task scheduling per probe join
-    // (JobProfile quiet-box A/B: ~9 -> ~11s on the cumulative probe).
-    // The corpus-sized standing builds keep their fan-out.
-    val batchEmb = batch.select(col("vec_id"), col("embedding"),
-      sqrt(dot(col("embedding"), col("embedding"))).as("norm")).cache()
-    val batchKeys = embedFlatKeys(batch).cache()
-    // tombstones: the text family's delete semantics ported verbatim
-    // (r15, VERDICT r14 #4) — standing root's table by default, an
-    // explicit table for takedown-against-immutable-snapshot; dropped
-    // ids vanish from the index scan (no new candidate can match) and
-    // from the star replay (never emitted), with hub re-election.
-    // Committed-data existence via Core.tableExists: a local-only
-    // check would silently no-op takedowns on HDFS/S3, and a torn
-    // takedown write (a _temporary-only dir) must read as absent
-    // rather than crash every subsequent append at plan time.
-    val tombstones: Option[DataFrame] =
-      Core.resolveTombstones(spark, s"$root/tombstones", tombstoneTable,
-        "vec_id", memo)
-        .map(_.withColumnRenamed("tomb_id", "vec_id"))
-    def dropTombstoned(df: DataFrame): DataFrame = tombstones match {
-      case Some(t) => df.join(broadcast(t), Seq("vec_id"), "left_anti")
-      case None => df
+  /** The embed family's candidate source for [[Components.appendClusters]]:
+    * the batch's flat band keys, its vector sidecar (vec_id, embedding,
+    * norm; persisted as the extra `vecs` state table, because
+    * cross-batch candidates must cosine-verify against earlier
+    * batches' embeddings), the within-batch verified pairs, and the
+    * cross term: a flat `bandkey` join, then a cosine check against the
+    * matching vector sidecar, read only at the matched ids through the
+    * size-gated pushdown against its vec_id range layout. Cosine is
+    * bit-commutative in its operands, so verifying (idx, new) equals
+    * verifying the rebuild's (min, max) order exactly. No self-pairs:
+    * a re-ingested vec_id would verify against itself at 1.0 and
+    * surface as a singleton cluster the rebuild never emits.
+    *
+    * The batch projections and each candidate set are consumed
+    * repeatedly (the id-pruning collect, the verify joins, the state
+    * writes), so they are cached until the components pass has run.
+    * Batch frames are not fanned out (spreadNarrowScan): they are
+    * micro-batch-sized, and a fan-out only added an exchange and
+    * core-count scheduling per probe join. */
+  private[graft] def clusterTerms(batch: DataFrame,
+      maxKeyLiterals: Int): Components.ClusterTerms = {
+    val caches = scala.collection.mutable.ListBuffer.empty[DataFrame]
+    // synchronized: the kernel builds its cross terms on concurrent threads
+    def cached(df: DataFrame): DataFrame = {
+      df.cache(); caches.synchronized { caches += df }; df
     }
-    val idx = dropTombstoned(TextDedup.pruneIndexByProbedKeys(
-      spark.read.parquet(s"$root/bandidx"), batchKeys, "bandkey", maxKeyLiterals))
-    // candidate id pairs are consumed twice (the matched-id pushdown
-    // below + the verify join), so cache and release after the eager
-    // components loop has materialized everything
-    val crossCand = idx.select(col("vec_id").as("idx_id"), col("bandkey"))
-      .join(batchKeys.select(col("vec_id").as("new_id"), col("bandkey")), Seq("bandkey"))
-      // no self-pairs (r15 review): a batch vec re-ingesting an id
-      // already in the index would cosine-verify against itself at
-      // 1.0 and surface as a singleton cluster the rebuild never
-      // emits; the cumulative twin's verifiedCross always filtered
-      .filter(col("idx_id") =!= col("new_id"))
-      .select(col("idx_id"), col("new_id")).distinct()
-      .cache()
-    // the vector sidecar is CORPUS-sized; scan only the matched rows —
-    // the same size-gated pushdown as the band index, against the
-    // sidecar's vec_id range layout (isin literals skip files for
-    // micro-batches, broadcast semi-join survives bulk batches)
-    val idxVecs = TextDedup.pruneIndexByProbedKeys(
-      spark.read.parquet(s"$root/vecs"),
-      crossCand.select(col("idx_id").as("vec_id")), "vec_id", maxKeyLiterals)
-    val cross = crossCand
-      .join(idxVecs.select(col("vec_id").as("idx_id"),
-        col("embedding").as("ea"), col("norm").as("na")), "idx_id")
-      .join(batchEmb.select(col("vec_id").as("new_id"),
-        col("embedding").as("eb"), col("norm").as("nb")), "new_id")
-      // cosine is bit-commutative in its operands (elementwise products
-      // and the norm product), so verifying (idx, new) equals verifying
-      // the rebuild's (min, max) ordering exactly
-      .select(least(col("idx_id"), col("new_id")).as("vec_a"),
-        greatest(col("idx_id"), col("new_id")).as("vec_b"),
-        (dot(col("ea"), col("eb")) / (col("na") * col("nb"))).as("cosine"))
-      .filter(col("cosine") >= ndThreshold)
-      .select(col("vec_a"), col("vec_b"))
-    val within = withinBatchVerifiedPairs(batchKeys, batchEmb)
-    // sidecar replay as star edges, DELETE semantics applied uniformly
-    // (exclusion + live-hub re-election) by the shared helper
-    val star = Components.starEdges(
-      spark.read.parquet(s"$root/clusters"), "vec_id", "vec_a", "vec_b", tombstones)
-    try Components.clusterPairs(
-      cross.union(within).union(star).distinct(), "vec_a", "vec_b", "vec_id")
-    finally { // loop is eager: result checkpoint-rooted
-      crossCand.unpersist(); batchKeys.unpersist(); batchEmb.unpersist(); ()
-    }
+    val batchEmb = cached(batch.select(col("vec_id"), col("embedding"),
+      sqrt(dot(col("embedding"), col("embedding"))).as("norm")))
+    val batchKeys = cached(embedFlatKeys(batch))
+    Components.ClusterTerms("vec_id", "vec_a", "vec_b", batchKeys, "bandkey",
+      Seq("vecs" -> batchEmb),
+      within = withinBatchVerifiedPairs(batchKeys, batchEmb),
+      cross = (keyed, sidecars) => {
+        val cand = cached(
+          keyed.select(col("vec_id").as("idx_id"), col("bandkey"))
+            .join(batchKeys.select(col("vec_id").as("new_id"), col("bandkey")),
+              Seq("bandkey"))
+            .filter(col("idx_id") =!= col("new_id"))
+            .select(col("idx_id"), col("new_id")).distinct())
+        val idxVecs = TextDedup.pruneIndexByProbedKeys(
+          sidecars.head, cand.select(col("idx_id").as("vec_id")), "vec_id",
+          maxKeyLiterals)
+        cand
+          .join(idxVecs.select(col("vec_id").as("idx_id"),
+            col("embedding").as("ea"), col("norm").as("na")), "idx_id")
+          .join(batchEmb.select(col("vec_id").as("new_id"),
+            col("embedding").as("eb"), col("norm").as("nb")), "new_id")
+          .select(least(col("idx_id"), col("new_id")).as("vec_a"),
+            greatest(col("idx_id"), col("new_id")).as("vec_b"),
+            (dot(col("ea"), col("eb")) / (col("na") * col("nb"))).as("cosine"))
+          .filter(col("cosine") >= ndThreshold)
+          .select(col("vec_a"), col("vec_b"))
+      },
+      release = () => caches.foreach(_.unpersist()))
   }
 
   /** Within-batch verified near-dup pairs derived from the batch's
-    * ALREADY-computed flat-key and norm frames (r15) — replaces a
-    * [[cosineNearDupPairsLeanOver]] call inside the append paths,
-    * which re-ran the per-vector plane projection and norm pass the
-    * caller had just cached. Provably the same pair set: the flat key
-    * band * 2^rows + bkey is injective in (band, bkey), so grouping
-    * by it groups exactly like the lean generator's (band, bkey)
-    * equi-join, and the cosine verify is the same expression over the
-    * same (a < b)-ordered ids. The lean form's terminal duplicate-id
-    * dedup is subsumed by the candidate distinct here plus the
-    * edges.distinct() both appends apply before the components loop. */
+    * ALREADY-computed flat-key and norm frames, instead of a
+    * [[cosineNearDupPairsLeanOver]] call that would re-run the
+    * per-vector plane projection and norm pass. Provably the same pair
+    * set: the flat key band * 2^rows + bkey is injective in (band,
+    * bkey), so grouping by it groups exactly like the lean generator's
+    * (band, bkey) equi-join, and the cosine verify is the same
+    * expression over the same (a < b)-ordered ids. The lean form's
+    * terminal duplicate-id dedup is subsumed by the candidate distinct
+    * here plus the edges.distinct() the append kernel applies. */
   private def withinBatchVerifiedPairs(batchKeys: DataFrame,
       batchEmb: DataFrame): DataFrame = {
     val cand = batchKeys.select(col("vec_id").as("vec_a"), col("bandkey"))
@@ -2157,76 +2116,64 @@ object Similarity extends QueryModule {
   }
 
   /** REGISTERED end-to-end exercise of the semantic cluster append
-    * under the driver's oracle gate — [[TextDedup.dedupClustersAppendProbe]]'s
+    * under the driver's oracle gate, [[TextDedup.dedupClustersAppendProbe]]'s
     * embedding twin: even vec_ids are the accumulated corpus, odd
     * vec_ids are today's batch; the oracle IS the full-corpus cluster
     * oracle (star replacement makes the incremental result equal the
     * rebuild). Spec-asserted frame-equal to the direct 8x4 rebuild;
-    * hash-green at sf0.01 (66 rows) and sf0.1 (884 rows). QBench
-    * cold-JVM sf0.1: [4.69, 2.35, 2.71]s (r15; pre-gate
-    * [7.41, 3.44, 2.66]) — rep0 carries the one-time standing build
-    * (index + vector sidecar + cluster pass); the steady-state probe
-    * removes the accumulated corpus's band/verify pass, the term that
-    * grows with corpus size. */
+    * hash-green at sf0.01 (66 rows) and sf0.1 (884 rows). The
+    * steady-state probe removes the accumulated corpus's band/verify
+    * pass, the term that grows with corpus size. */
   def embedDedupClustersAppendProbe(spark: SparkSession, dir: String): DataFrame = {
-    val root = ProbeTemp.dir("embed_clusters_append", dir) { d =>
+    val root = standingEmbedRoot(spark, dir)
+    Components.appendClusters(spark, clusterTerms,
+      Core.embeddings(spark, dir).filter(col("vec_id") % 2 === 1), root)
+  }
+
+  /** The registered embed cluster probes' shared standing build: the
+    * even-vec_id half, built once per corpus into one ProbeTemp kind. */
+  private def standingEmbedRoot(spark: SparkSession, dir: String): String =
+    ProbeTemp.dir("embed_clusters_append", dir) { d =>
       writeEmbedClusterAppendArtifacts(spark,
         Core.embeddings(spark, dir).filter(col("vec_id") % 2 === 0), d)
     }
-    appendEmbedClusters(spark,
-      Core.embeddings(spark, dir).filter(col("vec_id") % 2 === 1), root)
-  }
 
   val embedDedupClustersAppendProbeSql: String = embedDedupClustersSql
 
   /** Tombstone a takedown list of vec_ids under the embed artifacts
-    * root — [[TextDedup.writeClusterTombstones]]' contract ported to
-    * the embedding family (r15, VERDICT r14 #4): calls ACCUMULATE
-    * (append-mode files, never resurrecting earlier takedowns and
-    * never leaving an absent-table crash window),
-    * [[appendEmbedClusters]] then guarantees EXCLUSION (no tombstoned
-    * vector in any output, no new candidate matched against one, hub
-    * re-election on the cluster sidecar), and connectivity a deleted
-    * vector contributed persists until compaction — the same
-    * eventually-consistent LSM posture, with the same quiesce-first
-    * rule for live [[streamingEmbedClusterAppend]] streams. Compaction
-    * ([[writeEmbedClusterAppendArtifacts]] over the corpus minus
-    * tombstones) is the hard-forget path that also drops the stored
-    * embeddings from the vector sidecar. */
+    * root: [[TextDedup.writeClusterTombstones]]' contract for the
+    * embedding family. Calls ACCUMULATE; [[Components.appendClusters]]
+    * then guarantees EXCLUSION (no tombstoned vector in any output, no
+    * new candidate matched against one, hub re-election on the cluster
+    * sidecar), and connectivity a deleted vector contributed persists
+    * until compaction, with the same quiesce-first rule for live
+    * streams. Compaction ([[writeEmbedClusterAppendArtifacts]] over the
+    * corpus minus tombstones) is the hard-forget path that also drops
+    * the stored embeddings from the vector sidecar. */
   def writeEmbedClusterTombstones(spark: SparkSession, vecIds: DataFrame,
       root: String): Unit =
     TextDedup.accumulateTombstones(vecIds, s"$root/tombstones", "vec_id")
 
-  /** REGISTERED exercise of the embed tombstone DELETE path (r15) —
+  /** REGISTERED exercise of the embed tombstone DELETE path,
     * [[TextDedup.dedupClustersTombstoneProbe]]'s embedding twin:
     * standing (even-vec_id) artifacts, every vec_id % 10 = 4
     * tombstoned (a standing slice hitting clusters and hubs,
     * spec-asserted non-vacuous), the odd batch appended. The DuckDB
     * oracle replicates the DOCUMENTED append-with-tombstones
-    * semantics — not a rebuild: even-side verified-pair components
-    * (recursive CTE #1) -> live members minus tombstones -> re-elected
-    * hubs -> star edges, unioned with the banded-AND-cosine-verified
-    * cross (batch x live index) and within-batch pairs, then full
-    * components (recursive CTE #2). Both sides derive band keys and
-    * cosines from the same plane/fold text ([[embedBandsCtes]] /
-    * [[dotSql]]), so the engines can never band or verify differently.
-    * Shares the append probe's standing artifacts (same ProbeTemp
-    * kind), passing the tombstone table explicitly so the shared
-    * artifacts stay untouched; the parquet tombstone round-trip is
-    * spec-covered via [[writeEmbedClusterTombstones]]. Hash-green at
-    * sf0.01 (51 rows) and sf0.1 (713 rows). QBench cold-JVM sf0.1:
-    * [6.69, 3.33, 3.06]s (r15; pre-gate [7.93, 3.75, 3.58]) — rep0
-    * carries the shared standing build; steady state is the append
-    * probe's cost plus the broadcast anti-joins and the sidecar-sized
-    * hub re-election min-agg. */
+    * semantics, not a rebuild: even-side verified-pair components
+    * (recursive CTE #1) -> live members -> re-elected hubs -> star
+    * edges, unioned with the banded-AND-cosine-verified cross (batch x
+    * live index) and within-batch pairs, then full components
+    * (recursive CTE #2). Both sides derive band keys and cosines from
+    * the same plane/fold text ([[embedBandsCtes]] / [[dotSql]]), so
+    * the engines can never band or verify differently. The tombstone
+    * table is passed explicitly so the shared artifacts stay
+    * untouched. Hash-green at sf0.01 (51 rows) and sf0.1 (713 rows). */
   def embedDedupClustersTombstoneProbe(spark: SparkSession, dir: String): DataFrame = {
-    val root = ProbeTemp.dir("embed_clusters_append", dir) { d =>
-      writeEmbedClusterAppendArtifacts(spark,
-        Core.embeddings(spark, dir).filter(col("vec_id") % 2 === 0), d)
-    }
+    val root = standingEmbedRoot(spark, dir)
     val vecs = Core.embeddings(spark, dir)
-    appendEmbedClusters(spark, vecs.filter(col("vec_id") % 2 === 1), root,
-      tombstoneTable = Some(vecs.filter(col("vec_id") % 10 === 4).select("vec_id")))
+    Components.appendClusters(spark, clusterTerms, vecs.filter(col("vec_id") % 2 === 1),
+      root, tombstoneTable = Some(vecs.filter(col("vec_id") % 10 === 4).select("vec_id")))
   }
 
   val embedDedupClustersTombstoneProbeSql: String = {
@@ -2286,273 +2233,55 @@ object Similarity extends QueryModule {
        |FROM labels l JOIN sizes s USING (cluster_id)""".stripMargin
   }
 
-  /** STREAMING semantic cluster append — each micro-batch of vectors
-    * clustered against the standing artifacts inside foreachBatch,
-    * landing idempotently under its batch_id partition; artifacts are
-    * STATIC for the stream's lifetime, compaction is
-    * [[writeEmbedClusterAppendArtifacts]] (the contract of every
-    * streaming probe here). Input schema: (vec_id long,
-    * embedding array<float>). */
+  /** STREAMING semantic cluster append: each micro-batch of vectors is
+    * clustered against the standing artifacts and lands idempotently
+    * under its batch_id partition; artifacts are STATIC for the
+    * stream's lifetime, compaction is [[writeEmbedClusterAppendArtifacts]].
+    * Input schema: (vec_id long, embedding array<float>). */
   def streamingEmbedClusterAppend(spark: SparkSession, vecs: DataFrame,
       artifactsRoot: String, outDir: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    // one FS memo per STREAM (r16, VERDICT r15 #4) — the text twin's
-    // rationale: tombstone sidecars are quiesce-written, so one
-    // existence listing serves the stream's whole life
-    val memo = new Core.FsMemo
-    vecs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val clusters = appendEmbedClusters(spark, batch, artifactsRoot, memo = memo)
-          graft.streaming.StreamingPipeline.writeBatchIdempotent(
-            clusters, batchId, outDir)
-          ()
-        }
-      }
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    graft.streaming.StreamingPipeline.probeStream(vecs, outDir, checkpoint) {
+      (batch, _, memo) =>
+        Components.appendClusters(spark, clusterTerms, batch, artifactsRoot, memo = memo)
+    }
 
-  /** CUMULATIVE streaming semantic cluster maintenance (r15) — closing
-    * the same static-artifacts gap [[TextDedup.appendClustersCumulative]]
-    * closed for text (VERDICT r14 missing #4): [[streamingEmbedClusterAppend]]
-    * clusters each micro-batch against standing + itself only, so two
-    * near-dup VECTORS arriving in different micro-batches stay
-    * unclustered until compaction. This form keeps per-stream state
-    * under `stateDir` — (a) each batch's flat band keys
-    * (bands/batch_id=K), (b) each batch's vector sidecar
-    * (vecs/batch_id=K: vec_id, embedding, norm — the embed-specific
-    * extra: cross-batch candidates must COSINE-VERIFY, which needs the
-    * prior batches' embeddings; text needed no verify step), and
-    * (c) the latest emitted cluster table (clusters/batch_id=K).
-    * Batch N clusters against standing index + prior-batch bands +
-    * itself, verifying each cross candidate against the matching
-    * vector sidecar, with star edges replayed from the LATEST cluster
-    * output. Same induction as the text form, with the verify attached
-    * to every cross term: the emitted table after batch N equals the
-    * full rebuild over standing ∪ batches 1..N (gated by the
-    * registered probe below against [[embedDedupClustersSql]]
-    * verbatim). Replay-safe: state writes target only their own
-    * batch_id partition, batch N reads strictly batch_id < N.
-    * TOMBSTONES: supported with the static form's delete semantics
-    * (standing index filter + first-batch sidecar re-election;
-    * spec-gated frame-equal to the registered single-shot tombstone
-    * probe — the text twin carries the DuckDB gate for this
-    * composition).
-    * At 100 TB: per-batch cost grows only with accumulated batch BAND
-    * and VECTOR state (both orders below a re-band of the corpus),
-    * probed through the size-gated key pushdown; state compacts via
+  /** CUMULATIVE streaming semantic cluster maintenance, the text
+    * family's [[TextDedup.streamingClusterAppendCumulative]] for
+    * vectors: each batch also clusters against every earlier batch, so
+    * two near-dup VECTORS arriving in different micro-batches cluster
+    * at once. Per-stream state under `stateDir` holds each batch's flat
+    * band keys (bands/batch_id=K), its vector sidecar (vecs/batch_id=K,
+    * which the cross-batch cosine verify reads), and the latest emitted
+    * cluster table (clusters/batch_id=K). The latest batch_id partition
+    * under `outDir` is the cluster assignment of everything ingested
+    * and equals the full rebuild over standing ∪ all batches (arguments
+    * on [[Components.appendClusters]]). State compacts via
     * [[compactEmbedClusterState]]. */
-  private[graft] def appendEmbedClustersCumulative(spark: SparkSession,
-      batch: DataFrame, batchId: Long, artifactsRoot: String, stateDir: String,
-      maxKeyLiterals: Int = TextDedup.probeKeyLiteralMax,
-      tombstoneTable: Option[DataFrame] = None,
-      memo: Core.FsMemo = new Core.FsMemo): DataFrame = {
-    import graft.streaming.StreamingPipeline.writeBatchIdempotent
-    // TOMBSTONES (r15; made UNIFORM after the r15 review — the text
-    // cumulative form's semantics verbatim): the takedown set filters
-    // every standing-like term — the standing index scan, the
-    // accumulated prior-batch band state, and the replayed star
-    // source (standing sidecar or prior output, live-hub re-election
-    // via Components.starEdges) — so a quiesce-written takedown takes
-    // effect at ANY point in the stream's life; only the current
-    // batch's vectors are never filtered (the static form's
-    // contract). Oracle-gated: the registered cumulative-tombstone
-    // probe shares the single-shot tombstone SQL verbatim.
-    val tombstones: Option[DataFrame] =
-      Core.resolveTombstones(spark, s"$artifactsRoot/tombstones", tombstoneTable,
-        "vec_id", memo)
-        .map(_.withColumnRenamed("tomb_id", "vec_id"))
-    def dropTombstoned(df: DataFrame): DataFrame = tombstones match {
-      case Some(t) => df.join(broadcast(t), Seq("vec_id"), "left_anti")
-      case None => df
-    }
-    // every batch-derived frame is CONSUMED REPEATEDLY (two cross
-    // probes + verify joins + the state writes; each candidate table
-    // feeds the id-pruning collect AND the verify join), so cache the
-    // batch projections and each candidate set, releasing after the
-    // eager components pass — uncached, the per-vector banding and the
-    // banded joins re-ran per consumer (QBench A/B on the registered
-    // probe at sf0.1: steady 10.15 -> 7.75s; with the r15 size-gated
-    // local clustering and the within-batch pair reuse the steady
-    // state is ~5.7s, now dominated by the per-batch generator and
-    // the three state round-trips per batch)
-    val caches = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    // registration synchronized: the edge terms are constructed on
-    // concurrent threads below (r18), and each registers its candidate
-    // cache here
-    def cached(df: DataFrame): DataFrame = {
-      df.cache(); caches.synchronized { caches += df }; df
-    }
-    // NOT spreadNarrowScan'd — the single-shot append's rationale:
-    // micro-batch-sized frames, map work in the microseconds, fan-out
-    // measured as pure overhead here
-    val batchEmb = cached(batch.select(col("vec_id"), col("embedding"),
-      sqrt(dot(col("embedding"), col("embedding"))).as("norm")))
-    val batchKeys = cached(embedFlatKeys(batch))
-    // banded candidates of the batch against a keyed (vec_id, bandkey)
-    // table, then cosine-verified against the matching vector sidecar —
-    // the index side pruned by probed keys, the vector side by matched
-    // candidate ids (both size-gated)
-    def verifiedCross(keyed: DataFrame, vecSidecar: DataFrame): DataFrame = {
-      val cand = cached(
-        keyed.select(col("vec_id").as("idx_id"), col("bandkey"))
-          .join(batchKeys.select(col("vec_id").as("new_id"), col("bandkey")),
-            Seq("bandkey"))
-          .filter(col("idx_id") =!= col("new_id"))
-          .select(col("idx_id"), col("new_id")).distinct())
-      val idxVecs = TextDedup.pruneIndexByProbedKeys(
-        vecSidecar, cand.select(col("idx_id").as("vec_id")), "vec_id",
-        maxKeyLiterals)
-      cand
-        .join(idxVecs.select(col("vec_id").as("idx_id"),
-          col("embedding").as("ea"), col("norm").as("na")), "idx_id")
-        .join(batchEmb.select(col("vec_id").as("new_id"),
-          col("embedding").as("eb"), col("norm").as("nb")), "new_id")
-        .select(least(col("idx_id"), col("new_id")).as("vec_a"),
-          greatest(col("idx_id"), col("new_id")).as("vec_b"),
-          (dot(col("ea"), col("eb")) / (col("na") * col("nb"))).as("cosine"))
-        .filter(col("cosine") >= ndThreshold)
-        .select(col("vec_a"), col("vec_b"))
-    }
-    // ONE state-dir listing answers all three per-batch existence
-    // checks (r18, VERDICT r17 #3): bands + vecs + clusters previously
-    // cost one recursive walk EACH per uncached batch — on an object
-    // store, three LIST storms where one parent listing suffices. Same
-    // memoization contract per child (permanent negative cache,
-    // noteWritten flips entries — identical qualified keys).
-    val stateTables = memo.tablesExistUnder(spark, stateDir,
-      Seq("bands", "vecs", "clusters"))
-    // The three eager-constructing edge terms are INDEPENDENT (r18,
-    // VERDICT r17 #3, guide §2.6): each cross probe runs 1-2 bounded
-    // collect jobs at construction (the size-gated key pushdowns) and
-    // the prior-output term runs the max-batch_id lookup — previously
-    // serial driver round-trips, now overlapped on fresh threads
-    // (shared cached frames are safe: concurrent materialization is
-    // block-locked). Thread.join gives the happens-before edge for the
-    // plain vars; Core.inParallel joins all and rethrows the first
-    // failure.
-    var crossStanding: DataFrame = null
-    var crossPrior: Option[DataFrame] = None
-    var priorOut: Option[DataFrame] = None
-    Core.inParallel[Unit](Seq(
-      "embed-cross-standing" -> (() => {
-        crossStanding = verifiedCross(
-          dropTombstoned(TextDedup.pruneIndexByProbedKeys(
-            spark.read.parquet(s"$artifactsRoot/bandidx"), batchKeys, "bandkey",
-            maxKeyLiterals)),
-          spark.read.parquet(s"$artifactsRoot/vecs"))
-      }),
-      // BOTH state tables must exist before either is read (r15 review):
-      // a crash between the bands and vecs writes of an earlier batch
-      // left bands present and vecs absent, and the coupled read threw
-      // at plan time on EVERY replay of that batch — an unrecoverable
-      // crash loop (the partial bands partition itself is harmless: the
-      // batch_id < batchId filter drops it). Prior-batch keys are also
-      // tombstone-filtered — the cumulative form's standing-like term,
-      // same rationale as the text twin.
-      "embed-cross-prior" -> (() => {
-        crossPrior =
-          if (stateTables("bands") && stateTables("vecs")) {
-            val priorKeys = dropTombstoned(spark.read.parquet(s"$stateDir/bands")
-              .filter(col("batch_id").cast("long") < batchId)
-              .select("vec_id", "bandkey"))
-            val priorVecs = spark.read.parquet(s"$stateDir/vecs")
-              .filter(col("batch_id").cast("long") < batchId)
-              .select("vec_id", "embedding", "norm")
-            Some(verifiedCross(
-              TextDedup.pruneIndexByProbedKeys(priorKeys, batchKeys, "bandkey",
-                maxKeyLiterals),
-              priorVecs))
-          } else None
-      }),
-      "embed-prior-out" -> (() => {
-        priorOut =
-          if (stateTables("clusters")) {
-            val prior = spark.read.parquet(s"$stateDir/clusters")
-              .withColumn("batch_id", col("batch_id").cast("long"))
-              .filter(col("batch_id") < batchId)
-            val last = prior.agg(max(col("batch_id"))).first()
-            if (last.isNullAt(0)) None
-            else Some(prior.filter(col("batch_id") === last.getLong(0)).drop("batch_id"))
-          } else None
-      })))
-    // star source: standing sidecar on the first batch, prior
-    // cumulative output afterwards — both through the uniform delete
-    // semantics, so a quiesce-written mid-stream takedown takes
-    // effect on the replayed structure too (r15 review; text twin's
-    // rationale verbatim)
-    val star = Components.starEdges(
-      priorOut.getOrElse(spark.read.parquet(s"$artifactsRoot/clusters")),
-      "vec_id", "vec_a", "vec_b", tombstones)
-    val within = withinBatchVerifiedPairs(batchKeys, batchEmb)
-    val edges = crossPrior.foldLeft(crossStanding.union(within).union(star))(_ union _)
-    try {
-      val out = Components.clusterPairs(edges.distinct(), "vec_a", "vec_b", "vec_id")
-      // state deliberately NOT range-laid (r15 — the text form's
-      // rationale: per-batch range files almost always intersect a
-      // batch-sized probe key set, so there is no skip to buy, while
-      // the range write costs a sampler job + shuffle per table per
-      // micro-batch on the stream's hot path).
-      // [[compactEmbedClusterState]] range-lays the fold instead.
-      // the three state writes are independent (disjoint inputs,
-      // distinct dirs) — submit concurrently so each write's commit
-      // tail back-fills with the next one's tasks (guide §2.6; r17)
-      val targets = Seq(s"$stateDir/bands", s"$stateDir/vecs", s"$stateDir/clusters")
-      // successes noted in the memo via the callback BEFORE a sibling
-      // failure rethrows (r18, ADVICE r17 — the text twin's rationale)
-      graft.streaming.StreamingPipeline.writeBatchIdempotentAll(
-        Seq(batchKeys, batchEmb, out).zip(targets), batchId,
-        onWritten = i => memo.noteWritten(spark, targets(i)))
-      out
-    } finally caches.foreach(_.unpersist()) // loop eager; out checkpoint-rooted
-  }
-
-  /** The streaming wrapper of [[appendEmbedClustersCumulative]] —
-    * the latest batch_id partition under `outDir` IS the current
-    * cluster assignment of everything ingested. */
   def streamingEmbedClusterAppendCumulative(spark: SparkSession, vecs: DataFrame,
       artifactsRoot: String, stateDir: String, outDir: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    // one FS memo per STREAM (r16, VERDICT r15 #4): one existence
-    // listing per optional table (tombstones + bands + vecs +
-    // clusters) for the stream's life — see the text twin's note
-    val memo = new Core.FsMemo
-    vecs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val clusters = appendEmbedClustersCumulative(
-            spark, batch, batchId, artifactsRoot, stateDir, memo = memo)
-          graft.streaming.StreamingPipeline.writeBatchIdempotent(
-            clusters, batchId, outDir)
-          ()
-        }
-      }
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    graft.streaming.StreamingPipeline.probeStream(vecs, outDir, checkpoint) {
+      (batch, batchId, memo) =>
+        Components.appendClusters(spark, clusterTerms, batch, artifactsRoot,
+          Some(batchId -> stateDir), memo = memo)
+    }
 
-  /** COMPACTION for the embed cumulative state — [[TextDedup.compactClusterState]]'s
-    * embedding twin, with the extra vector-sidecar fold: the new band
+  /** COMPACTION for the embed cumulative state, [[TextDedup.compactClusterState]]'s
+    * embedding twin with the extra vector-sidecar fold: the new band
     * index is standing ∪ accumulated batch keys (re-range-laid on
     * bandkey), the new vector sidecar is standing ∪ batch vectors
     * (re-range-laid on vec_id so the matched-id pushdown keeps
     * skipping files), the new cluster sidecar is the latest cumulative
     * output verbatim. No embedding is ever re-read from the source or
     * re-hashed. Same fail-fast contracts: pairwise-distinct
-    * directories, non-empty state, no tombstone table (the fold would carry the tombstoned
-    * index rows AND stored vectors into a fresh root with no exclusion
-    * left — a takedown corpus compacts via
+    * directories, non-empty state, no tombstone table (the fold would
+    * carry the tombstoned index rows AND stored vectors into a fresh
+    * root with no exclusion left; a takedown corpus compacts via
     * [[writeEmbedClusterAppendArtifacts]] over corpus minus
     * tombstones, which also physically drops the stored embeddings). */
   def compactEmbedClusterState(spark: SparkSession, artifactsRoot: String,
       stateDir: String, newRoot: String): Unit =
-    // skeleton shared with the text fold via Core.compactStateFold
-    // (r15 review) — the embed family contributes its TWO fold tables
-    // (band keys + the vector sidecar, each on its own pushdown
-    // layout) and a takedown message naming the stored embeddings
     Core.compactStateFold(spark, artifactsRoot, stateDir, newRoot,
       Seq(
         Core.StateFold("bandidx", "bands",
@@ -2568,72 +2297,52 @@ object Similarity extends QueryModule {
           "minus tombstones (the hard-forget path that also drops the " +
           "stored vectors)")
 
-  /** REGISTERED exercise of the embed cumulative form (r15) —
+  /** REGISTERED exercise of the embed cumulative form,
     * [[TextDedup.dedupClustersCumulativeProbe]]'s embedding twin:
     * shared standing (even-vec_id) artifacts, the odd half fed as TWO
     * sequential sub-batches (vec_id % 4) over a scratch stateDir; the
     * last batch's table is gated against the full-rebuild cluster
     * oracle verbatim, pinning the cross-batch verified-merge invariant
-    * end-to-end. Two sub-batches (not the text probe's three) because
-    * every state path is already exercised by batch 2 — prior-bands
-    * cross, prior-VECS cosine verify, state-star replay — while each
-    * extra batch costs a full per-batch pass (generator + probes +
-    * state writes; three batches QBenched at [18.9, 16.7, 12.8]s
-    * pre-gate vs two at the number below); the >2-batch inductive step is
-    * spec-gated by the streaming compaction test instead. Hash-green
-    * at sf0.01 (66 rows) and sf0.1 (884 rows). QBench cold-JVM sf0.1:
-    * [8.99, 7.26, 5.75]s (r15; pre-gate [12.61, 8.74, 8.41, 7.75]) —
-    * rep0 carries the shared standing build; steady state is two
-    * per-batch passes (banding + verified probes + the size-gated
-    * local clustering, with [[withinBatchVerifiedPairs]] reusing the
-    * cached batch projections) plus three state round-trips per
-    * batch, the honest cost of replaying a 2-batch stream at this
-    * SF. */
+    * end-to-end. Two sub-batches, not the text probe's three: batch 2
+    * already exercises every state path (prior-bands cross, prior-VECS
+    * cosine verify, state-star replay), while each extra batch costs a
+    * full per-batch pass; the >2-batch inductive step is spec-gated by
+    * the streaming compaction test instead. Hash-green at sf0.01 (66
+    * rows) and sf0.1 (884 rows). */
   def embedDedupClustersCumulativeProbe(spark: SparkSession, dir: String): DataFrame = {
-    val root = ProbeTemp.dir("embed_clusters_append", dir) { d =>
-      writeEmbedClusterAppendArtifacts(spark,
-        Core.embeddings(spark, dir).filter(col("vec_id") % 2 === 0), d)
-    }
+    val root = standingEmbedRoot(spark, dir)
     val stateDir = ProbeTemp.scratch("eclu_state")
     val odd = Core.embeddings(spark, dir).filter(col("vec_id") % 2 === 1)
     Seq(1, 3).zipWithIndex.map { case (m, i) =>
-      appendEmbedClustersCumulative(spark,
-        odd.filter(col("vec_id") % 4 === m), i.toLong, root, stateDir)
+      Components.appendClusters(spark, clusterTerms,
+        odd.filter(col("vec_id") % 4 === m), root, Some(i.toLong -> stateDir))
     }.last
   }
 
   val embedDedupClustersCumulativeProbeSql: String = embedDedupClustersSql
 
   /** REGISTERED composition of the embed cumulative stream with the
-    * DELETE path (r15) — [[TextDedup.dedupClustersCumulativeTombstoneProbe]]'s
-    * embedding twin, completing the lifecycle matrix's last asymmetric
-    * cell (the composition was spec-gated frame-equal at sf0.001 but
-    * carried no DuckDB row): standing even-vec_id artifacts (shared
-    * build), every vec_id % 10 = 4 tombstoned (the tombstone probe's
-    * exact fixture, spec-proven non-vacuous), the odd half fed as TWO
-    * sequential sub-batches (vec_id % 4 ∈ {1,3} — a complete partition
-    * of the odd ids, so the ingested corpus is identical to the
-    * single-shot tombstone probe's). Tombstones only change the
-    * STANDING terms — identically in the cumulative and single-shot
-    * forms — so the final output equals [[embedDedupClustersTombstoneProbe]]
-    * and the oracle is [[embedDedupClustersTombstoneProbeSql]]
-    * VERBATIM: one DuckDB hash match pins exclusion, re-election, AND
-    * the cross-batch verified merge. The takedown table is passed
-    * explicitly per batch (immutable shared artifacts, the production
-    * shape); stateDir is per-invocation scratch, never memoized. */
+    * DELETE path, [[TextDedup.dedupClustersCumulativeTombstoneProbe]]'s
+    * embedding twin: standing even-vec_id artifacts (shared build),
+    * every vec_id % 10 = 4 tombstoned (the tombstone probe's fixture),
+    * the odd half fed as TWO sequential sub-batches (vec_id % 4 ∈
+    * {1,3}, a complete partition of the odd ids, so the ingested corpus
+    * is the single-shot tombstone probe's). Tombstones only change the
+    * STANDING terms, identically in both forms, so the final output
+    * equals [[embedDedupClustersTombstoneProbe]] and the oracle is
+    * [[embedDedupClustersTombstoneProbeSql]] VERBATIM. The takedown
+    * table is passed explicitly per batch; stateDir is per-invocation
+    * scratch, never memoized. */
   def embedDedupClustersCumulativeTombstoneProbe(spark: SparkSession,
       dir: String): DataFrame = {
-    val root = ProbeTemp.dir("embed_clusters_append", dir) { d =>
-      writeEmbedClusterAppendArtifacts(spark,
-        Core.embeddings(spark, dir).filter(col("vec_id") % 2 === 0), d)
-    }
+    val root = standingEmbedRoot(spark, dir)
     val stateDir = ProbeTemp.scratch("eclu_tomb_state")
     val vecs = Core.embeddings(spark, dir)
     val tomb = Some(vecs.filter(col("vec_id") % 10 === 4).select("vec_id"))
     val odd = vecs.filter(col("vec_id") % 2 === 1)
     Seq(1, 3).zipWithIndex.map { case (m, i) =>
-      appendEmbedClustersCumulative(spark, odd.filter(col("vec_id") % 4 === m),
-        i.toLong, root, stateDir, tombstoneTable = tomb)
+      Components.appendClusters(spark, clusterTerms, odd.filter(col("vec_id") % 4 === m),
+        root, Some(i.toLong -> stateDir), tombstoneTable = tomb)
     }.last
   }
 

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.streaming.StreamingPipeline
 
 /** Large-scale training-data pipeline text ops (north-star extensions
   * beyond the reference — builder brief): tokenization, language-ID
@@ -969,23 +970,10 @@ object TextDedup extends QueryModule {
     * [[Similarity.streamingIvfProbe]]. */
   def streamingSimhashProbe(spark: SparkSession, incoming: DataFrame,
       indexDir: String, outDir: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    // one tombstone-sidecar existence listing per STREAM, not per
-    // micro-batch (r16 review — the cluster streams' FsMemo rationale:
-    // sidecars are quiesce-written under a live stream)
-    val memo = new Core.FsMemo
-    incoming.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val matches = probeSimhashIndex(spark, batch, indexDir, memo = memo)
-          graft.streaming.StreamingPipeline.writeBatchIdempotent(matches, batchId, outDir)
-          ()
-        }
-      }
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    StreamingPipeline.probeStream(incoming, outDir, checkpoint) { (batch, _, memo) =>
+      probeSimhashIndex(spark, batch, indexDir, memo = memo)
+    }
 
   /** REGISTERED end-to-end exercise of the persisted simhash index
     * under the driver's oracle gate (VERDICT r7 #4): split the corpus
@@ -1283,64 +1271,38 @@ object TextDedup extends QueryModule {
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b")).distinct()
 
-  /** INCREMENTAL cluster maintenance — the index-lifecycle pattern
-    * (build -> probe -> merge/append, already covering the digest,
-    * simhash, vocab, drift and IVF artifacts) applied to the near-dup
-    * CLUSTER family, which until r13 was rebuild-only: a production
-    * corpus ingests a batch per day, and re-banding the accumulated
-    * 100 TB corpus against itself to absorb one batch is the exact
-    * cost this sidecar exists to avoid.
+  /** INCREMENTAL cluster maintenance: the index lifecycle (build ->
+    * probe -> append) applied to the near-dup CLUSTER family, so that
+    * absorbing a day's batch does not re-band the accumulated corpus
+    * against itself.
     *
-    * Fixture split (the established *_probe convention): even doc_ids
-    * are the accumulated corpus, odd doc_ids are today's batch. The
-    * BUILD (ProbeTemp, once per corpus) persists two artifacts of the
-    * standing corpus: its band-key INDEX ((doc_id, band, bkey) — 4
-    * rows/doc, range-laid on (band, bkey)) and its cluster SIDECAR
-    * (the components loop over the standing corpus's own candidates —
-    * generated by self-joining the just-written index, so the build
-    * eats the same artifact the probe does). The PROBE then touches
-    * only batch-sized and index-sized data: band keys of the new
-    * batch (linear in batch), batch x index candidate edges (the
-    * probed bkey literals pushed into the index scan, the
-    * [[probeSimhashIndex]] pattern — driver-side key list bounded by
-    * 4 x batch size), batch-internal candidate edges, and the standing
-    * sidecar replayed as STAR EDGES (member -> cluster hub; sizes and
-    * survivor flags are NOT reused — they are recomputed by the
-    * components run, because a batch edge can MERGE two standing
-    * clusters and re-elect the survivor).
-    *
-    * WHY the output equals the full-corpus rebuild (and can therefore
-    * share [[dedupClustersSql]] as its DuckDB oracle verbatim): band
-    * keys are per-document, so the full corpus's candidate edge set
-    * partitions into even x even, odd x even, and odd x odd; the probe
-    * supplies the last two directly, and replacing the even x even
-    * subgraph by the star of its connected components preserves global
-    * connectivity (each standing cluster is connected through its hub,
-    * and no even-even connection existed outside those components).
+    * Fixture split (the *_probe convention): even doc_ids are the
+    * accumulated corpus, odd doc_ids are today's batch. The BUILD
+    * (ProbeTemp, once per corpus) persists the standing corpus's
+    * band-key INDEX and cluster SIDECAR ([[writeClusterAppendArtifacts]]);
+    * the PROBE is [[Components.appendClusters]], which touches only
+    * batch-sized and index-sized data and whose star-replacement
+    * argument makes the output equal the full-corpus rebuild, so it
+    * shares [[dedupClustersSql]] as its DuckDB oracle verbatim.
     * Spec-asserted frame-equal to dedupClustersDirect on the full
-    * corpus; hash-gated against the full recursive-CTE oracle.
-    *
-    * At 100 TB: per-batch cost is O(batch) sketching + an index join
-    * that shuffles index rows only + a components run over
-    * batch-and-cluster-sized edges — the accumulated corpus's TEXT is
-    * never re-read and never re-banded. Full rebuild remains the
-    * periodic compaction step, exactly like the IVF append's retrain.
-    * QBench cold-JVM sf0.1: [3.46, 1.55, 1.50]s (r15; pre-gate
-    * [4.51, 1.94, 1.88]) — rep0 carries the one-time standing build.
-    * The steady state was LOOP-dominated at this SF until the r15
-    * size gate moved batch-scale graphs onto the driver-local
-    * union-find; what remains is the batch band/probe pass plus the
-    * gated collect. The term the append removes vs the rebuild is the
-    * accumulated-corpus sketch/band pass, which grows with corpus
-    * size while batch, index-hit and cluster volumes stay bounded. */
+    * corpus. Per batch the accumulated corpus's TEXT is never re-read
+    * and never re-banded; the full rebuild remains the periodic
+    * compaction step, like the IVF append's retrain. */
   def dedupClustersAppendProbe(spark: SparkSession, dir: String): DataFrame = {
-    val root = ProbeTemp.dir("dedup_clusters_append", dir) { d =>
+    val root = standingClusterRoot(spark, dir)
+    Components.appendClusters(spark, clusterTerms,
+      Core.documents(spark, dir).filter(col("doc_id") % 2 === 1), root)
+  }
+
+  /** The registered cluster probes' shared standing build: the even-id
+    * half of the corpus, built once per corpus into one ProbeTemp kind,
+    * so the append, tombstone and cumulative probes read the same
+    * immutable artifacts. */
+  private def standingClusterRoot(spark: SparkSession, dir: String): String =
+    ProbeTemp.dir("dedup_clusters_append", dir) { d =>
       writeClusterAppendArtifacts(spark,
         Core.documents(spark, dir).filter(col("doc_id") % 2 === 0), d)
     }
-    appendClusters(spark,
-      Core.documents(spark, dir).filter(col("doc_id") % 2 === 1), root)
-  }
 
   /** The standing corpus's two append artifacts: its band-key INDEX
     * (range-laid on (band, bkey) so a probe's pushed bkey literals
@@ -1365,36 +1327,24 @@ object TextDedup extends QueryModule {
     } finally release()
   }
 
-  /** DELETE path for the cluster lifecycle (r14, VERDICT r13 #5 of
-    * "What's missing"): record documents to FORGET (takedowns,
-    * re-crawls) as a tombstone table under the standing artifacts.
-    * [[appendClusters]] honors tombstones on its next probe:
-    * tombstoned docs are dropped from the band-index scan (no new
-    * candidate can match them) and from the sidecar replay (they never
-    * appear in any emitted cluster), and a standing cluster whose hub
-    * was tombstoned re-elects its hub among the remaining members.
-    * CONSISTENCY CONTRACT — tombstoning is eventually consistent, the
-    * standard LSM posture: connectivity a deleted doc CONTRIBUTED
-    * (a bridge doc whose removal would split a standing cluster under
-    * a full rebuild) persists until the next compaction, because the
-    * star sidecar records membership, not the original edge structure.
-    * Full rebuild ([[writeClusterAppendArtifacts]] over the corpus
-    * minus tombstones) is the forget path that also severs bridges;
-    * the probe-time filter guarantees only EXCLUSION (no tombstoned
-    * doc in any output, no match against one). When no tombstoned doc
-    * cuts its standing cluster's candidate graph, the append equals
-    * the rebuild exactly (spec-asserted on a clique fixture). Calling
-    * this while a [[streamingClusterAppend]] stream is live violates
-    * that stream's static-artifacts contract — quiesce first.
-    * ACCUMULATION (r15, ADVICE r14): calls ACCUMULATE — each call
-    * APPENDS its ids as new files in the live table, so a second
-    * takedown never resurrects earlier-tombstoned docs (the prior
-    * overwrite semantics silently did), there is no self-overwrite of
-    * a lazily-read source, and — unlike the earlier
-    * stage-delete-rename swap — no crash window in which the table is
-    * absent and every tombstone is silently lost (see
-    * [[accumulateTombstones]]). Spec-asserted: two sequential
-    * takedown calls exclude BOTH id sets. */
+  /** DELETE path for the cluster lifecycle: record documents to
+    * FORGET (takedowns, re-crawls) as a tombstone table under the
+    * standing artifacts. [[Components.appendClusters]] honors it on
+    * its next probe: tombstoned docs are dropped from the band-index
+    * scan (no new candidate can match them) and from the star replay
+    * (they never appear in any emitted cluster), and a standing
+    * cluster whose hub was tombstoned re-elects its hub among the
+    * remaining members. Tombstoning is eventually consistent, the
+    * standard LSM posture: connectivity a deleted doc CONTRIBUTED (a
+    * bridge whose removal would split its cluster under a rebuild)
+    * persists until the next full rebuild ([[writeClusterAppendArtifacts]]
+    * over the corpus minus tombstones), because the star records
+    * membership, not edges. When no tombstoned doc cuts its cluster's
+    * candidate graph, the append equals the rebuild exactly
+    * (spec-asserted on a clique fixture). Calls ACCUMULATE (see
+    * [[accumulateTombstones]]), so a second takedown never resurrects
+    * earlier ones. Quiesce a live stream first: the standing artifacts
+    * are static for a stream's lifetime. */
   def writeClusterTombstones(spark: SparkSession, docIds: DataFrame,
       root: String): Unit =
     accumulateTombstones(docIds, s"$root/tombstones", "doc_id")
@@ -1439,363 +1389,93 @@ object TextDedup extends QueryModule {
           s"hard-forget first ($compactOp into a fresh dir), then merge that")
     }
 
-  /** The probe core, shared by the registered query and the streaming
-    * form: cluster `batch` against the standing artifacts under `root`
-    * through batch-sized work only (see [[dedupClustersAppendProbe]]
-    * for the plan shape and the equality argument; see
-    * [[pruneIndexByProbedKeys]] for the size-gated key pushdown and
-    * [[writeClusterTombstones]] for delete semantics). */
-  private[graft] def appendClusters(spark: SparkSession, batch: DataFrame,
-      root: String, maxKeyLiterals: Int = probeKeyLiteralMax,
-      tombstoneTable: Option[DataFrame] = None,
-      memo: Core.FsMemo = new Core.FsMemo): DataFrame = {
-    val (batchBands, release) = minhashBands(batch)
-    // probed keys into the index scan, size-gated (r14, VERDICT r13
-    // #1): literal file-skip for micro-batches, broadcast semi-join
-    // for bulk batches. Keys are bkey-only (4/doc); a cross-band bkey
-    // collision over-reads a few index rows and is then dropped by the
-    // (band, bkey) equi-join.
-    val idx = pruneIndexByProbedKeys(
-      spark.read.parquet(s"$root/bandidx"), batchBands, "bkey", maxKeyLiterals)
-    // tombstones: the standing root's table by default; an explicit
-    // table lets a takedown list be evaluated against an IMMUTABLE
-    // artifact snapshot without rewriting it (the registered tombstone
-    // probe shares the append probe's standing build this way)
-    // committed-data gate, not bare existence (r15 review): a takedown
-    // write that dies mid-flight leaves a _temporary-only dir that
-    // EXISTS but cannot be read — treated as absent, so the retry
-    // story stays "torn write == never started". An explicit table
-    // UNIONS with the committed sidecar, never overrides it
-    // (Core.resolveTombstones scaladoc).
-    val tombstones: Option[DataFrame] =
-      Core.resolveTombstones(spark, s"$root/tombstones", tombstoneTable,
-        "doc_id", memo)
-        .map(_.withColumnRenamed("tomb_id", "doc_id"))
-    def dropTombstoned(df: DataFrame): DataFrame = tombstones match {
-      case Some(t) => df.join(broadcast(t), Seq("doc_id"), "left_anti")
-      case None => df
-    }
-    val cross = dropTombstoned(idx)
-      .select(col("doc_id").as("idx_id"), col("band"), col("bkey"))
-      .join(batchBands.select(col("doc_id").as("new_id"), col("band"), col("bkey")),
-        Seq("band", "bkey"))
-      // a batch doc re-ingesting an id already in the index (replay
-      // across a rebuild, an upsert) must not self-pair (r15 review:
-      // a (A, A) edge made an unmatched A a singleton cluster the
-      // rebuild would not emit); the cumulative form always filtered
-      .filter(col("idx_id") =!= col("new_id"))
-      .select(least(col("idx_id"), col("new_id")).as("doc_a"),
-        greatest(col("idx_id"), col("new_id")).as("doc_b"))
-    val within = candidatePairsOver(batchBands)
-    // sidecar replay as star edges, DELETE semantics applied uniformly
-    // (exclusion + live-hub re-election) by the shared helper
-    val star = Components.starEdges(
-      spark.read.parquet(s"$root/clusters"), "doc_id", "doc_a", "doc_b", tombstones)
-    try Components.clusterPairs(
-      cross.union(within).union(star).distinct(), "doc_a", "doc_b", "doc_id")
-    finally release() // components loop is eager: result is checkpoint-rooted
+  /** The text family's candidate source for [[Components.appendClusters]]:
+    * the batch's MinHash band keys, their within-batch bucket pairs,
+    * and the cross term as a (band, bkey) equi-join. Keys are probed
+    * on bkey alone (4 per doc): a cross-band bkey collision over-reads
+    * a few index rows, which the equi-join then drops. A batch doc
+    * re-ingesting an indexed id (a replay across a rebuild, an upsert)
+    * must not self-pair: an (A, A) edge would make an unmatched A a
+    * singleton cluster the rebuild does not emit. */
+  private[graft] def clusterTerms(batch: DataFrame,
+      maxKeyLiterals: Int): Components.ClusterTerms = {
+    val (bands, release) = minhashBands(batch)
+    Components.ClusterTerms("doc_id", "doc_a", "doc_b", bands, "bkey", Nil,
+      within = candidatePairsOver(bands),
+      cross = (keyed, _) =>
+        keyed.select(col("doc_id").as("idx_id"), col("band"), col("bkey"))
+          .join(bands.select(col("doc_id").as("new_id"), col("band"), col("bkey")),
+            Seq("band", "bkey"))
+          .filter(col("idx_id") =!= col("new_id"))
+          .select(least(col("idx_id"), col("new_id")).as("doc_a"),
+            greatest(col("idx_id"), col("new_id")).as("doc_b")),
+      release = release)
   }
 
-  /** STREAMING cluster append — the per-batch form of
-    * [[dedupClustersAppendProbe]], completing the cluster family's
-    * lifecycle the way [[streamingSimhashProbe]] and the IVF probe
-    * complete theirs: each micro-batch of documents is clustered
-    * against the standing band index + cluster sidecar inside
-    * foreachBatch, and the batch's cluster table lands idempotently
-    * under its batch_id partition (a replayed micro-batch rewrites its
-    * own directory — the at-least-once fix every sink here uses).
-    * Contract: the standing artifacts are STATIC for the stream's
-    * lifetime (the simhash probe's contract) — each batch clusters
-    * against the standing corpus and itself, not against earlier
-    * batches; the periodic compaction that folds accumulated batches
-    * into new artifacts is [[writeClusterAppendArtifacts]]. Input
-    * schema: (doc_id long, text string, ...) — whatever
-    * [[minhashBands]]' tokenizer needs. */
+  /** STREAMING cluster append, the per-batch form of
+    * [[dedupClustersAppendProbe]]: each micro-batch of documents is
+    * clustered against the standing band index + cluster sidecar and
+    * lands idempotently under its batch_id partition. The standing
+    * artifacts are STATIC for the stream's lifetime, so each batch
+    * clusters against the standing corpus and itself, not against
+    * earlier batches ([[streamingClusterAppendCumulative]] does that);
+    * [[writeClusterAppendArtifacts]] is the periodic compaction. Input
+    * schema: (doc_id long, text string, ...). */
   def streamingClusterAppend(spark: SparkSession, docs: DataFrame,
       artifactsRoot: String, outDir: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    // one FS memo per STREAM (r16, VERDICT r15 #4): the tombstone
-    // existence check is one listing for the stream's whole life, not
-    // one per micro-batch — sound because sidecars are quiesce-written
-    val memo = new Core.FsMemo
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val clusters = appendClusters(spark, batch, artifactsRoot, memo = memo)
-          graft.streaming.StreamingPipeline.writeBatchIdempotent(
-            clusters, batchId, outDir)
-          ()
-        }
-      }
-      .start()
-  }
-
-  /** CUMULATIVE streaming cluster maintenance (r14) — closing the
-    * static-artifacts contract's documented gap: [[streamingClusterAppend]]
-    * clusters each micro-batch against the standing corpus and itself,
-    * never against EARLIER batches, so two near-dup documents arriving
-    * in different micro-batches stay unclustered until the next
-    * compaction. This form keeps per-stream STATE under `stateDir` —
-    * (a) every prior batch's band table (bands/batch_id=K, written
-    * idempotently into its own partition) and (b) the latest emitted
-    * cluster table (clusters/batch_id=K) — and each batch clusters
-    * against standing index + prior-batch bands + its own bands, with
-    * the star edges replayed from the LATEST cluster table instead of
-    * the standing sidecar.
-    *
-    * INVARIANT (induction over batches, each step the r13
-    * star-replacement argument): the cluster table emitted after batch
-    * N equals the full rebuild over standing ∪ batches 1..N — base
-    * case is [[appendClusters]]' proved equality; the step replaces
-    * ALL prior structure (standing + batches 1..N-1) by the star of
-    * the previous output, which by hypothesis holds exactly that
-    * structure's components, while the band tables supply every
-    * batch-N-incident edge. Spec-asserted: a three-micro-batch stream
-    * with a known near-dup pair SPLIT across batches converges to
-    * `dedupClustersDirect` over the full corpus, frame-equal.
-    *
-    * Replay safety: every state write targets only its own batch_id
-    * partition (dynamic overwrite), and batch N reads strictly
-    * batch_id < N — a replayed micro-batch reads the same state it
-    * read the first time and rewrites only itself. At 100 TB: per-batch
-    * cost grows only with the accumulated BATCH bands (4 rows/doc of
-    * longs — orders below the text), probed through the same size-gated
-    * key pushdown as the standing index; state is compacted away by
-    * [[compactClusterState]] (band-table fold + latest-output promotion,
-    * no text re-read), or by a full [[writeClusterAppendArtifacts]]
-    * rebuild when geometry or tombstones demand one. TOMBSTONES (r15;
-    * made UNIFORM after the r15 review): the takedown set filters
-    * every standing-like term — the standing index scan, the
-    * accumulated prior-batch band state, and the replayed star source
-    * (standing sidecar or prior output, with live-hub re-election) —
-    * so a takedown written under quiesce at ANY point in the stream's
-    * life takes effect from the next batch; only the current batch's
-    * own docs are never filtered ([[appendClusters]]' contract). With
-    * a standing-only takedown list the final output EQUALS the
-    * single-shot [[appendClusters]]-with-tombstones over all batches
-    * (oracle-gated, shared SQL verbatim); writing tombstones while
-    * the stream is LIVE still violates the quiesce-first contract,
-    * same as every artifact mutation. */
-  private[graft] def appendClustersCumulative(spark: SparkSession,
-      batch: DataFrame, batchId: Long, artifactsRoot: String,
-      stateDir: String, maxKeyLiterals: Int = probeKeyLiteralMax,
-      tombstoneTable: Option[DataFrame] = None,
-      memo: Core.FsMemo = new Core.FsMemo): DataFrame = {
-    import graft.streaming.StreamingPipeline.writeBatchIdempotent
-    // TOMBSTONES (r15; exclusion made UNIFORM after the r15 review):
-    // the takedown set filters every STANDING-LIKE term — the standing
-    // index scan, the accumulated prior-batch band state, and the
-    // replayed star source (standing sidecar on the first batch, the
-    // prior cumulative output afterwards, both with live-hub
-    // re-election via Components.starEdges). Only the CURRENT batch's
-    // docs are never filtered, matching [[appendClusters]]' contract.
-    // Uniformity is what makes a takedown written under quiesce AFTER
-    // the stream has produced output take effect on resume — the
-    // pre-review shape replayed the prior output unfiltered, so a
-    // mid-stream takedown silently never happened (the failure class
-    // this round's Hadoop-FS work targets: wrong answers, no error).
-    // With a takedown set disjoint from the streamed batches (any
-    // standing-only takedown — the registered fixture's shape) the
-    // final output still EQUALS the single-shot
-    // append-with-tombstones over all batches: the filters touch the
-    // same standing terms identically in both forms, and prior-batch
-    // terms pass through untouched. Oracle-gated: the registered
-    // cumulative-tombstone probe shares
-    // [[dedupClustersTombstoneProbeSql]] VERBATIM.
-    val tombstones: Option[DataFrame] =
-      Core.resolveTombstones(spark, s"$artifactsRoot/tombstones", tombstoneTable,
-        "doc_id", memo)
-        .map(_.withColumnRenamed("tomb_id", "doc_id"))
-    def dropTombstoned(df: DataFrame): DataFrame = tombstones match {
-      case Some(t) => df.join(broadcast(t), Seq("doc_id"), "left_anti")
-      case None => df
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    StreamingPipeline.probeStream(docs, outDir, checkpoint) { (batch, _, memo) =>
+      Components.appendClusters(spark, clusterTerms, batch, artifactsRoot, memo = memo)
     }
-    val (batchBands, release) = minhashBands(batch)
-    def crossWith(keyed: DataFrame): DataFrame =
-      keyed.select(col("doc_id").as("idx_id"), col("band"), col("bkey"))
-        .join(batchBands.select(col("doc_id").as("new_id"), col("band"), col("bkey")),
-          Seq("band", "bkey"))
-        .filter(col("idx_id") =!= col("new_id"))
-        .select(least(col("idx_id"), col("new_id")).as("doc_a"),
-          greatest(col("idx_id"), col("new_id")).as("doc_b"))
-    try {
-      // ONE state-dir listing answers both per-batch existence checks
-      // (r18, VERDICT r17 #3 — the embed twin's rationale): bands +
-      // clusters previously cost one recursive walk each per uncached
-      // batch. Same memoization contract per child (permanent negative
-      // cache, noteWritten flips entries — identical qualified keys).
-      val stateTables = memo.tablesExistUnder(spark, stateDir,
-        Seq("bands", "clusters"))
-      // State reads: committed-data existence via the Hadoop FS API
-      // (r15, VERDICT r14 #3 — java.io.File is local-only; a false
-      // `exists` on HDFS/S3 would silently drop prior-batch state,
-      // breaking the convergence invariant with no error; and a batch
-      // that died MID-state-write leaves a _temporary-only dir whose
-      // bare existence would crash every replay at plan time —
-      // Core.tableExists reads both as absent), and `batch_id` cast to
-      // long IMMEDIATELY on read (r15, VERDICT r14 #1): it is a
-      // parquet PARTITION column, and partition-type inference reads
-      // the values 0,1,2… back as IntegerType, so an un-cast
-      // `.getLong` on its max threw ClassCastException on every batch
-      // after the first. The cast is a partition-column-only
-      // predicate input, so partition pruning still evaluates it over
-      // the in-memory partition spec — no data files are touched for
-      // the batch_id filters.
-      // The three eager-constructing edge terms are INDEPENDENT (r18,
-      // VERDICT r17 #3, guide §2.6): the cross probes each run a
-      // bounded collect at construction (the size-gated key pushdown)
-      // and the prior-output term runs the max-batch_id lookup —
-      // previously serial driver round-trips, now overlapped on fresh
-      // threads (Thread.join gives the happens-before edge for the
-      // plain vars; Core.inParallel joins all, first failure rethrows).
-      var crossStanding: DataFrame = null
-      var crossPrior: Option[DataFrame] = None
-      var priorOut: Option[DataFrame] = None
-      Core.inParallel[Unit](Seq(
-        "text-cross-standing" -> (() => {
-          crossStanding = crossWith(dropTombstoned(pruneIndexByProbedKeys(
-            spark.read.parquet(s"$artifactsRoot/bandidx"), batchBands, "bkey",
-            maxKeyLiterals)))
-        }),
-        "text-cross-prior" -> (() => {
-          crossPrior =
-            if (stateTables("bands")) {
-              // prior-batch bands are the cumulative form's standing-like
-              // term: filter them like the standing index, so no new
-              // candidate can match a doc tombstoned after it streamed
-              val prior = dropTombstoned(spark.read.parquet(s"$stateDir/bands")
-                .filter(col("batch_id").cast("long") < batchId)
-                .select("doc_id", "band", "bkey"))
-              Some(crossWith(pruneIndexByProbedKeys(prior, batchBands, "bkey",
-                maxKeyLiterals)))
-            } else None
-        }),
-        "text-prior-out" -> (() => {
-          priorOut =
-            if (stateTables("clusters")) {
-              val prior = spark.read.parquet(s"$stateDir/clusters")
-                .withColumn("batch_id", col("batch_id").cast("long"))
-                .filter(col("batch_id") < batchId)
-              val last = prior.agg(max(col("batch_id"))).first()
-              if (last.isNullAt(0)) None
-              else Some(prior.filter(col("batch_id") === last.getLong(0)).drop("batch_id"))
-            } else None
-        })))
-      // star source: the standing sidecar on the first batch, the
-      // prior cumulative output afterwards — BOTH through the uniform
-      // delete semantics (exclusion + live-hub re-election), so a
-      // takedown written under quiesce mid-stream takes effect on the
-      // replayed structure too
-      val star = Components.starEdges(
-        priorOut.getOrElse(spark.read.parquet(s"$artifactsRoot/clusters")),
-        "doc_id", "doc_a", "doc_b", tombstones)
-      val within = candidatePairsOver(batchBands)
-      val edges = crossPrior.foldLeft(crossStanding.union(within).union(star))(_ union _)
-      val out = Components.clusterPairs(edges.distinct(), "doc_a", "doc_b", "doc_id")
-      // persist this batch's state idempotently (own partitions only):
-      // its band table for future batches' cross edges, and its cluster
-      // table as the next batch's star source. DELIBERATELY not
-      // range-laid: unlike the standing index (one build, many
-      // probes), each batch partition is probed with key sets that are
-      // themselves batch-sized and spread across the keyspace, so
-      // per-batch range files almost always intersect some probed key
-      // (no skip to buy) — while a range write costs a sampler job +
-      // shuffle per micro-batch, pure overhead on the stream's hot
-      // path (r15 A/B attempts at sf0.1 were swamped by host noise,
-      // 6.6-9.4s across identical code; the call rests on the above
-      // asymmetry, which holds at every SF). The accumulated-state
-      // scan term is bounded by [[compactClusterState]] (which DOES
-      // range-lay the fold), not by per-batch layout.
-      // both state writes are independent (disjoint inputs, distinct
-      // dirs) — submit concurrently (guide §2.6; r17, the embed twin's
-      // rationale)
-      val targets = Seq(s"$stateDir/bands", s"$stateDir/clusters")
-      // successes are noted in the memo via the callback BEFORE a
-      // sibling failure rethrows (r18, ADVICE r17): the memo
-      // permanently negative-caches state tables, so a caller reusing
-      // it after surviving the failure must not treat its own on-disk
-      // state as absent
-      graft.streaming.StreamingPipeline.writeBatchIdempotentAll(
-        Seq(batchBands, out).zip(targets), batchId,
-        onWritten = i => memo.noteWritten(spark, targets(i)))
-      out
-    } finally release()
-  }
 
-  /** The streaming wrapper of [[appendClustersCumulative]]: each
-    * micro-batch's (cumulative) cluster table lands idempotently under
-    * its batch_id in `outDir`; the latest partition IS the current
-    * cluster assignment of everything ingested. */
+  /** CUMULATIVE streaming cluster maintenance: as
+    * [[streamingClusterAppend]], but each batch also clusters against
+    * every EARLIER batch, so two near-dup documents arriving in
+    * different micro-batches cluster at once instead of at the next
+    * compaction. Per-stream state under `stateDir` holds every prior
+    * batch's band table (bands/batch_id=K) and the latest emitted
+    * cluster table (clusters/batch_id=K), which replaces the standing
+    * sidecar as the star source. The latest batch_id partition under
+    * `outDir` is the cluster assignment of everything ingested and
+    * equals the full rebuild over standing ∪ all batches (induction,
+    * tombstone and replay arguments on [[Components.appendClusters]]).
+    * State compacts via [[compactClusterState]]. */
   def streamingClusterAppendCumulative(spark: SparkSession, docs: DataFrame,
       artifactsRoot: String, stateDir: String, outDir: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    // one FS memo per STREAM (r16, VERDICT r15 #4): steady state is
-    // ONE existence listing per optional table for the stream's whole
-    // life (tombstones + bands + clusters), not three per micro-batch
-    // — an object-store LIST storm at second-scale cadences. Sound
-    // because tombstones are quiesce-written and the state tables'
-    // only writer is this stream, which notes its own writes.
-    // Asserted by FsMemoSpec against Core.tableListings.
-    val memo = new Core.FsMemo
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val clusters = appendClustersCumulative(
-            spark, batch, batchId, artifactsRoot, stateDir, memo = memo)
-          graft.streaming.StreamingPipeline.writeBatchIdempotent(
-            clusters, batchId, outDir)
-          ()
-        }
-      }
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    StreamingPipeline.probeStream(docs, outDir, checkpoint) { (batch, batchId, memo) =>
+      Components.appendClusters(spark, clusterTerms, batch, artifactsRoot,
+        Some(batchId -> stateDir), memo = memo)
+    }
 
-  /** COMPACTION for the cumulative stream's state (r15, VERDICT r14
-    * #5 — previously documented on [[appendClustersCumulative]],
-    * implemented nowhere): fold the accumulated per-batch state +
-    * the standing artifacts into NEW standing artifacts under
-    * `newRoot`, then truncate `stateDir` — after which a fresh
-    * cumulative (or plain [[streamingClusterAppend]]) stream against
-    * `newRoot` continues exactly where the old one left off.
+  /** COMPACTION for the cumulative stream's state: fold the
+    * accumulated per-batch state + the standing artifacts into NEW
+    * standing artifacts under `newRoot`, then truncate `stateDir`,
+    * after which a fresh cumulative (or plain [[streamingClusterAppend]])
+    * stream against `newRoot` continues exactly where the old one left
+    * off.
     *
-    * The fold is CHEAP BY CONSTRUCTION — it never re-reads or
-    * re-bands any text: the new band index is the union of the
-    * standing index with the accumulated batch band tables (already
-    * persisted, 4 long-rows/doc), re-range-laid on (band, bkey) so
-    * probe pushdown keeps skipping files; the new cluster sidecar IS
-    * the latest cumulative output verbatim, which by the convergence
-    * invariant equals the full rebuild's cluster table. At 100 TB
-    * that is one shuffle over band-key rows (orders below the text)
-    * vs [[writeClusterAppendArtifacts]]' full re-sketch — the full
-    * rebuild remains the path that re-picks banding geometry or
-    * hard-forgets tombstones.
+    * The fold never re-reads or re-bands any text: the new band index
+    * is the standing index ∪ the accumulated batch band tables,
+    * re-range-laid on (band, bkey) so probe pushdown keeps skipping
+    * files; the new cluster sidecar IS the latest cumulative output,
+    * which by the convergence invariant equals the full rebuild's
+    * cluster table. The full rebuild ([[writeClusterAppendArtifacts]])
+    * remains the path that re-picks banding geometry or hard-forgets
+    * tombstones.
     *
     * CONTRACTS enforced fail-fast: the three directories must be
     * pairwise DISTINCT (the fold reads the old index lazily while
-    * writing the new one, and the closing state truncation would
-    * otherwise delete the just-written artifacts or the standing
-    * sidecar itself); the state must be non-empty (an empty fold is a
-    * no-op the caller should skip); and `artifactsRoot` must carry NO
-    * tombstone table — the cheap fold unions the standing band index
-    * VERBATIM, which still holds the tombstoned docs' index rows, and
-    * the fresh root would carry no tombstone table to keep excluding
-    * them: takedowns would silently resurrect. A takedown corpus
-    * compacts through the full rebuild over corpus-minus-tombstones —
-    * which is also the promised hard-forget (this fold never even
-    * reads text, so it could not drop it).
-    * Quiesce any live stream first (static-artifacts contract).
-    * Spec-asserted: a stream split by a mid-stream compaction lands
-    * frame-equal to the uncompacted full-corpus rebuild. */
+    * writing the new one, and the closing truncation would otherwise
+    * delete the just-written artifacts); the state must be non-empty;
+    * and `artifactsRoot` must carry NO tombstone table (the fold
+    * unions the standing index verbatim, tombstoned rows included, and
+    * the fresh root would no longer exclude them). Quiesce any live
+    * stream first. Spec-asserted: a stream split by a mid-stream
+    * compaction lands frame-equal to the uncompacted full-corpus
+    * rebuild. */
   def compactClusterState(spark: SparkSession, artifactsRoot: String,
       stateDir: String, newRoot: String): Unit =
-    // the qual/aliasing/tombstone/promotion/truncation skeleton lives
-    // in Core.compactStateFold, shared with the embed twin (r15
-    // review) — this call contributes only the family's fold table
-    // and its takedown-resurrection message
     Core.compactStateFold(spark, artifactsRoot, stateDir, newRoot,
       Seq(Core.StateFold("bandidx", "bands",
         Seq("doc_id", "band", "bkey"), Seq("band", "bkey"))),
@@ -1808,54 +1488,36 @@ object TextDedup extends QueryModule {
           "(the hard-forget path)")
 
   /** The oracle IS the full-corpus cluster oracle: the star-replacement
-    * argument above makes the incremental result equal the rebuild. */
+    * argument makes the incremental result equal the rebuild. */
   val dedupClustersAppendProbeSql: String = dedupClustersSql
 
-  /** REGISTERED exercise of [[appendClustersCumulative]] under the
-    * driver's oracle gate (r15, VERDICT r14 #2): the even-id corpus is
-    * the standing build (SHARED ProbeTemp kind — the same artifacts
-    * serve the append, tombstone, and cumulative probes), and the odd
-    * batch is split into THREE sub-batches (doc_id % 6 ∈ {1,3,5}) fed
-    * sequentially through the cumulative form with a real stateDir —
-    * batch 2 reads batch 1's band state, batch 3 reads both and
-    * replays batch 2's cluster output as its star source, so every
-    * state path (prior-bands cross, latest-cluster star, idempotent
-    * partition writes) runs under the gate. The returned table is the
-    * LAST batch's output, which the induction invariant claims equals
-    * the full-corpus rebuild — so the oracle is [[dedupClustersSql]]
-    * VERBATIM, and a DuckDB hash match pins the cross-batch merge
-    * semantics end-to-end (TextDedupSpec asserts the % 6 split
-    * genuinely separates same-cluster docs at parity SF, so the gate
-    * is non-vacuous). stateDir is a per-invocation scratch dir (swept
-    * at JVM exit), NEVER memoized: a shared stateDir across two live
-    * invocations would interleave their partitions. QBench cold-JVM
-    * sf0.1: [6.90, 5.87, 4.72]s (r15; pre-gate [8.73, 7.43, 6.61]) —
-    * rep0 carries the shared standing build; steady state is three
-    * sequential per-batch passes (band generation, standing + prior
-    * probes, the size-gated local clustering) plus two state
-    * round-trips per batch — the honest cost of replaying a 3-batch
-    * stream.
+  /** REGISTERED exercise of the cumulative append under the driver's
+    * oracle gate: the shared even-id standing build, and the odd batch
+    * split into THREE sub-batches (doc_id % 6 ∈ {1,3,5}) fed
+    * sequentially with a real stateDir. Batch 2 reads batch 1's band
+    * state, batch 3 reads both and replays batch 2's cluster output as
+    * its star source, so every state path (prior-bands cross,
+    * latest-cluster star, idempotent partition writes) runs under the
+    * gate. The last batch's output equals the full-corpus rebuild by
+    * induction, so the oracle is [[dedupClustersSql]] VERBATIM
+    * (TextDedupSpec asserts the % 6 split separates same-cluster docs
+    * at parity SF, so the gate is non-vacuous). stateDir is a
+    * per-invocation scratch dir, never memoized: two live invocations
+    * sharing one would interleave their partitions.
     *
-    * THREE batches is the minimum, not a convenience (r16, VERDICT
-    * r15 #5): batch 3 (batchId 2) is the only batch whose prior state
-    * spans MULTIPLE batch_id partitions, so it alone exercises (a)
-    * the latest-cluster pick among SEVERAL candidate partitions —
-    * max(batch_id) over one prior batch is trivially that batch, so a
-    * min/union-all/unfiltered-read bug is 2-batch-invisible — and (b)
-    * the band-state read crossing partition-value boundaries (the r14
-    * IntegerType-inference crash fired on exactly this shape). The
-    * 2-batch tombstone composition below gates the delete paths; this
-    * gate owns the multi-partition state induction. */
+    * THREE batches is the minimum: batch 3 is the only batch whose
+    * prior state spans SEVERAL batch_id partitions, so it alone
+    * exercises the latest-cluster pick among several candidates (over
+    * one prior batch a min/union-all/unfiltered-read bug is invisible)
+    * and the band-state read across partition values (where partition
+    * type inference reads batch_id back as int). */
   def dedupClustersCumulativeProbe(spark: SparkSession, dir: String): DataFrame = {
-    val root = ProbeTemp.dir("dedup_clusters_append", dir) { d =>
-      writeClusterAppendArtifacts(spark,
-        Core.documents(spark, dir).filter(col("doc_id") % 2 === 0), d)
-    }
+    val root = standingClusterRoot(spark, dir)
     val stateDir = ProbeTemp.scratch("cclu_state")
     val odd = Core.documents(spark, dir).filter(col("doc_id") % 2 === 1)
     Seq(1, 3, 5).zipWithIndex.map { case (m, i) =>
-      appendClustersCumulative(spark,
-        odd.filter(col("doc_id") % 6 === m), i.toLong, root, stateDir)
+      Components.appendClusters(spark, clusterTerms,
+        odd.filter(col("doc_id") % 6 === m), root, Some(i.toLong -> stateDir))
     }.last
   }
 
@@ -1864,38 +1526,28 @@ object TextDedup extends QueryModule {
   val dedupClustersCumulativeProbeSql: String = dedupClustersSql
 
   /** REGISTERED composition of the cumulative stream with the DELETE
-    * path (r15) — the last cell of the lifecycle matrix: standing
-    * even-id artifacts (shared build), every doc_id % 10 = 4
-    * tombstoned (the tombstone probe's exact fixture), and the odd
-    * half fed as TWO sequential sub-batches — doc_id % 4 ∈ {1,3},
-    * which PARTITIONS the odd ids completely, so the ingested corpus
-    * is identical to the single-shot tombstone probe's. Two batches
-    * exercise every tombstone-relevant path (batch-1 standing
-    * re-election, batch-2 state replay + filtered standing cross);
-    * the deeper batch induction is gated tombstone-free. The takedown
-    * table is passed explicitly per batch (immutable shared artifacts,
-    * the production shape). Because tombstones only change the
-    * STANDING terms — identically in the cumulative and single-shot
-    * forms — the final output equals [[dedupClustersTombstoneProbe]]
-    * and the oracle is [[dedupClustersTombstoneProbeSql]] VERBATIM:
-    * one DuckDB hash match pins exclusion, re-election, AND the
-    * cross-batch merge. Hash-green at sf0.01 (48 rows) and sf0.1
-    * (703 rows). QBench cold-JVM sf0.1: [6.16, 3.87, 3.70]s (r15;
-    * pre-gate [9.19, 5.84, 5.61]) — rep0 carries the shared standing
-    * build; steady state is two per-batch passes (size-gated local
-    * clustering) plus state round-trips. */
+    * path: the shared even-id standing build, every doc_id % 10 = 4
+    * tombstoned (the tombstone probe's fixture), and the odd half fed
+    * as TWO sub-batches (doc_id % 4 ∈ {1,3}, a complete partition of
+    * the odd ids, so the ingested corpus is the single-shot tombstone
+    * probe's). Two batches exercise every tombstone-relevant path
+    * (batch-1 standing re-election, batch-2 state replay + filtered
+    * standing cross); the deeper induction is gated tombstone-free.
+    * The takedown table is passed explicitly per batch (immutable
+    * shared artifacts). Tombstones only change the STANDING terms,
+    * identically in both forms, so the final output equals
+    * [[dedupClustersTombstoneProbe]] and the oracle is
+    * [[dedupClustersTombstoneProbeSql]] VERBATIM: one DuckDB hash
+    * match pins exclusion, re-election AND the cross-batch merge. */
   def dedupClustersCumulativeTombstoneProbe(spark: SparkSession, dir: String): DataFrame = {
-    val root = ProbeTemp.dir("dedup_clusters_append", dir) { d =>
-      writeClusterAppendArtifacts(spark,
-        Core.documents(spark, dir).filter(col("doc_id") % 2 === 0), d)
-    }
+    val root = standingClusterRoot(spark, dir)
     val stateDir = ProbeTemp.scratch("cclu_tomb_state")
     val docs = Core.documents(spark, dir)
     val tomb = Some(docs.filter(col("doc_id") % 10 === 4).select("doc_id"))
     val odd = docs.filter(col("doc_id") % 2 === 1)
     Seq(1, 3).zipWithIndex.map { case (m, i) =>
-      appendClustersCumulative(spark, odd.filter(col("doc_id") % 4 === m),
-        i.toLong, root, stateDir, tombstoneTable = tomb)
+      Components.appendClusters(spark, clusterTerms, odd.filter(col("doc_id") % 4 === m),
+        root, Some(i.toLong -> stateDir), tombstoneTable = tomb)
     }.last
   }
 
@@ -1904,39 +1556,28 @@ object TextDedup extends QueryModule {
   def dedupClustersCumulativeTombstoneProbeSql: String =
     dedupClustersTombstoneProbeSql
 
-  /** REGISTERED exercise of the tombstone DELETE path (r14) under the
-    * driver's oracle gate: the standing (even-id) corpus's artifacts
-    * are built, every doc with doc_id % 10 = 4 is tombstoned (a
-    * deterministic slice of the standing corpus — some of them sit
-    * inside standing clusters, including as hubs, so the star filter
-    * and hub re-election genuinely run; spec-asserted non-vacuous),
-    * and the odd-id batch is appended. The DuckDB oracle replicates
-    * the DOCUMENTED append-with-tombstones semantics — not a rebuild:
-    * even-side components (recursive CTE #1) -> live members minus
-    * tombstones -> re-elected hubs -> star edges, unioned with the
-    * banded cross (batch x live index) and within-batch candidate
-    * edges, then full components (recursive CTE #2). A hash match
-    * therefore pins the eventual-consistency contract itself —
-    * exclusion, no-new-matches, hub re-election, AND the documented
-    * bridge-preservation behavior — through the parquet round-trip,
-    * the same way `dedup_clusters_append_probe` pins the
-    * star-replacement equivalence. Both oracles derive their band
-    * keys from [[minhashBandsCte]], so the engines can never band
-    * differently. The probe SHARES the append probe's standing
-    * artifacts (same ProbeTemp kind — one build serves both, the
-    * production shape: a takedown list is data evaluated against the
-    * standing snapshot, not a rebuild trigger), passing the tombstone
-    * table explicitly so the shared artifacts stay untouched; the
-    * parquet tombstone round-trip itself is spec-covered via
-    * [[writeClusterTombstones]]. */
+  /** REGISTERED exercise of the tombstone DELETE path under the
+    * driver's oracle gate: the shared even-id standing build, every
+    * doc_id % 10 = 4 tombstoned (a deterministic standing slice, some
+    * of it inside clusters and as hubs, so the star filter and hub
+    * re-election genuinely run; spec-asserted non-vacuous), and the
+    * odd-id batch appended. The DuckDB oracle replicates the
+    * DOCUMENTED append-with-tombstones semantics, not a rebuild:
+    * even-side components (recursive CTE #1) -> live members ->
+    * re-elected hubs -> star edges, unioned with the banded cross
+    * (batch x live index) and within-batch edges, then full components
+    * (recursive CTE #2). A hash match therefore pins exclusion,
+    * no-new-matches, hub re-election AND the bridge-preservation
+    * behavior through the parquet round-trip. Both oracles derive
+    * their band keys from [[minhashBandsCte]], so the engines can
+    * never band differently. The tombstone table is passed explicitly
+    * so the shared artifacts stay untouched; the parquet tombstone
+    * round-trip is spec-covered via [[writeClusterTombstones]]. */
   def dedupClustersTombstoneProbe(spark: SparkSession, dir: String): DataFrame = {
-    val root = ProbeTemp.dir("dedup_clusters_append", dir) { d =>
-      writeClusterAppendArtifacts(spark,
-        Core.documents(spark, dir).filter(col("doc_id") % 2 === 0), d)
-    }
+    val root = standingClusterRoot(spark, dir)
     val docs = Core.documents(spark, dir)
-    appendClusters(spark, docs.filter(col("doc_id") % 2 === 1), root,
-      tombstoneTable = Some(docs.filter(col("doc_id") % 10 === 4).select("doc_id")))
+    Components.appendClusters(spark, clusterTerms, docs.filter(col("doc_id") % 2 === 1),
+      root, tombstoneTable = Some(docs.filter(col("doc_id") % 10 === 4).select("doc_id")))
   }
 
   val dedupClustersTombstoneProbeSql: String =
@@ -2162,7 +1803,7 @@ object TextDedup extends QueryModule {
     * must stop vouching for it). EVENTUAL-CONSISTENCY CONTRACT: the
     * index stores only (digest, keeper), never the non-keeper members
     * of a digest group, so exclusion cannot RE-ELECT a surviving
-    * member the way the cluster sidecar does ([[appendClusters]]) —
+    * member the way the cluster sidecar does ([[Components.appendClusters]]) —
     * a digest whose keeper is tombstoned vanishes from the index
     * entirely, even if unremoved duplicates of it remain in the
     * corpus, until the next rebuild over the live corpus re-derives
@@ -2228,21 +1869,10 @@ object TextDedup extends QueryModule {
     * batch reproduces identical verdicts. */
   def streamingDedupProbe(spark: SparkSession, incoming: DataFrame,
       indexDir: String, outDir: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    // per-stream FS memo, same rationale as streamingSimhashProbe
-    val memo = new Core.FsMemo
-    incoming.writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val verdicts = probeDedupIndex(spark, batch, indexDir, memo = memo)
-          graft.streaming.StreamingPipeline.writeBatchIdempotent(verdicts, batchId, outDir)
-          ()
-        }
-      }
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    StreamingPipeline.probeStream(incoming, outDir, checkpoint) { (batch, _, memo) =>
+      probeDedupIndex(spark, batch, indexDir, memo = memo)
+    }
 
   /** REGISTERED end-to-end exercise of the persisted exact-dedup index
     * under the driver's oracle gate (VERDICT r7 #4) — the cross-run

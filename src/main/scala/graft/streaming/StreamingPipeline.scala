@@ -891,67 +891,60 @@ object StreamingPipeline {
       true
     }
 
-  /** INDEPENDENT per-batch state writes submitted concurrently (r17
-    * optimization round, guide §2.6 "overlap independent jobs"): the
-    * cumulative cluster appends persist 2-3 state tables per
-    * micro-batch whose inputs are disjoint (cached batch projections +
-    * the eagerly-computed cluster output) and whose targets are
-    * distinct directories — run serially, each write's commit/FS tail
-    * leaves the cores idle while the next waits. Spark's scheduler
-    * runs jobs from several driver threads FIFO, back-filling the
-    * tail. Each write keeps [[writeBatchIdempotent]]'s exact per-table
-    * semantics (empty-skip + dynamic partition overwrite), and targets
+  /** The probe-stream shape shared by every stream that probes or
+    * appends against persisted artifacts: per micro-batch, skip an
+    * empty batch, else run `probe(batch, batchId, memo)` and land its
+    * result idempotently under the batch_id partition
+    * ([[writeBatchIdempotent]]), so a replayed batch rewrites only its
+    * own directory. `memo` is ONE [[graft.ops.Core.FsMemo]] per stream:
+    * tombstone sidecars are written only under quiesce and a stream's
+    * state tables have the stream as their only writer, so steady state
+    * is one existence listing per optional table for the stream's life
+    * instead of one per micro-batch (FsMemoSpec counts them). */
+  private[graft] def probeStream(incoming: DataFrame, outDir: String, checkpoint: String)(
+      probe: (DataFrame, Long, graft.ops.Core.FsMemo) => DataFrame)
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    val memo = new graft.ops.Core.FsMemo
+    incoming.writeStream
+      .option("checkpointLocation", checkpoint)
+      .outputMode("append")
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        if (!batch.isEmpty) {
+          writeBatchIdempotent(probe(batch, batchId, memo), batchId, outDir)
+          ()
+        }
+      }
+      .start()
+  }
+
+  /** INDEPENDENT per-batch state writes submitted concurrently through
+    * [[graft.ops.Core.inParallel]] (its threading contract: fresh
+    * threads inheriting the caller's job group, every writer joined
+    * before anything propagates). Each write keeps
+    * [[writeBatchIdempotent]]'s exact per-table semantics, and targets
     * are required distinct (two threads overwriting one dir would race
     * the commit protocol). Returns written-flags in input order.
     *
-    * Threading contract (r17 review — two findings): the writes run on
-    * FRESH threads spawned by the CALLING thread, never a shared
-    * global pool — Spark's job group / local properties live in an
-    * InheritableThreadLocal captured at thread CREATION, so pool
-    * workers created under some earlier stream would run this stream's
-    * writes under the wrong job group (a StreamingQuery.stop() could
-    * then cancel another stream's half-finished state write, or fail
-    * to cancel its own). And ALL threads are joined before any failure
-    * propagates: a fail-fast rethrow would return control to the
-    * stream with sibling writers still committing, so a replay of the
-    * same batch could race an orphaned first-attempt overwrite of the
-    * same state dir — the exact double-writer hazard the
-    * duplicate-target require() exists to prevent.
-    *
-    * `onWritten(i)` fires (on the calling thread, post-join) for every
-    * write that SUCCEEDED with data, BEFORE any sibling failure
-    * rethrows (r18, ADVICE r17): callers holding a per-stream FsMemo
-    * note each successful write there — the old sequential form noted
-    * each success immediately, and skipping the notes on a sibling
-    * failure would leave the memo permanently negative-caching state
-    * tables that ARE on disk if the caller survives the rethrow. */
+    * `onWritten(i)` fires (on the calling thread, after the join) for
+    * every write that SUCCEEDED with data, BEFORE the first failure
+    * (in input order) rethrows: callers holding a per-stream FsMemo
+    * note each write there, and a skipped note would leave the memo
+    * negative-caching state tables that ARE on disk. The writer tasks
+    * return a `Try` catching Throwable, so every outcome is seen. */
   def writeBatchIdempotentAll(writes: Seq[(DataFrame, String)],
       batchId: Long, onWritten: Int => Unit = _ => ()): Seq[Boolean] = {
     require(writes.map(_._2).distinct.size == writes.size,
       "writeBatchIdempotentAll: duplicate target dirs — concurrent " +
         "overwrites of one directory race the commit protocol")
-    // pre-filled with a sentinel Failure AND the runnable catches
-    // Throwable (r18, ADVICE r17): scala.util.Try catches only
-    // NonFatal, so a fatal writer error (OOM, interrupt during stream
-    // shutdown) previously left results(i) null and the .get below
-    // threw an NPE that MASKED the real failure
-    val results = Array.fill[scala.util.Try[Boolean]](writes.size)(
-      scala.util.Failure(new IllegalStateException(
-        "writeBatchIdempotentAll: writer thread never reported a result")))
-    val threads = writes.zipWithIndex.map { case ((df, dir), i) =>
-      val t = new Thread(() => {
-        results(i) =
-          try scala.util.Success(writeBatchIdempotent(df, batchId, dir))
-          catch { case t: Throwable => scala.util.Failure(t) }
-      }, s"graft-batch-write-$batchId-$i")
-      t.start()
-      t
-    }
-    threads.foreach(_.join()) // every writer finished before anything propagates
+    val results = graft.ops.Core.inParallel(writes.zipWithIndex.map { case ((df, dir), i) =>
+      s"batch-write-$batchId-$i" -> (() =>
+        try scala.util.Success(writeBatchIdempotent(df, batchId, dir))
+        catch { case t: Throwable => scala.util.Failure(t) })
+    })
     results.zipWithIndex.foreach {
       case (scala.util.Success(true), i) => onWritten(i)
       case _ => ()
     }
-    results.toSeq.map(_.get)  // first failure (in input order) rethrows
+    results.map(_.get)
   }
 }

@@ -56,12 +56,12 @@ object CumulMeasure {
     (1 to 2).foreach { rep =>
       val stateDir = java.nio.file.Files.createTempDirectory(s"cm_state$rep").toString
       phase(s"rep${rep}_batch1") {
-        ops.Similarity.appendEmbedClustersCumulative(spark,
-          odd.filter(col("vec_id") % 4 === 1), 0L, root, stateDir).count()
+        ops.Components.appendClusters(spark, ops.Similarity.clusterTerms,
+          odd.filter(col("vec_id") % 4 === 1), root, Some(0L -> stateDir)).count()
       }
       phase(s"rep${rep}_batch2") {
-        ops.Similarity.appendEmbedClustersCumulative(spark,
-          odd.filter(col("vec_id") % 4 === 3), 1L, root, stateDir).count()
+        ops.Components.appendClusters(spark, ops.Similarity.clusterTerms,
+          odd.filter(col("vec_id") % 4 === 3), root, Some(1L -> stateDir)).count()
       }
     }
     spark.stop()

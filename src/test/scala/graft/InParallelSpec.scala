@@ -65,4 +65,31 @@ class InParallelSpec extends AnyFunSuite {
       "job-c" -> (() => spark.range(3000).selectExpr("sum(id)").head().getLong(0))))
     assert(sums == Seq(499500L, 1999000L, 4498500L))
   }
+
+  test("an interrupted caller still joins every sibling, then keeps its interrupt flag") {
+    // returning on the interrupt would leave siblings running against
+    // live state (the join-all contract); swallowing it would hide the
+    // caller's shutdown request
+    val finished = new java.util.concurrent.atomic.AtomicInteger(0)
+    val started = new java.util.concurrent.CountDownLatch(2)
+    @volatile var finishedAtReturn = -1
+    @volatile var flagAtReturn = false
+    @volatile var thrown: Throwable = null
+    val caller = new Thread(() => {
+      try graft.ops.Core.inParallel[Unit](Seq(
+        "a" -> (() => { started.countDown(); Thread.sleep(300); finished.incrementAndGet(); () }),
+        "b" -> (() => { started.countDown(); Thread.sleep(400); finished.incrementAndGet(); () })))
+      catch { case t: Throwable => thrown = t }
+      finishedAtReturn = finished.get()
+      flagAtReturn = Thread.currentThread().isInterrupted
+    })
+    caller.start()
+    started.await()
+    caller.interrupt()
+    caller.join(10000)
+    assert(!caller.isAlive, "the caller never returned")
+    assert(thrown == null, s"the interrupt must not abort the join: $thrown")
+    assert(finishedAtReturn == 2, s"returned with ${2 - finishedAtReturn} sibling(s) still running")
+    assert(flagAtReturn, "the caller's interrupt flag must be re-asserted after the join")
+  }
 }

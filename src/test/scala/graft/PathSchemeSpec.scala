@@ -14,6 +14,22 @@ class MockSchemeFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("mockfs:///")
 }
 
+/** A local filesystem whose `listStatus` throws FileNotFoundException
+  * for the paths in [[VanishingListFs.vanished]]: a directory deleted
+  * (by a compaction or cleanup) between an existence check and its
+  * listing. Public no-arg class: Hadoop instantiates it by reflection. */
+class VanishingListFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("vanishfs:///")
+  override def listStatus(p: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] =
+    if (VanishingListFs.vanished.contains(p.toUri.getPath))
+      throw new java.io.FileNotFoundException(s"$p vanished")
+    else super.listStatus(p)
+}
+
+object VanishingListFs {
+  @volatile var vanished: Set[String] = Set.empty
+}
+
 /** Pins the Hadoop-FS existence idiom on a non-`file:` scheme (r15,
   * VERDICT r14 #3's "done" criterion): the r14 tombstone/state checks
   * regressed to java.io.File.exists, which answers FALSE for every
@@ -116,5 +132,27 @@ class PathSchemeSpec extends SparkSpec {
       assert(graft.ops.Core.tableExists(spark, state),
         "data files under partition dirs must count as committed data")
     }
+  }
+
+  test("existence gates read a directory that vanishes mid-listing as absent") {
+    spark.sparkContext.hadoopConfiguration.set(
+      "fs.vanishfs.impl", classOf[VanishingListFs].getName)
+    val base = java.nio.file.Files.createTempDirectory("graft_vanish").toString
+    spark.range(0, 4).select(col("id").as("doc_id"), lit(0L).as("batch_id"))
+      .write.partitionBy("batch_id").parquet(s"$base/state/bands")
+    spark.range(0, 4).write.parquet(s"$base/state/clusters")
+    val state = s"vanishfs://$base/state"
+    assert(graft.ops.Core.tableExists(spark, s"$state/bands"), "precondition: committed data")
+    try {
+      // a partition dir deleted under the walk: that table reads as absent
+      VanishingListFs.vanished = Set(s"$base/state/bands/batch_id=0")
+      assert(!graft.ops.Core.tableExists(spark, s"$state/bands"))
+      assert(graft.ops.Core.tablesExistUnder(spark, state, Seq("bands", "clusters")) ==
+        Map("bands" -> false, "clusters" -> true))
+      // the parent itself deleted after its existence check: all absent
+      VanishingListFs.vanished = Set(s"$base/state")
+      assert(graft.ops.Core.tablesExistUnder(spark, state, Seq("bands", "clusters")) ==
+        Map("bands" -> false, "clusters" -> false))
+    } finally VanishingListFs.vanished = Set.empty
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.Similarity
+import graft.ops.{Components, Similarity}
 
 class SimilaritySpec extends SparkSpec {
   import spark.implicits._
@@ -445,6 +445,28 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
+  test("ivf index append rejects NULL vec_ids, one or several") {
+    // a NULL id is invisible to min/max/count(vec_id)/count_distinct, so
+    // without the row count it passed the codebook-range and duplicate
+    // guards and landed an unaddressable vector
+    val idxDir = java.nio.file.Files.createTempDirectory("graft_ivfnull").toString + "/idx"
+    Similarity.writeIvfIndex(spark, sf0001, idxDir)
+    val emb = graft.ops.Core.embeddings(spark, sf0001)
+    val fresh = emb.filter($"vec_id" % 7 === 3).limit(2)
+      .select(($"vec_id" + 500000L).as("vec_id"), $"embedding", $"label")
+    val nullRow = emb.limit(1)
+      .select(lit(null).cast("long").as("vec_id"), $"embedding", $"label")
+    Seq("one NULL" -> fresh.unionAll(nullRow),
+        "two NULLs" -> fresh.unionAll(nullRow).unionAll(nullRow)).foreach { case (name, batch) =>
+      val e = intercept[IllegalArgumentException] {
+        Similarity.appendToIvfIndex(spark, batch, idxDir)
+      }
+      assert(e.getMessage.contains("NULL"), s"$name: ${e.getMessage}")
+    }
+    assert(spark.read.parquet(idxDir)
+      .filter($"vec_id".isNull || $"vec_id" >= 500000L).isEmpty, "a rejected batch landed rows")
+  }
+
   test("knn label propagation: full coverage, bounded votes, vote matches a recount") {
     val out = Similarity.knnLabelPropagation(spark, sf0001).cache()
     val emb = graft.ops.Core.embeddings(spark, sf0001)
@@ -573,7 +595,7 @@ class SimilaritySpec extends SparkSpec {
     Similarity.writeEmbedClusterTombstones(spark, Seq(2L).toDF("vec_id"), root)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long, Long, Boolean)].collect().sorted.toSeq
-    val appended = rows(Similarity.appendEmbedClusters(spark, batch, root))
+    val appended = rows(Components.appendClusters(spark, Similarity.clusterTerms, batch, root))
     assert(!appended.exists(_._1 == 2L), "tombstoned vector leaked into the output")
     // clique minus one member stays connected: append must equal the
     // rebuild over the live corpus ({4,6} ∪ batch) from scratch
@@ -596,7 +618,7 @@ class SimilaritySpec extends SparkSpec {
     assert(spark.read.parquet(s"$root/tombstones")
         .as[Long].collect().toSet == Set(2L, 4L),
       "re-tombstoning an id must not change the takedown set")
-    val after = rows(Similarity.appendEmbedClusters(spark, batch, root))
+    val after = rows(Components.appendClusters(spark, Similarity.clusterTerms, batch, root))
     assert(after.map(_._1).toSet == Set(6L, 7L) && after.forall(_._2 == 6L),
       s"both takedown calls' ids must stay excluded (got $after)")
   }
@@ -643,12 +665,12 @@ class SimilaritySpec extends SparkSpec {
     val odd = vecs.filter($"vec_id" % 2 === 1)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long, Long, Boolean)].collect().sorted.toSeq
-    Similarity.appendEmbedClustersCumulative(spark,
-      odd.filter($"vec_id" % 4 === 1), 0L, root, state, tombstoneTable = tomb)
-    val cumulative = rows(Similarity.appendEmbedClustersCumulative(spark,
-      odd.filter($"vec_id" % 4 === 3), 1L, root, state, tombstoneTable = tomb))
+    Components.appendClusters(spark, Similarity.clusterTerms,
+      odd.filter($"vec_id" % 4 === 1), root, Some(0L -> state), tombstoneTable = tomb)
+    val cumulative = rows(Components.appendClusters(spark, Similarity.clusterTerms,
+      odd.filter($"vec_id" % 4 === 3), root, Some(1L -> state), tombstoneTable = tomb))
     val singleShot = rows(
-      Similarity.appendEmbedClusters(spark, odd, root, tombstoneTable = tomb))
+      Components.appendClusters(spark, Similarity.clusterTerms, odd, root, tombstoneTable = tomb))
     assert(cumulative == singleShot,
       s"embed cumulative+tombstones diverged from the single-shot form " +
         s"(${cumulative.size} vs ${singleShot.size} rows)")
@@ -681,8 +703,8 @@ class SimilaritySpec extends SparkSpec {
     val standing = Seq((2L, alt(1)), (4L, alt(2))).toDF("vec_id", "embedding")
     val root = java.nio.file.Files.createTempDirectory("graft_eselfpair").toString
     Similarity.writeEmbedClusterAppendArtifacts(spark, standing, root)
-    val out = Similarity.appendEmbedClusters(
-        spark, standing.filter($"vec_id" === 2L), root)
+    val out = Components.appendClusters(
+        spark, Similarity.clusterTerms, standing.filter($"vec_id" === 2L), root)
       .as[(Long, Long, Long, Boolean)].collect().toSeq
     assert(out.isEmpty,
       s"re-ingesting an unmatched standing vector must not fabricate a cluster: $out")
@@ -707,8 +729,8 @@ class SimilaritySpec extends SparkSpec {
     Similarity.writeEmbedClusterAppendArtifacts(spark, standing, root)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long, Long, Boolean)].collect().sorted.toSeq
-    val first = rows(Similarity.appendEmbedClustersCumulative(
-      spark, batch, 0L, root, state))
+    val first = rows(Components.appendClusters(
+      spark, Similarity.clusterTerms, batch, root, Some(0L -> state)))
     // tear: bands survived, vecs did not
     def sweep(p: java.nio.file.Path): Unit = {
       if (java.nio.file.Files.isDirectory(p))
@@ -717,8 +739,8 @@ class SimilaritySpec extends SparkSpec {
     }
     sweep(java.nio.file.Paths.get(s"$state/vecs"))
     assert(!graft.ops.Core.pathExists(spark, s"$state/vecs"))
-    val replayed = rows(Similarity.appendEmbedClustersCumulative(
-      spark, batch, 0L, root, state))
+    val replayed = rows(Components.appendClusters(
+      spark, Similarity.clusterTerms, batch, root, Some(0L -> state)))
     assert(replayed == first,
       s"torn-state replay must reproduce the original batch output")
     // and the replay healed the state: both tables exist again

@@ -1091,7 +1091,8 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
     val got = spark.read.parquet(outDir).drop("batch_id")
     def appendOf(rows: Seq[(Long, String)]) =
-      graft.ops.TextDedup.appendClusters(spark, rows.toDF("doc_id", "text"), root)
+      graft.ops.Components.appendClusters(spark, graft.ops.TextDedup.clusterTerms,
+        rows.toDF("doc_id", "text"), root)
     val expect = appendOf(b1).unionByName(appendOf(b2))
     assert(got.count() == expect.count() && got.count() > 0)
     assert(got.exceptAll(expect).isEmpty && expect.exceptAll(got).isEmpty,
@@ -1161,7 +1162,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("cumulative append replay: same batch re-run rewrites only itself, stream still converges") {
-    // r15: pins appendClustersCumulative's documented replay contract —
+    // pins the cumulative append's documented replay contract —
     // foreachBatch re-delivers a failed micro-batch with the SAME
     // batchId, so the function must (a) read exactly the state it read
     // the first time (the batch_id < N filter), (b) emit the identical
@@ -1182,17 +1183,20 @@ class StreamingSpec extends SparkSpec {
       spark.read.parquet(s"$state/$sub")
         .select($"batch_id".cast("long")).distinct()
         .as[Long].collect().sorted.toSeq
-    graft.ops.TextDedup.appendClustersCumulative(
-      spark, odd.filter($"doc_id" % 6 === 1), 0L, root, state)
-    val out1 = snap(graft.ops.TextDedup.appendClustersCumulative(
-      spark, odd.filter($"doc_id" % 6 === 3), 1L, root, state))
+    graft.ops.Components.appendClusters(
+      spark, graft.ops.TextDedup.clusterTerms, odd.filter($"doc_id" % 6 === 1), root,
+        Some(0L -> state))
+    val out1 = snap(graft.ops.Components.appendClusters(
+      spark, graft.ops.TextDedup.clusterTerms, odd.filter($"doc_id" % 6 === 3), root,
+        Some(1L -> state)))
     val bands1 = spark.read.parquet(s"$state/bands")
       .filter($"batch_id".cast("long") === 0L)
       .select($"doc_id", $"band", $"bkey")
       .as[(Long, Int, Long)].collect().sorted.toSeq
     // the failure replay: same batchId, same data
-    val out1r = snap(graft.ops.TextDedup.appendClustersCumulative(
-      spark, odd.filter($"doc_id" % 6 === 3), 1L, root, state))
+    val out1r = snap(graft.ops.Components.appendClusters(
+      spark, graft.ops.TextDedup.clusterTerms, odd.filter($"doc_id" % 6 === 3), root,
+        Some(1L -> state)))
     assert(out1r == out1, "replayed batch must emit the identical cluster table")
     assert(stateBatches("bands") == Seq(0L, 1L) && stateBatches("clusters") == Seq(0L, 1L),
       "replay must not add state partitions")
@@ -1202,8 +1206,9 @@ class StreamingSpec extends SparkSpec {
         .as[(Long, Int, Long)].collect().sorted.toSeq == bands1,
       "replay must leave other batches' state untouched")
     // the stream continues past the replay to the full-corpus fixpoint
-    val got = snap(graft.ops.TextDedup.appendClustersCumulative(
-      spark, odd.filter($"doc_id" % 6 === 5), 2L, root, state))
+    val got = snap(graft.ops.Components.appendClusters(
+      spark, graft.ops.TextDedup.clusterTerms, odd.filter($"doc_id" % 6 === 5), root,
+        Some(2L -> state)))
     val full = snap(graft.ops.TextDedup.dedupClustersDirect(spark, sf0001))
     assert(got == full,
       s"stream after a mid-stream replay diverged from the rebuild (${got.size} vs ${full.size})")
@@ -1402,7 +1407,7 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
     val got = spark.read.parquet(outDir).drop("batch_id")
     def appendOf(rows: Seq[(Long, Seq[Float])]) =
-      graft.ops.Similarity.appendEmbedClusters(spark,
+      graft.ops.Components.appendClusters(spark, graft.ops.Similarity.clusterTerms,
         rows.toDF("vec_id", "embedding"), root)
     val expect = appendOf(b1).unionByName(appendOf(b2))
     assert(got.count() == expect.count() && got.count() > 0)

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.TextDedup
+import graft.ops.{Components, TextDedup}
 
 class TextDedupSpec extends SparkSpec {
   import spark.implicits._
@@ -489,8 +489,9 @@ class TextDedupSpec extends SparkSpec {
     TextDedup.writeClusterAppendArtifacts(spark, even, root)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long, Long, Boolean)].collect().sorted.toSeq
-    val literal = rows(TextDedup.appendClusters(spark, odd, root))
-    val semi = rows(TextDedup.appendClusters(spark, odd, root, maxKeyLiterals = 0))
+    val literal = rows(Components.appendClusters(spark, TextDedup.clusterTerms, odd, root))
+    val semi = rows(Components.appendClusters(spark, TextDedup.clusterTerms, odd, root,
+      maxKeyLiterals = 0))
     assert(semi == literal,
       s"semi-join fallback diverged from the literal path (${semi.size} vs ${literal.size} rows)")
     assert(literal.nonEmpty, "gate fixture produced no clusters — vacuous")
@@ -522,7 +523,7 @@ class TextDedupSpec extends SparkSpec {
     TextDedup.writeClusterAppendArtifacts(spark, even, root)
     assert(TextDedup.minhashSigPlan(even).storageLevel == StorageLevel.NONE,
       "standing-corpus sketch cache leaked past the artifact write")
-    val out = TextDedup.appendClusters(spark, odd, root)
+    val out = Components.appendClusters(spark, TextDedup.clusterTerms, odd, root)
     assert(TextDedup.minhashSigPlan(odd).storageLevel == StorageLevel.NONE,
       "batch sketch cache leaked past the append probe")
     assert(out.count() > 0, "result frame must stay usable after release (checkpoint-rooted)")
@@ -562,7 +563,7 @@ class TextDedupSpec extends SparkSpec {
     TextDedup.writeClusterTombstones(spark, Seq(2L).toDF("doc_id"), root)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long, Long, Boolean)].collect().sorted.toSeq
-    val appended = rows(TextDedup.appendClusters(spark, batch, root))
+    val appended = rows(Components.appendClusters(spark, TextDedup.clusterTerms, batch, root))
     // exclusion: the tombstoned doc appears in no output row, even
     // though batch doc 7 is byte-identical to its text (its index rows
     // must not match)
@@ -599,7 +600,7 @@ class TextDedupSpec extends SparkSpec {
     assert(spark.read.parquet(s"$root/tombstones")
         .as[Long].collect().toSet == Set(2L, 4L),
       "second takedown call must accumulate onto the first, not replace it")
-    val appended = TextDedup.appendClusters(spark, batch, root)
+    val appended = Components.appendClusters(spark, TextDedup.clusterTerms, batch, root)
       .as[(Long, Long, Long, Boolean)].collect().sorted.toSeq
     assert(appended.map(_._1).toSet == Set(6L, 7L),
       s"both takedown calls' ids must stay excluded (got $appended)")
@@ -626,14 +627,14 @@ class TextDedupSpec extends SparkSpec {
         s"$root/tombstones/_temporary/0/_temporary/attempt_0/part-00000"),
       Array[Byte](0))
     // must neither crash at plan time nor exclude anything
-    val out = TextDedup.appendClusters(spark, batch, root)
+    val out = Components.appendClusters(spark, TextDedup.clusterTerms, batch, root)
       .as[(Long, Long, Long, Boolean)].collect().sorted.toSeq
     assert(out.map(_._1).toSet == Set(2L, 4L, 7L),
       s"a torn takedown write must read as no-takedowns (got $out)")
     // the RETRIED takedown lands beside the stale _temporary (append
     // mode never touches it) and takes effect
     TextDedup.writeClusterTombstones(spark, Seq(2L).toDF("doc_id"), root)
-    val after = TextDedup.appendClusters(spark, batch, root)
+    val after = Components.appendClusters(spark, TextDedup.clusterTerms, batch, root)
       .as[(Long, Long, Long, Boolean)].collect().sorted.toSeq
     assert(after.map(_._1).toSet == Set(4L, 7L),
       "the committed retry must exclude beside the stale _temporary")
@@ -642,7 +643,8 @@ class TextDedupSpec extends SparkSpec {
     // state as absent and land equal to the single-shot form
     val state = java.nio.file.Files.createTempDirectory("graft_torn_state").toString
     new java.io.File(s"$state/bands/_temporary/0/_temporary").mkdirs()
-    val cumul = TextDedup.appendClustersCumulative(spark, batch, 0L, root, state)
+    val cumul = Components.appendClusters(spark, TextDedup.clusterTerms, batch, root,
+      Some(0L -> state))
       .as[(Long, Long, Long, Boolean)].collect().sorted.toSeq
     assert(cumul == after,
       "a torn first state write must replay like a clean first batch")
@@ -653,7 +655,7 @@ class TextDedupSpec extends SparkSpec {
     // the STANDING terms (index filter + first-batch sidecar
     // re-election) — identically in the cumulative and single-shot
     // forms — so streaming the batches through the stateful form must
-    // land frame-equal to appendClusters over their union, with the
+    // land frame-equal to the single-shot append over their union, with the
     // deleted doc excluded everywhere. The tombstone table is read
     // from the ROOT here (the default path), pinning the Hadoop-FS
     // read; batch 2 exercises the state-star replay and the filtered
@@ -671,10 +673,11 @@ class TextDedupSpec extends SparkSpec {
     TextDedup.writeClusterTombstones(spark, Seq(2L).toDF("doc_id"), root)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long, Long, Boolean)].collect().sorted.toSeq
-    TextDedup.appendClustersCumulative(spark, b1, 0L, root, state)
+    Components.appendClusters(spark, TextDedup.clusterTerms, b1, root, Some(0L -> state))
     val cumulative = rows(
-      TextDedup.appendClustersCumulative(spark, b2, 1L, root, state))
-    val singleShot = rows(TextDedup.appendClusters(spark, b1.union(b2), root))
+      Components.appendClusters(spark, TextDedup.clusterTerms, b2, root, Some(1L -> state)))
+    val singleShot = rows(Components.appendClusters(spark, TextDedup.clusterTerms,
+      b1.union(b2), root))
     assert(cumulative == singleShot,
       s"cumulative+tombstones diverged from the single-shot form " +
         s"($cumulative vs $singleShot)")
@@ -730,7 +733,8 @@ class TextDedupSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val root = java.nio.file.Files.createTempDirectory("graft_selfpair").toString
     TextDedup.writeClusterAppendArtifacts(spark, standing, root)
-    val out = TextDedup.appendClusters(spark, standing.filter($"doc_id" === 2L), root)
+    val out = Components.appendClusters(spark, TextDedup.clusterTerms,
+      standing.filter($"doc_id" === 2L), root)
       .as[(Long, Long, Long, Boolean)].collect().toSeq
     assert(out.isEmpty,
       s"re-ingesting an unmatched standing doc must not fabricate a cluster: $out")
@@ -756,13 +760,13 @@ class TextDedupSpec extends SparkSpec {
       df.as[(Long, Long, Long, Boolean)].collect().sorted.toSeq
     // batch 0 streams BEFORE any takedown: doc 3 joins {2,4,6}, and
     // doc 2 enters the cumulative output (as the hub)
-    val out0 = rows(TextDedup.appendClustersCumulative(
-      spark, Seq((3L, t1)).toDF("doc_id", "text"), 0L, root, state))
+    val out0 = rows(Components.appendClusters(
+      spark, TextDedup.clusterTerms, Seq((3L, t1)).toDF("doc_id", "text"), root, Some(0L -> state)))
     assert(out0.exists(r => r._1 == 2L && r._4), "precondition: 2 hubs batch 0's output")
     // quiesce, take down doc 2, resume
     TextDedup.writeClusterTombstones(spark, Seq(2L).toDF("doc_id"), root)
-    val out1 = rows(TextDedup.appendClustersCumulative(
-      spark, Seq((5L, t1)).toDF("doc_id", "text"), 1L, root, state))
+    val out1 = rows(Components.appendClusters(
+      spark, TextDedup.clusterTerms, Seq((5L, t1)).toDF("doc_id", "text"), root, Some(1L -> state)))
     assert(!out1.exists(_._1 == 2L),
       s"tombstoned doc persisted through the prior-output replay: $out1")
     assert(out1.filter(_._2 == 3L).map(_._1).toSet == Set(3L, 4L, 5L, 6L),
