@@ -333,7 +333,8 @@ object Components {
   }
 
   /** Star edges replaying a (idCol, cluster_id, ...) cluster table.
-    * With a takedown set, tombstoned members are excluded and each
+    * With a takedown set (resolved `tomb_id`s), tombstoned members are
+    * excluded and each
     * cluster's hub re-elects to its minimum LIVE member, so a deleted
     * hub doesn't anchor its old cluster. Without tombstones the hub IS
     * cluster_id (the min member) and the replay is a plain filter. */
@@ -343,7 +344,7 @@ object Components {
       table.filter(col(idCol) =!= col("cluster_id"))
         .select(col("cluster_id").as(outA), col(idCol).as(outB))
     case Some(t) =>
-      val live = table.join(broadcast(t), Seq(idCol), "left_anti")
+      val live = IndexStore.live(table, Some(t), idCol)
       live.join(
           live.groupBy("cluster_id").agg(min(col(idCol)).as("hub")), "cluster_id")
         .filter(col(idCol) =!= col("hub"))
@@ -435,12 +436,9 @@ object Components {
     val t = family(batch, maxKeyLiterals)
     val id = t.idCol
     try {
-      val tombstones = Core.resolveTombstones(spark, s"$root/tombstones",
-        tombstoneTable, id, memo).map(_.withColumnRenamed("tomb_id", id))
-      def dropTombstoned(df: DataFrame): DataFrame = tombstones match {
-        case Some(tb) => df.join(broadcast(tb), Seq(id), "left_anti")
-        case None => df
-      }
+      val tombstones = IndexStore.resolveTombstones(spark,
+        IndexStore.clusterTombstones(root), tombstoneTable, id, memo)
+      def dropTombstoned(df: DataFrame): DataFrame = IndexStore.live(df, tombstones, id)
       def prune(keyed: DataFrame): DataFrame =
         TextDedup.pruneIndexByProbedKeys(keyed, t.keys, t.probeKey, maxKeyLiterals)
       val stateTables = ("bands" -> t.keys) +: t.sidecars

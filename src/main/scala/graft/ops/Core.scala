@@ -264,16 +264,15 @@ object Core {
       results.toSeq.map(_.get)
     }
 
-  /** Calls between re-listings of a memoized-ABSENT path in [[FsMemo]]
-    * (r17, ADVICE r16): permanent negative caching made a FIRST
-    * tombstone write against a live stream — a contract violation,
-    * but specifically a takedown/deletion path, the one class of
-    * out-of-band write an operator may legitimately need to land
-    * without a stream restart — invisible for the stream's whole
-    * life, asymmetric with appends to an EXISTING sidecar (seen at
-    * next plan time). Re-listing absent entries every N-th hit bounds
-    * the staleness to N micro-batches while keeping the listing rate
-    * at 1/N per table per batch — still no metadata storm. The
+  /** Calls between re-listings of a memoized-ABSENT path in [[FsMemo]].
+    * Permanent negative caching would make a FIRST tombstone write
+    * against a live stream — a takedown, the one class of out-of-band
+    * write an operator may legitimately need to land without a stream
+    * restart — invisible for the stream's whole life, asymmetric with
+    * appends to an EXISTING sidecar (seen at next plan time).
+    * Re-listing absent entries every N-th hit bounds the staleness to N
+    * micro-batches while keeping the listing rate at 1/N per table per
+    * batch — still no metadata storm. The
     * re-list is OPT-IN per call (`relistAbsent`) and only the
     * tombstone resolution path opts in; see the [[FsMemo]] scaladoc
     * for why state tables must stay permanently negative-cached.
@@ -283,7 +282,7 @@ object Core {
   private[graft] val absentRelistEvery = 16
 
   /** Per-STREAM memo of optional-table existence on the micro-batch
-    * hot path (r16, VERDICT r15 #4): [[tableExists]] walks the target
+    * hot path: [[tableExists]] walks the target
     * directory recursively, which is free on a local FS but is a LIST
     * request per table per micro-batch on an object store — at
     * second-scale trigger cadences, a metadata storm that grows with
@@ -296,19 +295,19 @@ object Core {
     * stream, so steady state is one listing per (table, stream) for
     * the run — plus, for callers that OPT IN via `relistAbsent`, one
     * re-list of a still-ABSENT table every [[absentRelistEvery]]-th
-    * hit (r17, ADVICE r16), so a mid-stream first tombstone write
-    * takes effect within N batches instead of never. Only
-    * [[resolveTombstones]] opts in: a takedown sidecar is the one
+    * hit, so a mid-stream first tombstone write takes effect within N
+    * batches instead of never. Only [[IndexStore.resolveTombstones]]
+    * opts in: a takedown sidecar is the one
     * out-of-band write with a legitimate reason to land against a
     * live stream. State tables (bands/vecs/clusters) stay permanently
     * negative-cached — a table appearing behind the stream's back
     * there is a RULE BREAKER (a second writer), and adopting it as
     * prior state at some arbitrary later batch would silently fold
-    * foreign data into the stream's output (r17 review). FsMemoSpec
+    * foreign data into the stream's output. FsMemoSpec
     * asserts both bounds against [[tableListings]].
     *
     * BATCH paths intentionally take the fresh-memo default, i.e.
-    * re-list once per call (r17, VERDICT r16 #5): a batch invocation
+    * re-list once per call: a batch invocation
     * plans once and must see the disk truth of that moment — there is
     * no cadence to storm and no stream lifetime to carry staleness
     * across, so caching across batch calls would widen the staleness
@@ -318,7 +317,7 @@ object Core {
     private val known = scala.collection.concurrent.TrieMap.empty[String, Boolean]
     // hits since the last real listing, per memoized-absent key
     private val absentHits = scala.collection.concurrent.TrieMap.empty[String, Int]
-    // keys are QUALIFIED paths (r16 review): raw strings would let two
+    // keys are QUALIFIED paths: raw strings would let two
     // aliased spellings of one directory memoize independently, so a
     // noteWritten on one spelling could leave a stale "absent" under
     // the other — the alias class qualifiedPath exists to close
@@ -331,7 +330,7 @@ object Core {
         case Some(false) =>
           val hits = absentHits.getOrElse(k, 0) + 1
           if (hits < absentRelistEvery) { absentHits.put(k, hits); false }
-          else { // periodic re-list of a negative entry (ADVICE r16)
+          else { // periodic re-list of a negative entry
             val v = Core.tableExists(spark, path)
             known.put(k, v)
             if (v) absentHits.remove(k) else absentHits.put(k, 0)
@@ -343,9 +342,9 @@ object Core {
           v
       }
     }
-    /** FUSED memoized existence for sibling state tables (r18, VERDICT
-      * r17 #3): answer every child from the memo when possible; any
-      * children still unknown are resolved with ONE parent listing
+    /** FUSED memoized existence for sibling state tables: answer every
+      * child from the memo when possible; any children still unknown
+      * are resolved with ONE parent listing
       * ([[Core.tablesExistUnder]]) instead of one walk each. State
       * tables stay permanently negative-cached (the single-writer
       * contract — see the class scaladoc), exactly like the per-table
@@ -384,14 +383,14 @@ object Core {
       cols: Seq[String], rangeCols: Seq[String])
 
   /** A path's fully-qualified form under its own FileSystem — the
-    * ONLY sound basis for directory-aliasing guards (r15 review): raw
+    * ONLY sound basis for directory-aliasing guards: raw
     * string compares let trivially aliased spellings (trailing slash,
     * //, ./, an explicit file: scheme) slip past and hit exactly the
     * self-overwrite / live-truncation hazards the guards exist to
     * stop. */
   private[ops] def qualifiedPath(spark: SparkSession, p: String): String = {
     val hp = new org.apache.hadoop.fs.Path(p)
-    // URI-normalize AFTER qualification (r15 review): Hadoop Path
+    // URI-normalize AFTER qualification: Hadoop Path
     // collapses '//', './' and trailing slashes but deliberately keeps
     // '..' segments, so "/a/x/../idx" would compare unequal to
     // "/a/idx" and slip past both the equality and the containment
@@ -400,97 +399,8 @@ object Core {
       .makeQualified(hp).toUri.normalize().toString
   }
 
-  /** Tombstone resolution SHARED by every row-keyed index probe (r15
-    * review — previously six hand-copies of the orElse/read/cast
-    * logic): UNION an explicitly-passed takedown table with the
-    * artifact's committed tombstone sidecar, normalized to one long
-    * `tomb_id` column. Union, not override — the explicit-table
-    * parameter exists so an ad-hoc takedown list can be evaluated
-    * against an immutable artifact snapshot, and letting it silently
-    * DISABLE the committed sidecar would resurrect every
-    * previously-committed takedown for that probe: exactly the
-    * 'resurrect' class the merge guards fail fast on, from the
-    * parameter that looks most innocent. Committed-data existence
-    * gate, not bare existence (torn write == never started). */
-  private[ops] def resolveTombstones(spark: SparkSession, sidecarPath: String,
-      explicitTable: Option[DataFrame], idCol: String,
-      memo: FsMemo = new FsMemo): Option[DataFrame] = {
-    val sidecar =
-      // relistAbsent: a FIRST takedown sidecar landed against a live
-      // stream must take effect within absentRelistEvery batches —
-      // the one opt-in to the memo's periodic re-list (r17 review)
-      if (memo.tableExists(spark, sidecarPath, relistAbsent = true))
-        Some(spark.read.parquet(sidecarPath))
-      else None
-    def ids(df: DataFrame) =
-      df.select(idColumn(df, idCol).cast("long").as("tomb_id"))
-    (explicitTable.map(ids), sidecar.map(ids)) match {
-      case (Some(e), Some(s)) => Some(e.unionByName(s).distinct())
-      case (e, s) => e.orElse(s).map(_.distinct())
-    }
-  }
-
-  /** The id column of a takedown table, BY NAME when the family's id
-    * column is present (r16, ADVICE r15): the previous positional
-    * columns.head silently tombstoned values from the WRONG column
-    * when a caller passed a multi-column frame whose id was not
-    * first. A single-column frame of any name still resolves (the
-    * ad-hoc `SELECT some_ids` shape); anything else fails analysis
-    * loudly instead of deleting the wrong rows. */
-  private[ops] def idColumn(df: DataFrame, idCol: String): Column =
-    if (df.columns.contains(idCol)) col(idCol)
-    else {
-      require(df.columns.length == 1,
-        s"takedown table carries columns [${df.columns.mkString(", ")}] — " +
-          s"none named $idCol and not single-column, so the id choice " +
-          "would be positional guesswork; select the id column explicitly")
-      col(df.columns.head)
-    }
-
-  /** Directory-disjointness guard for index compactions and merges
-    * (r15 review): refuses equality AND containment in either
-    * direction, on qualified paths. Equality truncates a lazily-read
-    * source mid-scan; a target nested INSIDE the live dir plants a
-    * non-hidden data subdir that breaks every later scan of it
-    * (conflicting directory structures under a flat or partitioned
-    * layout); a source nested under the target is clobbered by the
-    * target's overwrite. */
-  private[ops] def requireDisjointDirs(spark: SparkSession, src: String,
-      dest: String, what: String): Unit = {
-    val (qs, qd) = (qualifiedPath(spark, src), qualifiedPath(spark, dest))
-    require(qd != qs,
-      s"$what must write to a fresh dir: the live filter reads the old " +
-        "index lazily while writing the new one — an in-place overwrite " +
-        "would truncate its own source mid-scan")
-    require(!qd.startsWith(qs + "/") && !qs.startsWith(qd + "/"),
-      s"$what: target $dest nests with source $src — writing into a live " +
-        "index dir plants a data subdir that breaks every later scan of " +
-        "it, and a source under the target is clobbered by the overwrite")
-  }
-
-  /** Pairwise disjointness over a merge's INPUT list (r16, ADVICE
-    * r15): the per-input guards check each source against the output,
-    * but a caller listing an index dir together with one of its own
-    * subdirectories (or listing the same dir twice under aliased
-    * spellings) would silently double-count every row of the overlap
-    * in the merged result — wrong counts with no error, on qualified
-    * paths so dot-dot/scheme spellings can't slip past. */
-  private[ops] def requirePairwiseDisjoint(spark: SparkSession,
-      dirs: Seq[String], what: String): Unit = {
-    val q = dirs.map(d => d -> qualifiedPath(spark, d))
-    for (i <- q.indices; j <- q.indices if i < j) {
-      val ((ra, qa), (rb, qb)) = (q(i), q(j))
-      require(qa != qb && !qa.startsWith(qb + "/") && !qb.startsWith(qa + "/"),
-        s"$what: inputs $ra and $rb alias or nest — the union would " +
-          "double-count every row of the overlap in the merged output")
-    }
-  }
-
   /** The compaction skeleton SHARED by the text and embed cumulative
-    * folds (r15 review — previously two ~40-line hand-copies of the
-    * qual/aliasing/tombstone/promotion/truncation logic, exactly the
-    * drift shape that turned Components.starEdges' four copies into a
-    * real takedown bug): qualify and alias-guard the three
+    * folds: qualify and alias-guard the three
     * directories, refuse a tombstoned root (per-family message — the
     * families resurrect different data), require committed state,
     * union each standing table with its accumulated state twin
@@ -501,17 +411,15 @@ object Core {
   private[ops] def compactStateFold(spark: SparkSession, artifactsRoot: String,
       stateDir: String, newRoot: String, folds: Seq[StateFold],
       tombstoneMsg: String): Unit = {
-    // equality AND nesting refused among all three dirs (r15 review —
-    // previously equality-only, unlike the index compactions): a
-    // newRoot nested inside the standing root plants artifact subdirs
-    // INSIDE a live table dir mid-scan; a newRoot under stateDir is
-    // deleted by the closing truncation; a stateDir nested with the
-    // root lets the truncation eat standing artifacts
-    requireDisjointDirs(spark, artifactsRoot, newRoot, "state compaction")
-    requireDisjointDirs(spark, stateDir, newRoot, "state compaction")
-    requireDisjointDirs(spark, artifactsRoot, stateDir, "state compaction")
-    require(!tableExists(spark, s"$artifactsRoot/tombstones"), tombstoneMsg)
-    // the clusters state is OPTIONAL (r15 review): a cumulative stream
+    // equality AND nesting refused among all three dirs: a newRoot
+    // nested inside the standing root plants artifact subdirs INSIDE a
+    // live table dir mid-scan; a newRoot under stateDir is deleted by
+    // the closing truncation; a stateDir nested with the root lets the
+    // truncation eat standing artifacts
+    Seq(artifactsRoot -> newRoot, stateDir -> newRoot, artifactsRoot -> stateDir)
+      .foreach { case (a, b) => IndexStore.requireDisjointDirs(spark, a, b, "state compaction") }
+    require(!tableExists(spark, IndexStore.clusterTombstones(artifactsRoot)), tombstoneMsg)
+    // the clusters state is OPTIONAL: a cumulative stream
     // over batches that never formed a single cluster writes bands
     // (and vecs) state every batch but NO clusters table — its state
     // still needs the fold path, else it grows forever uncompactable
@@ -519,14 +427,10 @@ object Core {
       s"$stateDir holds no cumulative state (${folds.map(_.state).mkString(" + ")}): " +
         "nothing to fold")
     folds.foreach { f =>
-      val rc = f.rangeCols.map(col)
-      spark.read.parquet(s"$artifactsRoot/${f.standing}")
-        .select(f.cols.map(col): _*)
-        .union(spark.read.parquet(s"$stateDir/${f.state}")
-          .select(f.cols.map(col): _*))
-        .repartitionByRange(rc: _*)
-        .sortWithinPartitions(rc: _*)
-        .write.mode("overwrite").parquet(s"$newRoot/${f.standing}")
+      IndexStore.rangeLaid(f.rangeCols: _*)(
+        spark.read.parquet(s"$artifactsRoot/${f.standing}").select(f.cols.map(col): _*)
+          .union(spark.read.parquet(s"$stateDir/${f.state}").select(f.cols.map(col): _*)))
+        .mode("overwrite").parquet(s"$newRoot/${f.standing}")
     }
     if (tableExists(spark, s"$stateDir/clusters")) {
       // promote the LATEST batch's cumulative cluster table verbatim

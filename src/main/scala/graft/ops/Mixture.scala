@@ -321,8 +321,8 @@ object Mixture extends QueryModule {
     * (kind='chars', key=bucket), language counts (kind='lang',
     * key=lang), and the corpus total (kind='total') — a few dozen
     * rows regardless of corpus size, so every probe broadcasts it.
-    * DELETE posture (r15, contrast the row-keyed indexes'
-    * tombstone sidecars): the baseline AGGREGATES counts over
+    * DELETE posture (contrast the row-keyed indexes' tombstone
+    * sidecars): the baseline AGGREGATES counts over
     * documents, so a per-doc takedown has no stored counts to
     * subtract — forgetting a document means rebuilding (or
     * re-merging per-slice baselines without the affected slice);
@@ -339,9 +339,14 @@ object Mixture extends QueryModule {
       .select(lit("lang").as("kind"), col("lang").as("key"), col("n"))
     val t = docs.agg(count(lit(1)).as("n"))
       .select(lit("total").as("kind"), lit("").as("key"), col("n"))
-    b.unionByName(l).unionByName(t).coalesce(1)
-      .write.mode("overwrite").parquet(outDir)
+    IndexStore.write(driftLayout, b.unionByName(l).unionByName(t), outDir)
   }
+
+  /** The drift baseline layout: (kind, key, n) count rows in one file.
+    * Every kind is a plain count, so a merge sums per (kind, key). */
+  private[ops] val driftLayout = IndexStore.Layout(Seq("kind", "key", "n"),
+    writer = _.coalesce(1).write,
+    fold = _.groupBy("kind", "key").agg(sum(col("n")).as("n")))
 
   /** MERGE persisted drift baselines over DISJOINT corpus slices — all
     * three kinds (char buckets, language counts, the total) are plain
@@ -349,20 +354,8 @@ object Mixture extends QueryModule {
     * baseline (spec-asserted). Same disjointness contract as
     * [[mergeVocabIndexes]]. */
   def mergeDriftBaselines(spark: SparkSession, baselineDirs: Seq[String],
-      outDir: String): Unit = {
-    require(baselineDirs.nonEmpty, "mergeDriftBaselines: need at least one baseline")
-    // same directory guards as the index merges (r16, ADVICE r15):
-    // counts double on an aliased/nested input, and an outDir aliasing
-    // an input would truncate a lazily-read source mid-scan
-    baselineDirs.foreach(d =>
-      Core.requireDisjointDirs(spark, d, outDir, "mergeDriftBaselines"))
-    Core.requirePairwiseDisjoint(spark, baselineDirs, "mergeDriftBaselines")
-    baselineDirs.map(d => spark.read.parquet(d).select(col("kind"), col("key"), col("n")))
-      .reduce(_ unionByName _)
-      .groupBy("kind", "key").agg(sum(col("n")).as("n"))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(outDir)
-  }
+      outDir: String): Unit =
+    IndexStore.merge(spark, driftLayout, baselineDirs, outDir, "mergeDriftBaselines")
 
   /** Probe a NEW batch of documents against the persisted baseline:
     * per batch source, the total-variation distance of its char-bucket
@@ -381,7 +374,7 @@ object Mixture extends QueryModule {
     * probe cost is the batch's, not the corpus's. */
   def probeDriftBaseline(spark: SparkSession, batch: DataFrame,
       baselineDir: String): DataFrame = {
-    val base = spark.read.parquet(baselineDir)
+    val base = IndexStore.read(spark, driftLayout, baselineDir)
     val nTotal = base.filter(col("kind") === "total")
       .select(col("n")).head().getLong(0)
     val baseKeys = base.filter(col("kind") =!= "total")
@@ -433,24 +426,12 @@ object Mixture extends QueryModule {
     * [[sourceDrift]] parity rule) with the baseline derived from a
     * flat union of the slices: counts are additive over disjoint
     * slices, and the hash match proves it through the parquet
-    * round-trip. QBench cold-JVM sf0.1 (quiet box): [2.009, 0.656]s;
-    * rep2 probe-only. */
+    * round-trip. */
   def driftBaselineMergeProbe(spark: SparkSession, dir: String): DataFrame = {
     val docs = Core.documents(spark, dir)
-    val root = ProbeTemp.dir("drift_baseline_merged", dir) { d =>
-      // the three slice builds are INDEPENDENT (disjoint doc_id slices,
-      // distinct target dirs) — each is a minimal count-shuffle whose
-      // commit tail previously serialized end to end; overlap them on
-      // fresh threads (r18, VERDICT r17 #5, guide §2.6). The merge
-      // depends on all three and stays after the join-all.
-      val slices = (0 to 2).map(r => r -> s"$d/slice$r")
-      Core.inParallel[Unit](slices.map { case (r, sliceDir) =>
-        s"drift-slice$r" -> (() =>
-          writeDriftBaselineFrom(docs.filter(col("doc_id") % 4 === r), sliceDir))
-      })
-      mergeDriftBaselines(spark, slices.map(_._2), s"$d/merged")
-    }
-    probeDriftBaseline(spark, docs.filter(col("doc_id") % 4 === 3), s"$root/merged")
+    val merged = IndexStore.mergedSlices("drift_baseline_merged", dir, docs)(
+      writeDriftBaselineFrom)(mergeDriftBaselines(spark, _, _))
+    probeDriftBaseline(spark, docs.filter(col("doc_id") % 4 === 3), merged)
   }
 
   val driftBaselineMergeProbeSql: String = {
@@ -533,7 +514,7 @@ object Mixture extends QueryModule {
     * streaming operator. */
   def probeMixtureGate(spark: SparkSession, batch: DataFrame,
       baselineDir: String): DataFrame = {
-    val langs = spark.read.parquet(baselineDir)
+    val langs = IndexStore.read(spark, driftLayout, baselineDir)
       .filter(col("kind") === "lang")
       .select(col("key").as("lang"), col("n").as("n_lang"))
     val minc = langs.agg(min(col("n_lang")).as("n_min"))
@@ -567,11 +548,10 @@ object Mixture extends QueryModule {
     * pattern, TextDedup.dedupIndexProbe): publish the baseline from the
     * even-doc_id half of the corpus, gate the odd half against it —
     * genuinely cross-batch rates, round-tripped through the parquet
-    * baseline. QBench cold-JVM sf0.1: [1.038, 0.901]s. */
+    * baseline. */
   def mixtureGateProbe(spark: SparkSession, dir: String): DataFrame = {
     val docs = Core.documents(spark, dir)
-    val baseDir = ProbeTemp.dir("mixture_gate", dir)(d =>
-      writeDriftBaselineFrom(docs.filter(col("doc_id") % 2 === 0), d))
+    val baseDir = IndexStore.evenHalf("mixture_gate", dir, docs)(writeDriftBaselineFrom)
     probeMixtureGate(spark, docs.filter(col("doc_id") % 2 === 1), baseDir)
   }
 
@@ -601,7 +581,7 @@ object Mixture extends QueryModule {
     * vocabulary that curation settled on. One distinct-token shuffle
     * (map-side partial counts) at build time; vocabulary is sublinear
     * in corpus size (Heaps' law), so the index is orders of magnitude
-    * smaller than the corpus it summarizes. DELETE posture (r15):
+    * smaller than the corpus it summarizes. DELETE posture:
     * document frequencies are aggregates — a per-doc takedown has no
     * stored counts to subtract, so forgetting means rebuilding (or
     * re-merging per-slice indexes without the affected slice); there
@@ -611,13 +591,17 @@ object Mixture extends QueryModule {
     writeVocabIndexFrom(Core.documents(spark, dir), outDir)
 
   private[graft] def writeVocabIndexFrom(docs: DataFrame, outDir: String): Unit =
-    // deliberately NOT spreadNarrowScan'd (r17 — measured, then
-    // reverted): the distinct() + count shuffles dominate; fanning the
-    // token explode regressed the 3-slice merge probe ~2x
-    docs.select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
-      .distinct() // per-doc dedup first, so df is a true DOCUMENT frequency
-      .groupBy("tok").agg(count(lit(1)).as("df"))
-      .write.mode("overwrite").parquet(outDir)
+    // deliberately NOT spreadNarrowScan'd: the distinct() + count
+    // shuffles dominate, so fanning the token explode only adds one
+    IndexStore.write(vocabLayout,
+      docs.select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
+        .distinct() // per-doc dedup first, so df is a true DOCUMENT frequency
+        .groupBy("tok").agg(count(lit(1)).as("df")), outDir)
+
+  /** The vocabulary index layout: one (tok, df) row per distinct
+    * token. Document frequencies over disjoint slices sum. */
+  private[ops] val vocabLayout = IndexStore.Layout(Seq("tok", "df"),
+    fold = _.groupBy("tok").agg(sum(col("df")).as("df")))
 
   /** MERGE persisted vocabulary indexes — the incremental rebuild for
     * the vocab family (the [[TextDedup.mergeDedupIndexes]] lifecycle):
@@ -629,17 +613,8 @@ object Mixture extends QueryModule {
     * slice double-counts its df mass, the same contract a COUNT
     * sketch merge carries. */
   def mergeVocabIndexes(spark: SparkSession, indexDirs: Seq[String],
-      outDir: String): Unit = {
-    require(indexDirs.nonEmpty, "mergeVocabIndexes: need at least one index")
-    // df mass doubles on an aliased/nested input (r16, ADVICE r15)
-    indexDirs.foreach(d =>
-      Core.requireDisjointDirs(spark, d, outDir, "mergeVocabIndexes"))
-    Core.requirePairwiseDisjoint(spark, indexDirs, "mergeVocabIndexes")
-    indexDirs.map(d => spark.read.parquet(d).select(col("tok"), col("df")))
-      .reduce(_ unionByName _)
-      .groupBy("tok").agg(sum(col("df")).as("df"))
-      .write.mode("overwrite").parquet(outDir)
-  }
+      outDir: String): Unit =
+    IndexStore.merge(spark, vocabLayout, indexDirs, outDir, "mergeVocabIndexes")
 
   /** Probe a batch against the persisted vocabulary: per batch source,
     * total token occurrences, distinct types, the types/occurrences the
@@ -657,7 +632,7 @@ object Mixture extends QueryModule {
     * join shuffle-free on the index side. */
   def probeVocabIndex(spark: SparkSession, batch: DataFrame,
       indexDir: String): DataFrame = {
-    val idx = spark.read.parquet(indexDir).select(col("tok"), lit(1).as("known"))
+    val idx = IndexStore.read(spark, vocabLayout, indexDir).select(col("tok"), lit(1).as("known"))
     batch.select(col("source"), explode(split(col("text"), " ")).as("tok"))
       .groupBy(col("source"), col("tok")).agg(count(lit(1)).as("n_occ"))
       .join(idx, Seq("tok"), "left")
@@ -685,11 +660,10 @@ object Mixture extends QueryModule {
 
   /** Registered cross-batch form under the hash gate (the index-probe
     * pattern): vocabulary from the even-doc_id half, odd half probed
-    * against it. QBench cold-JVM sf0.1: [0.749, 0.678]s. */
+    * against it. */
   def vocabNoveltyProbe(spark: SparkSession, dir: String): DataFrame = {
     val docs = Core.documents(spark, dir)
-    val idxDir = ProbeTemp.dir("vocab_index", dir)(d =>
-      writeVocabIndexFrom(docs.filter(col("doc_id") % 2 === 0), d))
+    val idxDir = IndexStore.evenHalf("vocab_index", dir, docs)(writeVocabIndexFrom)
     probeVocabIndex(spark, docs.filter(col("doc_id") % 2 === 1), idxDir)
   }
 
@@ -729,21 +703,12 @@ object Mixture extends QueryModule {
     * merged index. The oracle computes the same novelty report over a
     * flat union of the slices — a hash match proves summing per-slice
     * document frequencies equals a full rebuild (disjoint slices, so
-    * df is additive), through the parquet round-trip. QBench cold-JVM
-    * sf0.1 (quiet box): [1.817, 0.323]s; rep2 probe-only. */
+    * df is additive), through the parquet round-trip. */
   def vocabMergeProbe(spark: SparkSession, dir: String): DataFrame = {
     val docs = Core.documents(spark, dir)
-    val root = ProbeTemp.dir("vocab_index_merged", dir) { d =>
-      // independent slice builds overlapped (r18, guide §2.6) — see
-      // TextDedup.simhashIndexMergeProbe's note
-      val slices = (0 to 2).map(r => r -> s"$d/slice$r")
-      Core.inParallel[Unit](slices.map { case (r, sliceDir) =>
-        s"vocab-slice$r" -> (() =>
-          writeVocabIndexFrom(docs.filter(col("doc_id") % 4 === r), sliceDir))
-      })
-      mergeVocabIndexes(spark, slices.map(_._2), s"$d/merged")
-    }
-    probeVocabIndex(spark, docs.filter(col("doc_id") % 4 === 3), s"$root/merged")
+    val merged = IndexStore.mergedSlices("vocab_index_merged", dir, docs)(
+      writeVocabIndexFrom)(mergeVocabIndexes(spark, _, _))
+    probeVocabIndex(spark, docs.filter(col("doc_id") % 4 === 3), merged)
   }
 
   val vocabMergeProbeSql: String =

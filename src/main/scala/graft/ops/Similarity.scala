@@ -1023,13 +1023,12 @@ object Similarity extends QueryModule {
   def appendToIvfIndex(spark: SparkSession, batch: DataFrame,
       indexDir: String): Unit = {
     val cells = readIvfCells(spark, indexDir)
-    val seedRows = readIvfSeeds(spark, indexDir)
-    require(seedRows.nonEmpty,
-      s"appendToIvfIndex: no codebook seeds recorded in $indexDir")
+    val codebook = ivfCodebook(spark, indexDir)
     val idsPath = s"$indexDir/_graft_ids"
-    val hIdsPath = new org.apache.hadoop.fs.Path(idsPath)
-    val fs = hIdsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hIdsPath))
+    // committed-data gate, not bare existence: a materialisation that
+    // died mid-write leaves only `_temporary/`, and that torn sidecar
+    // must be rebuilt, not read (its schema cannot be inferred)
+    if (!Core.tableExists(spark, idsPath))
       writeIdSidecar(spark.read.parquet(indexDir).select(col("vec_id")),
         idsPath, overwrite = true)
     // The batch guards, fused into ONE aggregation pass:
@@ -1057,32 +1056,25 @@ object Similarity extends QueryModule {
         s"appendToIvfIndex: batch carries vec_ids inside the codebook range [0, $cells)")
       require(stats.getLong(2) == stats.getLong(3),
         "appendToIvfIndex: batch carries duplicate vec_ids")
-      // the index-side uniqueness contract (ADVICE r8): a batch row
-      // reusing a vec_id already in the index would append a second
-      // vector under that id, and probes would return duplicate/
-      // ambiguous neighbor ids for it. Checked against the SORTED id
-      // sidecar, pre-filtered to the batch's id range so parquet
-      // min/max stats prune the scan (r9 review: the first cut
-      // semi-joined the full index's id column, re-introducing the
-      // O(index)-per-append read the seeds sidecar was built to kill).
-      // An index written before the sidecar existed pays one full id
-      // read above to materialize it, then never again. Existence via
-      // the Hadoop FileSystem of the PATH (r10 ADVICE:
-      // java.io.File.exists answered false for any non-local index dir
-      // — hdfs://, s3a:// — silently re-materializing the sidecar on
-      // every append).
+      // the index-side uniqueness contract: a batch row reusing a
+      // vec_id already in the index would append a second vector under
+      // that id, and probes would return duplicate/ambiguous neighbor
+      // ids for it. Checked against the SORTED id sidecar, pre-filtered
+      // to the batch's id range so parquet min/max stats prune the scan
+      // instead of re-reading O(index) ids per append. An index whose
+      // sidecar is missing or torn pays one full id read above to
+      // materialize it, then never again.
       require(batch.select("vec_id")
           .join(spark.read.parquet(idsPath)
             .filter(col("vec_id").between(mn, mx)), Seq("vec_id"), "left_semi")
           .isEmpty,
         s"appendToIvfIndex: batch reuses vec_ids already present in $indexDir")
     }
-    batch
+    IndexStore.write(ivfLayout, batch
       .select(col("vec_id"), col("embedding"),
         sqrt(dot(col("embedding"), col("embedding"))).as("norm"))
-      .withColumn("cell", least(centroidStructs(seedRows): _*).getField("sid"))
-      .write.partitionBy("cell")
-      .mode("append").parquet(indexDir)
+      .withColumn("cell", least(codebook: _*).getField("sid")),
+      indexDir, "append")
     // keep the sidecar complete for the NEXT append. Written after the
     // data lands: a crash between the two writes leaves the new ids
     // unguarded (fail-open) rather than blocking a legitimate retry of
@@ -1093,10 +1085,22 @@ object Similarity extends QueryModule {
 
   def ivfTopK(spark: SparkSession, dir: String): DataFrame = {
     val assigned = ivfAssigned(spark, dir, ivfCells)
-    val q = assigned.filter(col("vec_id") % 50 === 0)
+    cellTopK(assigned, ivfQueries(assigned))
+  }
+
+  /** The registered IVF query rule (vec_id % 50 = 0) over an assigned
+    * frame, projected to the query side of [[cellTopK]]. */
+  private def ivfQueries(assigned: DataFrame): DataFrame =
+    assigned.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"),
         col("norm").as("qnorm"), col("cell"))
-    val joined = assigned.join(broadcast(q), Seq("cell"))
+
+  /** The one IVF cell top-k body: every `idx` vector sharing a cell
+    * with a query of the broadcast query side `q` (qid, qvec, qnorm,
+    * cell), self excluded, scored by cosine and ranked per query with a
+    * vec_id tie-break; the first `k` are kept. */
+  private def cellTopK(idx: DataFrame, q: DataFrame, k: Int = 5): DataFrame = {
+    val joined = idx.join(broadcast(q), Seq("cell"))
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id"),
         (dot(col("qvec"), col("embedding")) / (col("qnorm") * col("norm")))
@@ -1104,7 +1108,7 @@ object Similarity extends QueryModule {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("qid").orderBy(col("cosine").desc, col("vec_id"))
     joined.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
+      .filter(col("rank") <= k)
       .select(col("qid"), col("vec_id"), col("cosine"), col("rank"))
   }
 
@@ -1197,16 +1201,7 @@ object Similarity extends QueryModule {
     val q = emb.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"),
         col("norm").as("qnorm"), explode(probeCells).as("cell"))
-    val joined = assigned.join(broadcast(q), Seq("cell"))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"),
-        (dot(col("qvec"), col("embedding")) / (col("qnorm") * col("norm")))
-          .as("cosine"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(col("cosine").desc, col("vec_id"))
-    joined.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
-      .select(col("qid"), col("vec_id"), col("cosine"), col("rank"))
+    cellTopK(assigned, q)
   }
 
   val ivfMultiProbeSql: String = {
@@ -1256,16 +1251,12 @@ object Similarity extends QueryModule {
     // concurrently into outDir could be deleted mid-commit. The three
     // SIDECAR writes below are then independent (distinct hidden
     // subdirs, inputs from the source corpus, never from outDir) —
-    // overlapped on fresh threads (r18, VERDICT r17 #4, guide §2.6):
-    // each is a small bounded job whose commit/FS tail previously
-    // serialized; the partitionBy-cell data layout is untouched.
-    ivfAssigned(spark, dir, cells).write
-      .partitionBy("cell")
-      .mode("overwrite")
-      .parquet(outDir)
+    // overlapped on fresh threads, since each is a small bounded job
+    // whose commit/FS tail would otherwise serialize.
+    IndexStore.write(ivfLayout, ivfAssigned(spark, dir, cells), outDir)
     import spark.implicits._
     Core.inParallel[Unit](Seq(
-      // The index carries its own cell count (ADVICE r6): probing with a
+      // The index carries its own cell count: probing with a
       // different `cells` than the build silently assigns incoming
       // vectors against a truncated/extended centroid set and returns
       // wrong neighbors. The `_`-prefixed subdir is invisible to
@@ -1273,8 +1264,8 @@ object Similarity extends QueryModule {
       // schema is unchanged; probes read it back instead of trusting a
       // caller-supplied count.
       "ivf-meta" -> (() =>
-        Seq(cells).toDF("cells").coalesce(1).write
-          .mode("overwrite").parquet(s"$outDir/_graft_meta")),
+        Seq(cells).toDF("cells").coalesce(1)
+          .write.mode("overwrite").parquet(s"$outDir/_graft_meta")),
       // The codebook rows themselves ride a second hidden sidecar, so
       // append/stream consumers recover the ~`cells` seed vectors by
       // reading ~`cells` rows instead of scanning every cell partition's
@@ -1283,10 +1274,9 @@ object Similarity extends QueryModule {
       "ivf-seeds" -> (() =>
         Core.embeddings(spark, dir).filter(col("vec_id") < cells)
           .select(col("vec_id"), col("embedding"))
-          .coalesce(1).write
-          .mode("overwrite").parquet(s"$outDir/_graft_seeds")),
-      // Sorted id SIDECAR for the append-time uniqueness guard (r9
-      // review): the guard must check batch ids against EVERY standing
+          .coalesce(1).write.mode("overwrite").parquet(s"$outDir/_graft_seeds")),
+      // Sorted id SIDECAR for the append-time uniqueness guard: the
+      // guard must check batch ids against EVERY standing
       // id — a reused id may live in any cell — and scanning the index
       // data for that, even column-pruned, re-reads O(index) per
       // append, the exact cost class the seeds sidecar exists to avoid.
@@ -1301,15 +1291,26 @@ object Similarity extends QueryModule {
     ()
   }
 
+  /** The IVF index layout: (vec_id, embedding, norm, cell) rows
+    * partitioned by cell, so a probe's `cell IN (...)` prunes whole
+    * directories. Takedowns exclude the vector's own row. IVF indexes
+    * never merge: indexes over different corpora have different
+    * codebooks ([[appendToIvfIndex]] is the incremental step). */
+  private[ops] val ivfLayout = IndexStore.Layout(Seq("vec_id", "embedding", "norm", "cell"),
+    writer = _.write.partitionBy("cell"), tombstone = Some("vec_id" -> "vec_id"))
+
   private def writeIdSidecar(ids: DataFrame, path: String,
       overwrite: Boolean): Unit =
-    ids.repartitionByRange(col("vec_id")).sortWithinPartitions("vec_id")
-      .write.mode(if (overwrite) "overwrite" else "append").parquet(path)
+    IndexStore.rangeLaid("vec_id")(ids).mode(if (overwrite) "overwrite" else "append").parquet(path)
 
-  /** The codebook recorded by [[writeIvfIndex]]'s seed sidecar. */
-  private def readIvfSeeds(spark: SparkSession, indexDir: String): Seq[(Long, Seq[Float])] =
-    spark.read.parquet(s"$indexDir/_graft_seeds")
+  /** The centroid structs of the codebook recorded by
+    * [[writeIvfIndex]]'s seed sidecar. */
+  private def ivfCodebook(spark: SparkSession, indexDir: String): Seq[Column] = {
+    val seeds = spark.read.parquet(s"$indexDir/_graft_seeds")
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1))).sortBy(_._1).toSeq
+    require(seeds.nonEmpty, s"no codebook seeds recorded in $indexDir")
+    centroidStructs(seeds)
+  }
 
   /** The build-time cell count recorded by [[writeIvfIndex]]. */
   private def readIvfCells(spark: SparkSession, indexDir: String): Int =
@@ -1322,13 +1323,11 @@ object Similarity extends QueryModule {
     * Catalyst turns it into partition pruning — a join predicate alone
     * would read every cell directory.
     *
-    * DELETE path (r15 — the last index family without one):
-    * `tombstoneTable` (or the index's own accumulated
-    * `_graft_tombstones` sidecar when present — [[writeIvfTombstones]])
-    * excludes ids from the LIVE view, both as queries and as
-    * neighbors, BEFORE the top-k ranking — so a deleted vector's slot
-    * backfills with the next-nearest live vector, the semantics a
-    * takedown needs (hiding rank-3 must promote rank-6, not leave a
+    * DELETE path: `tombstoneTable` united with the index's own
+    * accumulated tombstone sidecar ([[writeIvfTombstones]]) excludes
+    * ids from the LIVE view, both as queries and as neighbors, BEFORE
+    * the top-k ranking — so a deleted vector's slot backfills with the
+    * next-nearest live vector, the semantics a takedown needs (hiding rank-3 must promote rank-6, not leave a
     * 4-row hole). The codebook is deliberately untouched (production
     * IVF semantics — FAISS `remove_ids` never moves a centroid): a
     * centroid is trained geometry, not a data row, so a tombstoned
@@ -1337,49 +1336,21 @@ object Similarity extends QueryModule {
     * bytes is [[compactIvfIndex]]. */
   def probeIvfIndex(spark: SparkSession, indexDir: String,
       tombstoneTable: Option[DataFrame] = None): DataFrame = {
-    // explicit table UNIONS with the committed sidecar, never
-    // overrides it (r15 review — Core.resolveTombstones scaladoc)
-    val tombstones = Core.resolveTombstones(
-      spark, s"$indexDir/_graft_tombstones", tombstoneTable, "vec_id")
-    val raw = spark.read.parquet(indexDir)
-    val idx = tombstones match {
-      case Some(t) => raw.join(
-        broadcast(t.withColumnRenamed("tomb_id", "vec_id")),
-        Seq("vec_id"), "left_anti")
-      case None => raw
-    }
-    val q = idx.filter(col("vec_id") % 50 === 0)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"),
-        col("norm").as("qnorm"), col("cell"))
+    val idx = IndexStore.liveView(spark, ivfLayout, indexDir, tombstoneTable)(identity)
+    val q = ivfQueries(idx)
     val probedCells = q.select("cell").distinct().collect().map(_.get(0))
-    val joined = idx.filter(col("cell").isin(probedCells.toSeq: _*))
-      .join(broadcast(q), Seq("cell"))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"),
-        (dot(col("qvec"), col("embedding")) / (col("qnorm") * col("norm")))
-          .as("cosine"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(col("cosine").desc, col("vec_id"))
-    joined.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
-      .select(col("qid"), col("vec_id"), col("cosine"), col("rank"))
+    cellTopK(idx.filter(col("cell").isin(probedCells.toSeq: _*)), q)
   }
 
-  /** Record a takedown list against a persisted IVF index: accumulated
-    * parquet appends under the HIDDEN `_graft_tombstones` sidecar —
-    * hidden because `spark.read.parquet(indexDir)` reads every
-    * non-hidden subdir as index DATA (unlike the cluster-artifact
-    * roots, whose tables all live in named subdirs), so a visible
-    * tombstone table would be scanned as vectors. Same
-    * append-accumulate semantics and crash story as
-    * [[TextDedup.writeClusterTombstones]] (shared helper): duplicate
-    * ids inert, no absent-dest window, single-writer under quiesce.
-    * Takes effect on the next [[probeIvfIndex]] with NO index rewrite;
-    * [[compactIvfIndex]] is the hard-forget. */
+  /** Record a takedown list against a persisted IVF index, in its
+    * tombstone sidecar ([[IndexStore.accumulateTombstones]]: duplicate
+    * ids inert, no absent-dest window, single-writer under quiesce).
+    * Takes effect on the next [[probeIvfIndex]], and within
+    * [[Core.absentRelistEvery]] batches of a live [[streamingIvfProbe]],
+    * with NO index rewrite; [[compactIvfIndex]] is the hard-forget. */
   def writeIvfTombstones(spark: SparkSession, vecIds: DataFrame,
       indexDir: String): Unit =
-    TextDedup.accumulateTombstones(vecIds,
-      s"$indexDir/_graft_tombstones", "vec_id")
+    IndexStore.writeTombstones(ivfLayout, vecIds, indexDir)
 
   /** HARD-FORGET compaction for a tombstoned IVF index: rewrite the
     * cell-partitioned data minus the tombstoned rows into a fresh
@@ -1403,32 +1374,24 @@ object Similarity extends QueryModule {
     * seed's data row from results meanwhile. */
   def compactIvfIndex(spark: SparkSession, indexDir: String,
       newDir: String): Unit = {
-    Core.requireDisjointDirs(spark, indexDir, newDir, "compactIvfIndex")
-    val tombPath = s"$indexDir/_graft_tombstones"
-    require(Core.tableExists(spark, tombPath),
-      s"$indexDir carries no committed tombstone table: nothing to forget")
-    val cells = readIvfCells(spark, indexDir)
-    val tomb = Core.resolveTombstones(spark, tombPath, None, "vec_id").get
-      .withColumnRenamed("tomb_id", "vec_id")
-    require(tomb.filter(col("vec_id") < cells).isEmpty,
-      s"a codebook seed (vec_id < $cells) is tombstoned: its raw vector " +
-        "lives in the seed sidecar, which this fold preserves verbatim — " +
-        "hard-forget a seed via the full rebuild (writeIvfIndex over the " +
-        "corpus minus tombstones); probe-time exclusion already hides its " +
-        "data row from results")
-    val live = spark.read.parquet(indexDir)
-      .join(broadcast(tomb), Seq("vec_id"), "left_anti")
-    live.write.partitionBy("cell").mode("overwrite").parquet(newDir)
+    lazy val cells = readIvfCells(spark, indexDir) // read once the guards pass
+    IndexStore.compact(spark, ivfLayout, indexDir, newDir, "compactIvfIndex") { tomb =>
+      require(tomb.filter(col("tomb_id") < cells).isEmpty,
+        s"a codebook seed (vec_id < $cells) is tombstoned: its raw vector " +
+          "lives in the seed sidecar, which this fold preserves verbatim — " +
+          "hard-forget a seed via the full rebuild (writeIvfIndex over the " +
+          "corpus minus tombstones); probe-time exclusion already hides its " +
+          "data row from results")
+    }
     import spark.implicits._
-    Seq(cells).toDF("cells").coalesce(1).write
-      .mode("overwrite").parquet(s"$newDir/_graft_meta")
+    Seq(cells).toDF("cells").coalesce(1).write.mode("overwrite").parquet(s"$newDir/_graft_meta")
     spark.read.parquet(s"$indexDir/_graft_seeds").coalesce(1)
       .write.mode("overwrite").parquet(s"$newDir/_graft_seeds")
     writeIdSidecar(spark.read.parquet(newDir).select(col("vec_id")),
       s"$newDir/_graft_ids", overwrite = true)
   }
 
-  /** REGISTERED exercise of the IVF DELETE path (r15) under the oracle
+  /** REGISTERED exercise of the IVF DELETE path under the oracle
     * gate — the ANN family's takedown, completing the per-index
     * lifecycle the cluster families already have: SHARES the
     * `ivf_index_probe` standing build (same ProbeTemp kind — a
@@ -1445,13 +1408,9 @@ object Similarity extends QueryModule {
     * exclusion + next-nearest backfill through the ranked window
     * (spec-asserted non-vacuous: the live top-5 differs from the
     * baseline probe's). */
-  def ivfTombstoneProbe(spark: SparkSession, dir: String): DataFrame = {
-    val idxDir = ProbeTemp.dir("ivf_index_probe", dir)(d =>
-      writeIvfIndex(spark, dir, d))
-    probeIvfIndex(spark, idxDir, tombstoneTable = Some(
-      Core.embeddings(spark, dir).filter(col("vec_id") % 10 === 7)
-        .select("vec_id")))
-  }
+  def ivfTombstoneProbe(spark: SparkSession, dir: String): DataFrame =
+    probeIvfIndex(spark, standingIvfIndex(spark, dir), tombstoneTable = Some(
+      Core.embeddings(spark, dir).filter(col("vec_id") % 10 === 7).select("vec_id")))
 
   /** [[ivfTopKSqlOver]] with the live filter = the takedown slice's
     * complement — assignment from the full corpus, results from live
@@ -1470,21 +1429,20 @@ object Similarity extends QueryModule {
     * the oracle IS [[ivfTopKSql]] — what the hash gate adds over the
     * unit test is the parquet round-trip: cell directory layout,
     * partition-pruned scan, norm/cell column fidelity. */
-  def ivfIndexProbe(spark: SparkSession, dir: String): DataFrame = {
-    val idxDir = ProbeTemp.dir("ivf_index_probe", dir)(d =>
-      writeIvfIndex(spark, dir, d))
-    probeIvfIndex(spark, idxDir)
-  }
+  def ivfIndexProbe(spark: SparkSession, dir: String): DataFrame =
+    probeIvfIndex(spark, standingIvfIndex(spark, dir))
+
+  /** The registered IVF probes' shared standing build over the corpus. */
+  private def standingIvfIndex(spark: SparkSession, dir: String): String =
+    ProbeTemp.dir("ivf_index_probe", dir)(writeIvfIndex(spark, dir, _))
 
   /** ONE id offset shared by [[ivfAppendProbe]] and its oracle — far
     * above any corpus vec_id, so appended rows can never shadow the
     * codebook (`vec_id < cells`) or collide with standing ids. */
   private val ivfAppendShift = 1000000L
 
-  /** REGISTERED exercise of the APPEND lifecycle under the oracle gate
-    * (VERDICT r8 #2 completion: after the dedup and simhash MERGE
-    * probes, [[appendToIvfIndex]] was the last index-maintenance step
-    * with only unit coverage): build the index over the corpus, append
+  /** REGISTERED exercise of the APPEND lifecycle under the oracle gate:
+    * build the index over the corpus, append
     * an id-shifted batch (every vec_id % 10 = 3 vector under a new id
     * — assigned under the ORIGINAL codebook, per the append contract),
     * and probe. The oracle is [[ivfTopKSqlOver]] with the corpus
@@ -1495,9 +1453,7 @@ object Similarity extends QueryModule {
     * neighbors at cosine 1.0, so the probe output materially changes
     * if the append path breaks). The batch residue (% 10 = 3) shares
     * no ids with the probe rule (% 50 = 0), so the query set is
-    * unchanged and only NEIGHBOR visibility is under test. QBench
-    * cold-JVM sf0.1 (quiet box): [2.772, 0.567]s; rep2 is probe-only
-    * (memoized build + append). */
+    * unchanged and only NEIGHBOR visibility is under test. */
   def ivfAppendProbe(spark: SparkSession, dir: String): DataFrame = {
     val root = ProbeTemp.dir("ivf_append_probe", dir) { d =>
       writeIvfIndex(spark, dir, s"$d/idx")
@@ -1516,7 +1472,7 @@ object Similarity extends QueryModule {
        | SELECT vec_id + $ivfAppendShift, embedding FROM embeddings
        | WHERE vec_id % 10 = 3""".stripMargin.replace("\n", ""))
 
-  /** STREAMING ANN (r5 verdict #8) — probe INCOMING vectors against
+  /** STREAMING ANN — probe INCOMING vectors against
     * the persisted cell-partitioned index inside foreachBatch: the
     * batch-index + streaming-probe architecture. Design decision: the
     * index is IMMUTABLE between periodic batch rebuilds
@@ -1537,19 +1493,23 @@ object Similarity extends QueryModule {
     * lands idempotently per batch_id (replay-safe, the K1 sink rule).
     * At 100 TB: index bytes read per batch ~ (probed cells / cells),
     * and the top-k window partitions by the incoming qid — parallelism
-    * scales with batch size, never with index size. */
+    * scales with batch size, never with index size.
+    *
+    * TAKEDOWNS: each batch probes the index's LIVE view, tombstones
+    * resolved through a per-stream [[Core.FsMemo]] like the other
+    * row-keyed probe streams, so a takedown written under quiesce
+    * ([[writeIvfTombstones]]) takes effect within
+    * [[Core.absentRelistEvery]] batches. */
   def streamingIvfProbe(spark: SparkSession, incoming: DataFrame,
       indexDir: String, outDir: String, checkpoint: String,
       k: Int = 5)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val idx = spark.read.parquet(indexDir)
-    // cells comes from the index's own metadata, never from the caller
-    // (ADVICE r6): a probe-time count different from the build's would
+    val idx = IndexStore.read(spark, ivfLayout, indexDir)
+    val memo = new Core.FsMemo
+    // the codebook comes from the index's own sidecar, never from the
+    // caller: a probe-time count different from the build's would
     // assign incoming vectors against the wrong centroid set.
-    val seedRows = readIvfSeeds(spark, indexDir)
-    require(seedRows.nonEmpty,
-      s"streamingIvfProbe: index at $indexDir carries no centroid seeds")
-    val scoreStructs = centroidStructs(seedRows.toSeq)
+    val scoreStructs = ivfCodebook(spark, indexDir)
     incoming.writeStream
       .option("checkpointLocation", checkpoint)
       .outputMode("append")
@@ -1563,18 +1523,11 @@ object Similarity extends QueryModule {
         try {
           val probedCells = q.select("cell").distinct().collect().map(_.get(0))
           if (probedCells.nonEmpty) {
-            val joined = idx.filter(col("cell").isin(probedCells.toSeq: _*))
-              .join(broadcast(q), Seq("cell"))
-              .filter(col("vec_id") =!= col("qid"))
-              .select(col("qid"), col("vec_id"),
-                (dot(col("qvec"), col("embedding")) / (col("qnorm") * col("norm")))
-                  .as("cosine"))
-            val w = org.apache.spark.sql.expressions.Window
-              .partitionBy("qid").orderBy(col("cosine").desc, col("vec_id"))
-            val top = joined.withColumn("rank", row_number().over(w))
-              .filter(col("rank") <= k)
-              .select(col("qid"), col("vec_id"), col("cosine"), col("rank"))
-            graft.streaming.StreamingPipeline.writeBatchIdempotent(top, batchId, outDir)
+            val live = IndexStore.live(idx,
+              IndexStore.tombstones(spark, ivfLayout, indexDir, None, memo), "vec_id")
+            graft.streaming.StreamingPipeline.writeBatchIdempotent(
+              cellTopK(live.filter(col("cell").isin(probedCells.toSeq: _*)), q, k),
+              batchId, outDir)
             ()
           }
         } finally { q.unpersist(); () }
@@ -1598,19 +1551,7 @@ object Similarity extends QueryModule {
       .setFeaturesCol("fv").setPredictionCol("cell")
       .fit(emb)
     val assigned = model.transform(emb).drop("fv")
-    val q = assigned.filter(col("vec_id") % 50 === 0)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"),
-        col("norm").as("qnorm"), col("cell"))
-    val joined = assigned.join(broadcast(q), Seq("cell"))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"),
-        (dot(col("qvec"), col("embedding")) / (col("qnorm") * col("norm")))
-          .as("cosine"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(col("cosine").desc, col("vec_id"))
-    joined.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
-      .select(col("qid"), col("vec_id"), col("cosine"), col("rank"))
+    cellTopK(assigned, ivfQueries(assigned))
   }
 
   /** Diversity (coverage) sampling: one representative per IVF cell —
@@ -2009,21 +1950,16 @@ object Similarity extends QueryModule {
     // two small range-laid sidecar writes back-fill the cluster pass's
     // generator/loop tail instead of serializing after it.
     Core.inParallel[Unit](Seq(
+      // vecs range-laid on vec_id so the probe's matched-id pushdown
+      // skips whole files on footer min/max — the verify then reads only
+      // candidate vectors, never the corpus-sized sidecar
       "embed-vecs" -> (() =>
-        standing
-          .select(col("vec_id"), col("embedding"),
-            sqrt(dot(col("embedding"), col("embedding"))).as("norm"))
-          // range-laid on vec_id so the probe's matched-id pushdown skips
-          // whole files on footer min/max — the verify then reads only
-          // candidate vectors, never the corpus-sized sidecar
-          .repartitionByRange(col("vec_id"))
-          .sortWithinPartitions(col("vec_id"))
-          .write.mode("overwrite").parquet(s"$root/vecs")),
+        IndexStore.rangeLaid("vec_id")(standing.select(col("vec_id"), col("embedding"),
+          sqrt(dot(col("embedding"), col("embedding"))).as("norm")))
+          .mode("overwrite").parquet(s"$root/vecs")),
       "embed-bandidx" -> (() =>
-        embedFlatKeys(standing)
-          .repartitionByRange(col("bandkey"))
-          .sortWithinPartitions(col("bandkey"))
-          .write.mode("overwrite").parquet(s"$root/bandidx")),
+        IndexStore.rangeLaid("bandkey")(embedFlatKeys(standing))
+          .mode("overwrite").parquet(s"$root/bandidx")),
       "embed-clusters" -> (() =>
         Components.clusterPairs(
           cosineNearDupPairsLeanOver(standing, ndThreshold, ndBands, ndRows),
@@ -2152,7 +2088,7 @@ object Similarity extends QueryModule {
     * the stored embeddings from the vector sidecar. */
   def writeEmbedClusterTombstones(spark: SparkSession, vecIds: DataFrame,
       root: String): Unit =
-    TextDedup.accumulateTombstones(vecIds, s"$root/tombstones", "vec_id")
+    IndexStore.accumulateTombstones(vecIds, IndexStore.clusterTombstones(root), "vec_id")
 
   /** REGISTERED exercise of the embed tombstone DELETE path,
     * [[TextDedup.dedupClustersTombstoneProbe]]'s embedding twin:

@@ -840,17 +840,16 @@ object TextDedup extends QueryModule {
       "i * 8192 + (shiftright(simhash64, cast(i * 13 AS INT)) & if(i = 4, 4095, 8191)))")
 
   /** PERSISTED NEAR-DUP INDEX — the cross-batch lifecycle for the
-    * near-dup family, completing the triple the exact-dedup digest
-    * index ([[writeDedupIndex]]) and the ANN index
-    * ([[Similarity.writeIvfIndex]]) already follow: built by periodic
-    * batch jobs, probed by ingests and streams. One row per
-    * (bandkey, doc) — 5 rows/doc — RANGE-partitioned and sorted by
-    * bandkey, so every parquet file and row group covers a narrow
-    * bandkey slice and a probe's `bandkey IN (...)` literal skips all
-    * others on footer min/max stats alone (plan-asserted as a pushed
-    * filter in TextDedupSpec). At 100 TB that layout IS the index:
-    * bytes read per probe ~ (probed bandkeys / 40960) before any row
-    * is decoded. */
+    * near-dup family, the same [[IndexStore]] lifecycle as the
+    * exact-dedup digest index ([[writeDedupIndex]]) and the ANN index
+    * ([[Similarity.writeIvfIndex]]): built by periodic batch jobs,
+    * probed by ingests and streams. One row per (bandkey, doc) — 5
+    * rows/doc — RANGE-partitioned and sorted by bandkey, so every
+    * parquet file and row group covers a narrow bandkey slice and a
+    * probe's `bandkey IN (...)` literal skips all others on footer
+    * min/max stats alone (plan-asserted as a pushed filter in
+    * TextDedupSpec). At 100 TB that layout IS the index: bytes read per
+    * probe ~ (probed bandkeys / 40960) before any row is decoded. */
   def writeSimhashIndex(spark: SparkSession, dir: String, outDir: String): Unit =
     writeSimhashIndexFrom(Core.documents(spark, dir), outDir)
 
@@ -858,15 +857,19 @@ object TextDedup extends QueryModule {
     * job indexes whatever slice of the corpus is curated, not always a
     * whole testdata table (used by [[simhashIndexProbe]]). */
   def writeSimhashIndexFrom(docs: DataFrame, outDir: String): Unit =
-    // deliberately NOT spreadNarrowScan'd (r17 — measured, then
-    // reverted): the range-layout exchange follows immediately, so the
-    // fan-out only added a shuffle + wider scheduling per slice
-    // (zero-steal QBench: 3-slice merge-probe build 2.8 -> 4.1s)
-    simhashSigs(docs)
-      .select(col("doc_id"), col("simhash64"), explode(bandKeysCol).as("bandkey"))
-      .repartitionByRange(col("bandkey"))
-      .sortWithinPartitions(col("bandkey"))
-      .write.mode("overwrite").parquet(outDir)
+    // deliberately NOT spreadNarrowScan'd: the range-layout exchange
+    // follows immediately, so a fan-out only adds a shuffle and wider
+    // scheduling per slice
+    IndexStore.write(simhashLayout, simhashSigs(docs)
+      .select(col("doc_id"), col("simhash64"), explode(bandKeysCol).as("bandkey")), outDir)
+
+  /** The simhash index layout: (doc_id, simhash64, bandkey) rows
+    * range-laid on bandkey. Rows are per-document and independent, so
+    * a merge is a union + distinct (a doc indexed in two slices
+    * collapses) and a takedown excludes the doc's own rows. */
+  private[ops] val simhashLayout = IndexStore.Layout(Seq("doc_id", "simhash64", "bandkey"),
+    writer = IndexStore.rangeLaid("bandkey"), fold = _.distinct(),
+    tombstone = Some("doc_id" -> "doc_id"))
 
   /** Default gate for [[pruneIndexByProbedKeys]]: 10k keys ≈ a
     * 2,500-doc batch (4 band keys/doc) — well past any micro-batch,
@@ -922,7 +925,7 @@ object TextDedup extends QueryModule {
     * micro-batches, broadcast semi-join above the size gate), and
     * nothing corpus-sized shuffles.
     *
-    * DELETE path (r15 — [[writeSimhashIndexTombstones]]): tombstoned
+    * DELETE path ([[writeSimhashIndexTombstones]]): tombstoned
     * doc_ids are dropped from the index scan BEFORE the candidate
     * join, so a taken-down document stops matching incoming batches
     * with no index rewrite — probe-time exclusion, the same contract
@@ -937,25 +940,14 @@ object TextDedup extends QueryModule {
       maxKeyLiterals: Int = probeKeyLiteralMax,
       tombstoneTable: Option[DataFrame] = None,
       memo: Core.FsMemo = new Core.FsMemo): DataFrame = {
-    // explicit table UNIONS with the committed sidecar, never
-    // overrides it (r15 review — Core.resolveTombstones scaladoc)
-    val tombstones = Core.resolveTombstones(
-      spark, s"$indexDir/_graft_tombstones", tombstoneTable, "doc_id", memo)
-    // probe side NOT fanned out (r17): probes run per micro-batch in
-    // the streaming wrappers, where the batch is small by contract —
-    // see minhashBands
+    // probe side NOT fanned out: probes run per micro-batch in the
+    // streaming wrappers, where the batch is small by contract
     val b = simhashSigs(batch)
       .select(col("doc_id").as("probe_id"), col("simhash64").as("probe_sig"),
         explode(bandKeysCol).as("bandkey"))
-    val raw = pruneIndexByProbedKeys(
-      spark.read.parquet(indexDir), b, "bandkey", maxKeyLiterals)
-    val idx = tombstones match {
-      case Some(t) => raw.join(
-        broadcast(t.withColumnRenamed("tomb_id", "doc_id")),
-        Seq("doc_id"), "left_anti")
-      case None => raw
-    }
-    idx.join(broadcast(b), Seq("bandkey"))
+    IndexStore.liveView(spark, simhashLayout, indexDir, tombstoneTable, memo)(
+        pruneIndexByProbedKeys(_, b, "bandkey", maxKeyLiterals))
+      .join(broadcast(b), Seq("bandkey"))
       .select(col("probe_id"), col("doc_id").as("match_id"),
         bit_count(col("probe_sig").bitwiseXOR(col("simhash64"))).as("hamming"))
       .filter(col("hamming") <= 4)
@@ -989,8 +981,7 @@ object TextDedup extends QueryModule {
     * (the [[dedupClusters]] precedent). */
   def simhashIndexProbe(spark: SparkSession, dir: String): DataFrame = {
     val docs = Core.documents(spark, dir)
-    val idxDir = ProbeTemp.dir("simhash_index_probe", dir)(d =>
-      writeSimhashIndexFrom(docs.filter(col("doc_id") % 2 === 0), d))
+    val idxDir = IndexStore.evenHalf("simhash_index_probe", dir, docs)(writeSimhashIndexFrom)
     probeSimhashIndex(spark, docs.filter(col("doc_id") % 2 === 1), idxDir)
   }
 
@@ -1008,56 +999,32 @@ object TextDedup extends QueryModule {
     simhashIndexProbeSqlFor("doc_id % 2 = 0", "doc_id % 2 = 1")
 
   /** REGISTERED merge-lifecycle exercise for the NEAR-DUP index —
-    * [[dedupIndexMergeProbe]]'s twin over [[mergeSimhashIndexes]]
-    * (VERDICT r8 #2: the merge steps carried spec-asserted
-    * rebuild-equivalence but no CORRECTNESS entry). Three corpus
-    * slices (doc_id % 4 = 0/1/2) are signature-indexed separately,
-    * merged (union + distinct, re-laid into the bandkey-range layout
-    * the probe's footer pruning needs), and the remainder probed. The
-    * oracle is the flat all-pairs batch x union scan — a hash match
-    * proves the merged layout serves probes exactly like a full
-    * rebuild, through the parquet round-trip. QBench cold-JVM sf0.1
-    * (quiet box): [2.801, 0.913]s; rep2 is probe-only (memoized
-    * build). */
+    * [[dedupIndexMergeProbe]]'s twin over [[mergeSimhashIndexes]].
+    * Three corpus slices (doc_id % 4 = 0/1/2) are signature-indexed
+    * separately, merged (union + distinct, re-laid into the
+    * bandkey-range layout the probe's footer pruning needs), and the
+    * remainder probed. The oracle is the flat all-pairs batch x union
+    * scan — a hash match proves the merged layout serves probes exactly
+    * like a full rebuild, through the parquet round-trip. */
   def simhashIndexMergeProbe(spark: SparkSession, dir: String): DataFrame = {
     val docs = Core.documents(spark, dir)
-    val root = ProbeTemp.dir("simhash_index_merged", dir) { d =>
-      // three INDEPENDENT slice builds (disjoint doc_id slices,
-      // distinct dirs) overlapped on fresh threads (r18, guide §2.6 —
-      // the drift-merge pattern; distinct from the r17-reverted
-      // fan-out, which widened the data INSIDE each slice build); the
-      // merge depends on all three and stays after the join-all
-      val slices = (0 to 2).map(r => r -> s"$d/slice$r")
-      Core.inParallel[Unit](slices.map { case (r, sliceDir) =>
-        s"simhash-slice$r" -> (() =>
-          writeSimhashIndexFrom(docs.filter(col("doc_id") % 4 === r), sliceDir))
-      })
-      mergeSimhashIndexes(spark, slices.map(_._2), s"$d/merged")
-    }
-    probeSimhashIndex(spark, docs.filter(col("doc_id") % 4 === 3), s"$root/merged")
+    val merged = IndexStore.mergedSlices("simhash_index_merged", dir, docs)(
+      writeSimhashIndexFrom)(mergeSimhashIndexes(spark, _, _))
+    probeSimhashIndex(spark, docs.filter(col("doc_id") % 4 === 3), merged)
   }
 
   val simhashIndexMergeProbeSql: String =
     simhashIndexProbeSqlFor("doc_id % 4 < 3", "doc_id % 4 = 3")
 
-  /** DELETE path for the persisted simhash index (r15 — with the
-    * digest twin [[writeDedupIndexTombstones]] this closes the
-    * takedown story across ALL FIVE persisted index families: digest,
-    * simhash, IVF, text clusters, embed clusters; before this round
-    * only the cluster families and IVF had one): accumulate a takedown
-    * list under the HIDDEN `_graft_tombstones` sidecar — hidden
-    * because `spark.read.parquet(indexDir)` reads every non-hidden
-    * file as index DATA, the same layout constraint as
-    * [[graft.ops.Similarity.writeIvfTombstones]]. Same
-    * append-accumulate semantics and crash story as
-    * [[writeClusterTombstones]] (shared [[accumulateTombstones]]
-    * helper): duplicate ids inert, no absent-dest window,
-    * single-writer under quiesce. Takes effect on the next
-    * [[probeSimhashIndex]] with NO index rewrite;
+  /** DELETE path for the persisted simhash index: accumulate a
+    * takedown list in the index's tombstone sidecar
+    * ([[IndexStore.accumulateTombstones]]: duplicate ids inert, no
+    * absent-dest window, single-writer under quiesce). Takes effect on
+    * the next [[probeSimhashIndex]] with NO index rewrite;
     * [[compactSimhashIndex]] is the hard-forget. */
   def writeSimhashIndexTombstones(spark: SparkSession, docIds: DataFrame,
       indexDir: String): Unit =
-    accumulateTombstones(docIds, s"$indexDir/_graft_tombstones", "doc_id")
+    IndexStore.writeTombstones(simhashLayout, docIds, indexDir)
 
   /** HARD-FORGET compaction for a tombstoned simhash index: rewrite
     * the index minus the tombstoned docs' rows into a fresh dir,
@@ -1070,25 +1037,13 @@ object TextDedup extends QueryModule {
     * the new dir — the ids are forgotten, not filtered. Rewrites
     * index rows only (5 per doc), never documents. */
   def compactSimhashIndex(spark: SparkSession, indexDir: String,
-      newDir: String): Unit = {
-    Core.requireDisjointDirs(spark, indexDir, newDir, "compactSimhashIndex")
-    val tombPath = s"$indexDir/_graft_tombstones"
-    require(Core.tableExists(spark, tombPath),
-      s"$indexDir carries no committed tombstone table: nothing to forget")
-    val tomb = Core.resolveTombstones(spark, tombPath, None, "doc_id").get
-      .withColumnRenamed("tomb_id", "doc_id")
-    spark.read.parquet(indexDir)
-      .select(col("doc_id"), col("simhash64"), col("bandkey"))
-      .join(broadcast(tomb), Seq("doc_id"), "left_anti")
-      .repartitionByRange(col("bandkey"))
-      .sortWithinPartitions(col("bandkey"))
-      .write.mode("overwrite").parquet(newDir)
-  }
+      newDir: String): Unit =
+    IndexStore.compact(spark, simhashLayout, indexDir, newDir, "compactSimhashIndex")()
 
-  /** REGISTERED exercise of the simhash DELETE path (r15) under the
+  /** REGISTERED exercise of the simhash DELETE path under the
     * oracle gate. Fixture shape — chosen for SF-INVARIANT
-    * non-vacuity (the r13 lesson: a slice that happens to miss at one
-    * SF proves nothing): the standing index is the even-id half
+    * non-vacuity (a slice that happens to miss at one SF proves
+    * nothing): the standing index is the even-id half
     * (SHARING the `simhash_index_probe` ProbeTemp build — a takedown
     * list is data evaluated against the immutable snapshot, passed
     * explicitly so the shared artifacts stay untouched), and the probe
@@ -1103,12 +1058,10 @@ object TextDedup extends QueryModule {
     * hash-mismatches. */
   def simhashIndexTombstoneProbe(spark: SparkSession, dir: String): DataFrame = {
     val docs = Core.documents(spark, dir)
-    val idxDir = ProbeTemp.dir("simhash_index_probe", dir)(d =>
-      writeSimhashIndexFrom(docs.filter(col("doc_id") % 2 === 0), d))
+    val idxDir = IndexStore.evenHalf("simhash_index_probe", dir, docs)(writeSimhashIndexFrom)
     probeSimhashIndex(spark,
       docs.withColumn("doc_id", col("doc_id") + lit(10000000000L)), idxDir,
-      tombstoneTable = Some(
-        docs.filter(col("doc_id") % 10 === 4).select("doc_id")))
+      tombstoneTable = Some(docs.filter(col("doc_id") % 10 === 4).select("doc_id")))
   }
 
   /** [[simhashIndexProbeSqlFor]]'s shape with the index side filtered
@@ -1299,10 +1252,8 @@ object TextDedup extends QueryModule {
     * so the append, tombstone and cumulative probes read the same
     * immutable artifacts. */
   private def standingClusterRoot(spark: SparkSession, dir: String): String =
-    ProbeTemp.dir("dedup_clusters_append", dir) { d =>
-      writeClusterAppendArtifacts(spark,
-        Core.documents(spark, dir).filter(col("doc_id") % 2 === 0), d)
-    }
+    IndexStore.evenHalf("dedup_clusters_append", dir, Core.documents(spark, dir))(
+      writeClusterAppendArtifacts(spark, _, _))
 
   /** The standing corpus's two append artifacts: its band-key INDEX
     * (range-laid on (band, bkey) so a probe's pushed bkey literals
@@ -1316,10 +1267,7 @@ object TextDedup extends QueryModule {
     // micro-batch frames)
     val (bands, release) = minhashBands(Core.spreadNarrowScan(standing))
     try {
-      bands
-        .repartitionByRange(col("band"), col("bkey"))
-        .sortWithinPartitions(col("band"), col("bkey"))
-        .write.mode("overwrite").parquet(s"$root/bandidx")
+      IndexStore.rangeLaid("band", "bkey")(bands).mode("overwrite").parquet(s"$root/bandidx")
       Components.clusterPairs(
         candidatePairsOver(spark.read.parquet(s"$root/bandidx")),
         "doc_a", "doc_b", "doc_id")
@@ -1342,52 +1290,12 @@ object TextDedup extends QueryModule {
     * membership, not edges. When no tombstoned doc cuts its cluster's
     * candidate graph, the append equals the rebuild exactly
     * (spec-asserted on a clique fixture). Calls ACCUMULATE (see
-    * [[accumulateTombstones]]), so a second takedown never resurrects
-    * earlier ones. Quiesce a live stream first: the standing artifacts
-    * are static for a stream's lifetime. */
+    * [[IndexStore.accumulateTombstones]]), so a second takedown never
+    * resurrects earlier ones. Quiesce a live stream first: the standing
+    * artifacts are static for a stream's lifetime. */
   def writeClusterTombstones(spark: SparkSession, docIds: DataFrame,
       root: String): Unit =
-    accumulateTombstones(docIds, s"$root/tombstones", "doc_id")
-
-  /** The accumulating tombstone write shared by BOTH families
-    * (text: doc_id; embed: vec_id — [[Similarity.writeEmbedClusterTombstones]]):
-    * APPEND the incoming ids as new parquet files in the live table.
-    * Append, not union-stage-swap (r15 review): the previous shape
-    * deleted the live table before renaming the staged union in, so a
-    * crash inside that window lost EVERY tombstone — all later appends
-    * would silently run with zero exclusion (wrong answers, no error,
-    * on the one table whose absence is indistinguishable from "no
-    * takedowns"). An append has no absent-dest window at all: an
-    * interrupted write leaves the old files plus at worst an ignored
-    * _temporary dir. The table is an id SET consumed only by
-    * broadcast anti-joins and min-aggs, so duplicate ids across calls
-    * are semantically inert, and takedown lists are tiny — compaction
-    * (the hard-forget rebuild) rewrites the artifacts root anyway.
-    * Single-writer contract unchanged (quiesce first). */
-  private[ops] def accumulateTombstones(ids: DataFrame,
-      dest: String, idCol: String): Unit =
-    // by-name id pick with the single-column fallback (r16, ADVICE
-    // r15 — same contract as Core.resolveTombstones): a multi-column
-    // frame whose id is not first must fail, not delete wrong rows
-    ids.select(Core.idColumn(ids, idCol).cast("long").as(idCol)).distinct()
-      .write.mode("append").parquet(dest)
-
-  /** Merge guard shared by the index-merge folds (r15): a merge
-    * unions the inputs' index ROWS verbatim and cannot carry their
-    * `_graft_tombstones` sidecars into the output layout, so merging
-    * a tombstoned index would silently RESURRECT every taken-down row
-    * in the merged output — wrong answers on the one table whose
-    * whole point is exclusion. Fail fast and direct the caller to the
-    * hard-forget compaction first (the same fail-fast posture as the
-    * cumulative append meeting a tombstoned artifacts root). */
-  private def requireNoTombstones(spark: SparkSession,
-      indexDirs: Seq[String], op: String, compactOp: String): Unit =
-    indexDirs.foreach { d =>
-      require(!Core.tableExists(spark, s"$d/_graft_tombstones"),
-        s"$op: $d carries a committed tombstone table, and a merge would " +
-          s"silently resurrect its taken-down rows in the merged output — " +
-          s"hard-forget first ($compactOp into a fresh dir), then merge that")
-    }
+    IndexStore.accumulateTombstones(docIds, IndexStore.clusterTombstones(root), "doc_id")
 
   /** The text family's candidate source for [[Components.appendClusters]]:
     * the batch's MinHash band keys, their within-batch bucket pairs,
@@ -1687,9 +1595,10 @@ object TextDedup extends QueryModule {
   /** PERSISTED EXACT-DEDUP INDEX — the cross-batch lifecycle the
     * in-corpus queries can't express: a 100 TB pipeline dedupes each
     * NEW ingest batch against the digests of everything already
-    * curated, not against itself. Mirrors the [[Similarity.writeIvfIndex]]
-    * architecture: the index is an immutable parquet table rebuilt (or
-    * appended) by periodic batch jobs, and probes are pure scans.
+    * curated, not against itself. An [[IndexStore]] family like
+    * [[Similarity.writeIvfIndex]]: the index is an immutable parquet
+    * table rebuilt (or merged) by periodic batch jobs, and probes are
+    * pure scans.
     * Layout: one row per distinct digest with its canonical keep_id,
     * partitioned by the digest's first hex nibble (16 directories) —
     * for small probe batches the probed-prefix isin prunes at the
@@ -1703,15 +1612,27 @@ object TextDedup extends QueryModule {
     * job indexes whatever slice of the corpus is curated, not always a
     * whole testdata table (used by [[dedupIndexProbe]]). */
   def writeDedupIndexFrom(docs: DataFrame, outDir: String): Unit =
-    // deliberately NOT spreadNarrowScan'd (r17 — measured, then
-    // reverted): md5 over ~600-char texts is milliseconds of map work,
-    // and the digest groupBy shuffle dominates — the fan-out regressed
-    // the 3-slice merge-probe build 2.6 -> 4.3s (zero-steal QBench)
-    docs.select(col("doc_id"), docDigest.as("digest"))
+    // deliberately NOT spreadNarrowScan'd: md5 over ~600-char texts is
+    // milliseconds of map work and the digest groupBy shuffle
+    // dominates, so a fan-out only adds a shuffle
+    IndexStore.write(digestLayout, docs.select(col("doc_id"), docDigest.as("digest"))
       .groupBy("digest").agg(min(col("doc_id")).as("keep_id"))
-      .withColumn("prefix", substring(col("digest"), 1, 1))
-      .write.partitionBy("prefix")
-      .mode("overwrite").parquet(outDir)
+      .withColumn("prefix", substring(col("digest"), 1, 1)), outDir)
+
+  /** The digest index layout: one (digest, keep_id) row per distinct
+    * digest, partitioned by the digest's first hex nibble. The read
+    * schema is explicit because a partitionBy write over an EMPTY
+    * build slice creates no data file at all, and inference would then
+    * throw where an empty index must mean "everything is new". A merge
+    * keeps the min keeper per digest; a takedown excludes the rows
+    * whose KEEPER is tombstoned. */
+  private[ops] val digestLayout = IndexStore.Layout(Seq("digest", "keep_id", "prefix"),
+    schema = Some("digest STRING, keep_id BIGINT, prefix STRING"),
+    writer = _.write.partitionBy("prefix"),
+    fold = _.groupBy(col("digest"), col("prefix"))
+      .agg(min(col("keep_id")).as("keep_id"))
+      .select(col("digest"), col("keep_id"), col("prefix")),
+    tombstone = Some("doc_id" -> "keep_id"))
 
   /** MERGE persisted digest indexes — the INCREMENTAL rebuild step
     * that closes the index lifecycle (build → probe → merge): instead
@@ -1727,31 +1648,8 @@ object TextDedup extends QueryModule {
     * difference between re-reading everything curated and touching
     * only digests. */
   def mergeDedupIndexes(spark: SparkSession, indexDirs: Seq[String],
-      outDir: String): Unit = {
-    require(indexDirs.nonEmpty, "mergeDedupIndexes: need at least one index")
-    requireNoTombstones(spark, indexDirs, "mergeDedupIndexes",
-      "compactDedupIndex")
-    indexDirs.foreach(d =>
-      Core.requireDisjointDirs(spark, d, outDir, "mergeDedupIndexes"))
-    // inputs must also be pairwise disjoint (r16, ADVICE r15): a dir
-    // merged with its own subdirectory (or listed twice under aliased
-    // spellings) would double-count its rows in the merged index
-    Core.requirePairwiseDisjoint(spark, indexDirs, "mergeDedupIndexes")
-    // explicit schema for the same reason as probeDedupIndex: an index
-    // built from an EMPTY slice (a day with zero admitted documents)
-    // has no data files under its partitionBy layout, and inference
-    // would throw where the merge should simply contribute nothing
-    indexDirs.map(d => spark.read
-        .schema("digest STRING, keep_id BIGINT, prefix STRING")
-        .parquet(d)
-        .select(col("digest"), col("keep_id"), col("prefix")))
-      .reduce(_ unionByName _)
-      .groupBy(col("digest"), col("prefix"))
-      .agg(min(col("keep_id")).as("keep_id"))
-      .select(col("digest"), col("keep_id"), col("prefix"))
-      .write.partitionBy("prefix")
-      .mode("overwrite").parquet(outDir)
-  }
+      outDir: String): Unit =
+    IndexStore.merge(spark, digestLayout, indexDirs, outDir, "mergeDedupIndexes")
 
   /** Same lifecycle step for the simhash near-dup index: signatures
     * are per-document and independent, so the merge is a union +
@@ -1759,24 +1657,8 @@ object TextDedup extends QueryModule {
     * into the bandkey-range layout the probe's footer pruning relies
     * on. Shuffles index rows only (5 per doc), never documents. */
   def mergeSimhashIndexes(spark: SparkSession, indexDirs: Seq[String],
-      outDir: String): Unit = {
-    require(indexDirs.nonEmpty, "mergeSimhashIndexes: need at least one index")
-    requireNoTombstones(spark, indexDirs, "mergeSimhashIndexes",
-      "compactSimhashIndex")
-    indexDirs.foreach(d =>
-      Core.requireDisjointDirs(spark, d, outDir, "mergeSimhashIndexes"))
-    // pairwise input disjointness (r16, ADVICE r15) — the distinct()
-    // below collapses exact row dups, but a nested dir still
-    // contributes rows the outer dir's layout does not own
-    Core.requirePairwiseDisjoint(spark, indexDirs, "mergeSimhashIndexes")
-    indexDirs.map(d => spark.read.parquet(d)
-        .select(col("doc_id"), col("simhash64"), col("bandkey")))
-      .reduce(_ unionByName _)
-      .distinct()
-      .repartitionByRange(col("bandkey"))
-      .sortWithinPartitions(col("bandkey"))
-      .write.mode("overwrite").parquet(outDir)
-  }
+      outDir: String): Unit =
+    IndexStore.merge(spark, simhashLayout, indexDirs, outDir, "mergeSimhashIndexes")
 
   /** Probe a NEW batch of documents against a persisted digest index:
     * one verdict per batch row —
@@ -1796,7 +1678,7 @@ object TextDedup extends QueryModule {
     * is the difference between a bounded scan and re-sorting the
     * corpus per ingest.
     *
-    * DELETE path (r15 — [[writeDedupIndexTombstones]]): index rows
+    * DELETE path ([[writeDedupIndexTombstones]]): index rows
     * whose KEEPER is tombstoned are dropped from the match scan, so a
     * re-ingest of taken-down content is admitted as 'new' — the
     * verdict a takedown wants (the content was removed; its digest
@@ -1814,33 +1696,16 @@ object TextDedup extends QueryModule {
   def probeDedupIndex(spark: SparkSession, batch: DataFrame, indexDir: String,
       tombstoneTable: Option[DataFrame] = None,
       memo: Core.FsMemo = new Core.FsMemo): DataFrame = {
-    // explicit table UNIONS with the committed sidecar, never
-    // overrides it (r15 review — Core.resolveTombstones scaladoc)
-    val tombstones = Core.resolveTombstones(
-      spark, s"$indexDir/_graft_tombstones", tombstoneTable, "doc_id", memo)
-    // probe side NOT fanned out (r17): per-micro-batch path — see
-    // minhashBands
+    // probe side NOT fanned out: per-micro-batch path
     val b = batch.select(col("doc_id"), docDigest.as("digest"))
     val batchKeep = b.groupBy("digest").agg(min(col("doc_id")).as("batch_keep_id"))
-    val probedPrefixes = batchKeep
-      .select(substring(col("digest"), 1, 1)).distinct().collect().map(_.getString(0))
-    // explicit schema: a partitionBy write over an EMPTY build slice
-    // creates no data files at all (only _SUCCESS), and schema
-    // inference then throws UNABLE_TO_INFER_SCHEMA — an empty index
-    // must instead mean "everything is new", the routine state of a
-    // fresh deployment's first ingest. (Also skips inference I/O.)
-    val raw = spark.read
-      .schema("digest STRING, keep_id BIGINT, prefix STRING")
-      .parquet(indexDir)
-      .filter(col("prefix").isin(probedPrefixes.toSeq: _*))
     // keeper-level exclusion BEFORE the digest join (see the DELETE
     // scaladoc above): an index row whose keep_id is taken down must
     // not vouch for any batch digest
-    val live = tombstones match {
-      case Some(t) => raw.join(
-        broadcast(t.withColumnRenamed("tomb_id", "keep_id")),
-        Seq("keep_id"), "left_anti")
-      case None => raw
+    val live = IndexStore.liveView(spark, digestLayout, indexDir, tombstoneTable, memo) { idx =>
+      val probedPrefixes = batchKeep
+        .select(substring(col("digest"), 1, 1)).distinct().collect().map(_.getString(0))
+      idx.filter(col("prefix").isin(probedPrefixes.toSeq: _*))
     }
     val matches = live
       .join(broadcast(batchKeep.select(col("digest"))), Seq("digest"))
@@ -1889,8 +1754,7 @@ object TextDedup extends QueryModule {
     * joins) under the hash gate. */
   def dedupIndexProbe(spark: SparkSession, dir: String): DataFrame = {
     val docs = Core.documents(spark, dir)
-    val idxDir = ProbeTemp.dir("dedup_index_probe", dir)(d =>
-      writeDedupIndexFrom(docs.filter(col("doc_id") % 2 === 0), d))
+    val idxDir = IndexStore.evenHalf("dedup_index_probe", dir, docs)(writeDedupIndexFrom)
     probeDedupIndex(spark, docs.filter(col("doc_id") % 2 === 1), idxDir)
   }
 
@@ -1920,10 +1784,8 @@ object TextDedup extends QueryModule {
     dedupIndexProbeSqlFor("doc_id % 2 = 0", "doc_id % 2 = 1")
 
   /** REGISTERED end-to-end exercise of the index MERGE lifecycle under
-    * the driver's oracle gate (VERDICT r8 #3 — [[mergeDedupIndexes]]
-    * previously carried only a spec-asserted rebuild-equivalence, no
-    * CORRECTNESS entry): three slices of the corpus (doc_id % 4 = 0/1/2
-    * — the accumulated ingest days) are indexed SEPARATELY, merged with
+    * the driver's oracle gate: three slices of the corpus (doc_id % 4 =
+    * 0/1/2 — the accumulated ingest days) are indexed SEPARATELY, merged with
     * [[mergeDedupIndexes]], and the remainder (doc_id % 4 = 3, the new
     * ingest) probed against the merged index. The DuckDB oracle is the
     * SAME digest self-join as [[dedupIndexProbeSql]] computed over a
@@ -1932,41 +1794,25 @@ object TextDedup extends QueryModule {
     * merge equals the full rebuild (min over slice-minima = min over
     * the union). Reference analogue: the cross-RUN registry
     * accumulation in economic_indicators_spider.py:67-96 (each scrape
-    * folds its new URLs into the standing registry). QBench cold-JVM
-    * sf0.1 (quiet box): [2.600, 0.529]s; rep2 is probe-only — the
-    * memoized build pays the three slice writes + merge once. */
+    * folds its new URLs into the standing registry). */
   def dedupIndexMergeProbe(spark: SparkSession, dir: String): DataFrame = {
     val docs = Core.documents(spark, dir)
-    val root = ProbeTemp.dir("dedup_index_merged", dir) { d =>
-      // independent slice builds overlapped (r18, guide §2.6) — see
-      // simhashIndexMergeProbe's note
-      val slices = (0 to 2).map(r => r -> s"$d/slice$r")
-      Core.inParallel[Unit](slices.map { case (r, sliceDir) =>
-        s"dedup-slice$r" -> (() =>
-          writeDedupIndexFrom(docs.filter(col("doc_id") % 4 === r), sliceDir))
-      })
-      mergeDedupIndexes(spark, slices.map(_._2), s"$d/merged")
-    }
-    probeDedupIndex(spark, docs.filter(col("doc_id") % 4 === 3), s"$root/merged")
+    val merged = IndexStore.mergedSlices("dedup_index_merged", dir, docs)(
+      writeDedupIndexFrom)(mergeDedupIndexes(spark, _, _))
+    probeDedupIndex(spark, docs.filter(col("doc_id") % 4 === 3), merged)
   }
 
   val dedupIndexMergeProbeSql: String =
     dedupIndexProbeSqlFor("doc_id % 4 < 3", "doc_id % 4 = 3")
 
-  /** DELETE path for the persisted exact-dedup index (r15 — the
-    * digest twin of [[writeSimhashIndexTombstones]]; see
-    * [[probeDedupIndex]]'s DELETE scaladoc for the keeper-vanishes
-    * eventual-consistency contract): accumulate taken-down doc_ids
-    * under the hidden `_graft_tombstones` sidecar (hidden because the
-    * index root's non-hidden entries are partition dirs the reader
-    * scans as data). Shared [[accumulateTombstones]] semantics:
-    * appends accumulate, duplicates inert, no absent-dest crash
-    * window, single-writer under quiesce. Takes effect on the next
-    * [[probeDedupIndex]] with NO index rewrite; [[compactDedupIndex]]
-    * is the hard-forget. */
+  /** DELETE path for the persisted exact-dedup index, the digest twin
+    * of [[writeSimhashIndexTombstones]] (see [[probeDedupIndex]]'s
+    * DELETE scaladoc for the keeper-vanishes eventual-consistency
+    * contract). Takes effect on the next [[probeDedupIndex]] with NO
+    * index rewrite; [[compactDedupIndex]] is the hard-forget. */
   def writeDedupIndexTombstones(spark: SparkSession, docIds: DataFrame,
       indexDir: String): Unit =
-    accumulateTombstones(docIds, s"$indexDir/_graft_tombstones", "doc_id")
+    IndexStore.writeTombstones(digestLayout, docIds, indexDir)
 
   /** HARD-FORGET compaction for a tombstoned digest index: rewrite
     * the index minus rows whose KEEPER is tombstoned into a fresh
@@ -1979,23 +1825,10 @@ object TextDedup extends QueryModule {
     * it never reads documents, only index rows. No tombstone table
     * lands in the new dir. */
   def compactDedupIndex(spark: SparkSession, indexDir: String,
-      newDir: String): Unit = {
-    Core.requireDisjointDirs(spark, indexDir, newDir, "compactDedupIndex")
-    val tombPath = s"$indexDir/_graft_tombstones"
-    require(Core.tableExists(spark, tombPath),
-      s"$indexDir carries no committed tombstone table: nothing to forget")
-    val tomb = Core.resolveTombstones(spark, tombPath, None, "doc_id").get
-      .withColumnRenamed("tomb_id", "keep_id")
-    spark.read
-      .schema("digest STRING, keep_id BIGINT, prefix STRING")
-      .parquet(indexDir)
-      .join(broadcast(tomb), Seq("keep_id"), "left_anti")
-      .select(col("digest"), col("keep_id"), col("prefix"))
-      .write.partitionBy("prefix")
-      .mode("overwrite").parquet(newDir)
-  }
+      newDir: String): Unit =
+    IndexStore.compact(spark, digestLayout, indexDir, newDir, "compactDedupIndex")()
 
-  /** REGISTERED exercise of the digest-index DELETE path (r15) under
+  /** REGISTERED exercise of the digest-index DELETE path under
     * the oracle gate. Fixture shape — SF-INVARIANT non-vacuity by
     * construction (the corpus holds NO cross-parity duplicate texts
     * at the parity SFs, so an even/odd split would make the takedown
@@ -2012,12 +1845,10 @@ object TextDedup extends QueryModule {
     * not the dead keeper), through the parquet round-trip. */
   def dedupIndexTombstoneProbe(spark: SparkSession, dir: String): DataFrame = {
     val docs = Core.documents(spark, dir)
-    val idxDir = ProbeTemp.dir("dedup_index_probe", dir)(d =>
-      writeDedupIndexFrom(docs.filter(col("doc_id") % 2 === 0), d))
+    val idxDir = IndexStore.evenHalf("dedup_index_probe", dir, docs)(writeDedupIndexFrom)
     probeDedupIndex(spark,
       docs.withColumn("doc_id", col("doc_id") + lit(10000000000L)), idxDir,
-      tombstoneTable = Some(
-        docs.filter(col("doc_id") % 10 === 4).select("doc_id")))
+      tombstoneTable = Some(docs.filter(col("doc_id") % 10 === 4).select("doc_id")))
   }
 
   /** [[dedupIndexProbeSqlFor]]'s shape with the index filtered to

@@ -467,6 +467,32 @@ class SimilaritySpec extends SparkSpec {
       .filter($"vec_id".isNull || $"vec_id" >= 500000L).isEmpty, "a rejected batch landed rows")
   }
 
+  test("ivf index append rebuilds a torn id sidecar, and the guard still holds after") {
+    // a sidecar materialisation that died mid-write leaves only
+    // `_temporary/`; gating on bare existence would skip the rebuild and
+    // every later append would fail schema inference on the torn dir
+    val idxDir = java.nio.file.Files.createTempDirectory("graft_ivftorn").toString + "/idx"
+    Similarity.writeIvfIndex(spark, sf0001, idxDir)
+    val ids = new java.io.File(s"$idxDir/_graft_ids")
+    org.apache.commons.io.FileUtils.deleteDirectory(ids)
+    assert(new java.io.File(ids, "_temporary/0").mkdirs())
+    val emb = graft.ops.Core.embeddings(spark, sf0001)
+    Similarity.appendToIvfIndex(spark, emb.filter($"vec_id" % 7 === 3)
+      .select(($"vec_id" + 600000L).as("vec_id"), $"embedding"), idxDir)
+    assert(spark.read.parquet(idxDir).filter($"vec_id" >= 600000L).count() ==
+      emb.filter($"vec_id" % 7 === 3).count(), "the fresh batch must land")
+    // reuse of a STANDING id (rebuilt sidecar) and of an APPENDED id
+    // (sidecar kept complete after the append) are both still refused
+    Seq(emb.filter($"vec_id" === 20L).select($"vec_id", $"embedding"),
+        emb.filter($"vec_id" % 7 === 3).limit(1)
+          .select(($"vec_id" + 600000L).as("vec_id"), $"embedding")).foreach { reuse =>
+      val e = intercept[IllegalArgumentException] {
+        Similarity.appendToIvfIndex(spark, reuse, idxDir)
+      }
+      assert(e.getMessage.contains("reuses"), e.getMessage)
+    }
+  }
+
   test("knn label propagation: full coverage, bounded votes, vote matches a recount") {
     val out = Similarity.knnLabelPropagation(spark, sf0001).cache()
     val emb = graft.ops.Core.embeddings(spark, sf0001)

@@ -955,6 +955,42 @@ class StreamingSpec extends SparkSpec {
       "streaming probe must equal the batch probe row-for-row")
   }
 
+  test("streaming IVF probe honours the index's takedowns like the batch probe") {
+    // the stream must probe the LIVE view: a vector tombstoned with
+    // writeIvfTombstones may not come back as a neighbour from the
+    // stream while probeIvfIndex excludes it
+    implicit val sqlCtx = spark.sqlContext
+    val indexDir = java.nio.file.Files.createTempDirectory("graft_sivft").toString + "/idx"
+    val outDir = java.nio.file.Files.createTempDirectory("graft_sivft_o").toString + "/out"
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_sivft_c").toString
+    graft.ops.Similarity.writeIvfIndex(spark, sf0001, indexDir)
+    val emb = graft.ops.Core.embeddings(spark, sf0001)
+    val unfiltered = graft.ops.Similarity.probeIvfIndex(spark, indexDir)
+    graft.ops.Similarity.writeIvfTombstones(spark,
+      emb.filter($"vec_id" % 10 === 7).select("vec_id"), indexDir)
+    val queries = emb.filter($"vec_id" % 50 === 0)
+      .select($"vec_id", $"embedding")
+      .as[(Long, Seq[Float])].collect().toSeq
+    val src = MemoryStream[(Long, Seq[Float])]
+    val q = graft.ops.Similarity.streamingIvfProbe(spark,
+      src.toDF().toDF("vec_id", "embedding"), indexDir, outDir, ckpt)
+    try {
+      val (first, rest) = queries.splitAt(4)
+      src.addData(first: _*)
+      q.processAllAvailable()
+      src.addData(rest: _*)
+      q.processAllAvailable()
+    } finally q.stop()
+    val got = spark.read.parquet(outDir).drop("batch_id")
+    val expect = graft.ops.Similarity.probeIvfIndex(spark, indexDir)
+    assert(unfiltered.filter($"vec_id" % 10 === 7).count() > 0,
+      "fixture vacuous: the takedown slice must hold some unfiltered neighbour")
+    assert(got.filter($"vec_id" % 10 === 7).isEmpty, "a tombstoned vector came back from the stream")
+    assert(got.count() == expect.count() && got.count() > 0)
+    assert(got.exceptAll(expect).isEmpty && expect.exceptAll(got).isEmpty,
+      "streaming probe must equal the batch probe over the live index")
+  }
+
   test("streaming dedup probe equals the per-batch probe against the persisted index") {
     implicit val sqlCtx = spark.sqlContext
     val idxDir = java.nio.file.Files.createTempDirectory("graft_sdix").toString + "/idx"
