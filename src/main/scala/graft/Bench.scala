@@ -53,15 +53,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.toolSession()
     // Warm up JIT/codegen + parquet reader paths so the first measured
     // query doesn't absorb one-time session cost (~7s on this box).
     // Warm at the smallest sibling scale factor of the bench dir (not a
@@ -410,7 +402,7 @@ object Bench {
         s"outside the clean bands (scan <= $cleanScanMax s, steal <= $stealBandPct%) " +
         "— totals are not comparable round-over-round")
     // streaming floor check (r14, VERDICT r13 #3): the committed
-    // StreamBench-isolated clean band — a clean IN-BENCH run (JIT
+    // isolated clean band — a clean IN-BENCH run (JIT
     // pre-warmed by the batch sweep) always clears the isolated floor,
     // so a metric below it is positively degraded (host steal if a
     // steal_* member agrees, a regression if the run is otherwise
@@ -575,15 +567,15 @@ object Bench {
     * cluster's connector.
     *
     * The r4->r5 dip (bars 72k->61k, DAG 2.53k->2.19k ev/s) was
-    * measured down (r5 verdict #4), cold-JVM StreamBench x3 at the
-    * pinned width with nothing else on the box: bars
+    * measured down (r5 verdict #4), this streaming section alone in 3
+    * cold JVMs at the pinned width with nothing else on the box: bars
     * 30.8k/28.2k/21.1k (+-19% spread between IDENTICAL runs), DAG
     * 2.09k/1.80k/2.19k (+-10%) — and `streamingBars`/`referenceDag`
     * are byte-identical r4->HEAD (git-diffed), so the -16%/-13%
     * round-over-round delta sits inside the run-to-run spread of an
     * unchanged plan: JIT/code-cache state of the shared bench JVM
     * (the batch sweep that precedes this section warms it — absolute
-    * StreamBench-alone numbers run ~2x lower than in-Bench for the
+    * section-alone numbers run ~2x lower than in-Bench for the
     * same plan) plus box variance, not a regression. Rep 3's bars low
     * (21.1k) paired with its indfull HIGH (22.5k vs 16.4k/15.1k)
     * shows the noise is anticorrelated across stages, i.e. not a
@@ -624,12 +616,12 @@ object Bench {
   private def loadAvg(): Double = java.lang.management.ManagementFactory
     .getOperatingSystemMXBean.getSystemLoadAverage
 
-  /** StreamBench-ISOLATED clean floors (r14, VERDICT r13 #3):
-    * events/sec measured by `runMain graft.StreamBench 4` (the
-    * in-Bench width pin), N=3 cold JVMs on a steal-clean box —
-    * /proc/stat steal deltas 23/26/137 jiffies over ~3 min runs,
-    * i.e. <= 0.03% of capacity. Measured (bars / indfull / ivfprobe /
-    * dag / rocksdb / tuned ev-or-vec/s):
+  /** ISOLATED clean floors (r14, VERDICT r13 #3): events/sec of
+    * [[streamingBenchBody]] run alone at width 4 (the in-Bench width
+    * pin) by the since-retired StreamBench main, N=3 cold JVMs on a
+    * steal-clean box — /proc/stat steal deltas 23/26/137 jiffies over
+    * ~3 min runs, i.e. <= 0.03% of capacity. Measured (bars /
+    * indfull / ivfprobe / dag / rocksdb / tuned ev-or-vec/s):
     *   run1: 34664 / 28651 / 2180 / 2422 / 1998 / 7365
     *   run2: 37574 / 29294 / 2192 / 2346 / 1929 / 7267
     *   run3: 29087 / 28264 / 2053 / 2006 / 1831 / 6889
@@ -642,10 +634,11 @@ object Bench {
     * streaming section (in-Bench clean bars run ~2x isolated); a
     * metric below its floor is positively degraded — host steal if a
     * steal_* verdict member agrees, a plan regression otherwise.
-    * Re-record with StreamBench after any streaming-plan change.
+    * Re-record (the same body alone, cold JVMs) after any
+    * streaming-plan change.
     *
     * r16 RE-ADJUDICATION (VERDICT r15 #1 — the r15 twin's 17-31%
-    * streaming drop): 4 cold-JVM StreamBench runs at the r15 source,
+    * streaming drop): 4 isolated cold-JVM runs at the r15 source,
     * each stamped with its own /proc/stat steal delta, give a clean
     * DOSE-RESPONSE curve (bars / indfull / ivfprobe / dag / rocksdb /
     * tuned ev-or-vec/s @ steal%):
@@ -664,7 +657,7 @@ object Bench {
     * when the round's record is taken.
     *
     * fmby (r17, VERDICT r16 #1 — the per-series matrix's first
-    * throughput record): `runMain graft.StreamBench fmby 4`, six
+    * throughput record): [[fmbyBench]] alone at width 4, six
     * steal-stamped cold JVMs on a day the box ran load-correlated
     * steal bursts (idle stamps 0%, in-run stamps 0.09-0.90%):
     * 23435 @ 0.32% / 18432 @ 0.09% / 21721 @ 0.90% / 22028 @ 0.78% /
@@ -692,7 +685,7 @@ object Bench {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     // Stateful streaming pays per-partition state-store overhead every
     // micro-batch, so the right width tracks state VOLUME, not core
-    // count. StreamBench sweep on this DAG (dag events/s, HDFS store /
+    // count. Isolated width sweep on this DAG (dag events/s, HDFS store /
     // RocksDB): width 2 -> 2540/1915, 4 -> 2395/1931, 8 -> 1699/1327,
     // 16 -> 1173/769 — monotone in per-batch store overhead once state
     // fits anywhere. Pin 4 (within ~6% of width 2 on the DAG, better on
@@ -718,51 +711,46 @@ object Bench {
     * volume at play: 64 series x ~35 in-flight 175-min windows on the
     * frame agg + 64 x in-flight 5-min buckets on the bar agg.
     *
-    * SERIES-CARDINALITY SWEEP (r17, `runMain graft.StreamBench fmby 4
-    * <series> 60`, cold JVM per point, per-run steal stamps <= ~0.5%
-    * unless noted): 64 series 22.2k ev/s (0.19%), 512 series 69.3k
-    * (0.12%), 1024 series 79.4k (0.51%) — throughput RISES ~3.6x from 64 to
-    * 1024 keys at fixed per-series depth and fixed 8-chunk feed,
-    * because the per-micro-batch fixed cost (incremental planning +
-    * one state-store commit per partition per stateful op) amortizes
+    * SERIES-CARDINALITY SWEEP (r17, width 4, 60 bars per series, cold
+    * JVM per point, per-run steal stamps <= ~0.5% unless noted): 64
+    * series 22.2k ev/s (0.19%), 512 series 69.3k (0.12%), 1024 series
+    * 79.4k (0.51%) — throughput RISES ~3.6x from 64 to 1024 keys at
+    * fixed per-series depth and fixed 8-chunk feed, because the
+    * per-micro-batch fixed cost (incremental planning + one
+    * state-store commit per partition per stateful op) amortizes
     * over the larger keyed batches while per-event work stays flat;
     * 1024 x ~35 in-flight frame windows show no state-store collapse.
     * The 512 -> 1024 flattening (+15%) is the per-event bound
     * (~80k ev/s at width 4) taking over from the per-batch bound — the
     * scale regime a production feed (large batches, many symbols)
     * actually runs in. Full table in STREAMBENCH_r17.md. */
-  private[graft] def fmbyBench(spark: SparkSession,
-      nSeries: Int = 64, barsPerSeries: Int = 60,
-      queryName: String = "bench_fmby"): (Int, Double) = {
+  private[graft] def fmbyBench(spark: SparkSession): (Int, Double) = {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
+    val nSeries = 64
     val evPerBar = 30 // one event per 10s per series -> gapless 5-min bars
-    val n = nSeries * barsPerSeries * evPerBar
+    val n = nSeries * 60 * evPerBar
     val evs = (0 until n).map { i =>
       val step = i / nSeries // all series advance together: one watermark
       (i.toLong, new java.sql.Timestamp(base + step * 10000L),
         f"s${i % nSeries}%02d", ((i * 31) % 997).toDouble)
     }
-    // ceil-divide so the feed is AT MOST 8 chunks for any (series, bars)
-    // — plain n/8 yields a 9th partial chunk when n % 8 != 0, silently
-    // changing the per-batch fixed-cost denominator the sweep compares on
-    val chunk = math.max((n + 7) / 8, 1)
     val ms = MemoryStream[(Long, java.sql.Timestamp, String, Double)]
     val q = graft.streaming.StreamingPipeline.streamingFeatureMatrixBy(
       ms.toDF().toDF("event_id", "ts", "event_type", "value"))
-      .writeStream.format("memory").queryName(queryName)
+      .writeStream.format("memory").queryName("bench_fmby")
       .outputMode("append").start()
     val (rows, secs) = try {
       val t0 = System.nanoTime()
-      evs.grouped(chunk).foreach(ms.addData(_))
+      evs.grouped(n / 8).foreach(ms.addData(_))
       q.processAllAvailable()
       // clock stops BEFORE the sink count (r17 review): every other
       // streaming metric times exactly through processAllAvailable,
       // and the count is a sanity gate, not part of the work measured
       val sec = (System.nanoTime() - t0) / 1e9
-      (spark.table(queryName).count(), sec)
+      (spark.table("bench_fmby").count(), sec)
     } finally q.stop()
     require(rows > 0, s"fmby produced no rows over $n events")
     (n, secs)
@@ -860,8 +848,8 @@ object Bench {
       case t: Throwable =>
         System.err.println(s"[bench] WARNING: RocksDB DAG run failed: $t"); -1.0
     }
-    // The tuned regime the r11 StreamBench probe + r12 dagprofile
-    // proved out: the pivot DAG shape (referenceDagPivot — one tagged
+    // The tuned regime the r11 forced-batch probe + r12 structural
+    // profile proved out: the pivot DAG shape (referenceDagPivot — one tagged
     // interval join + one windowed pivot agg replacing 4 widening
     // joins + full-row dedup), batch size up (one MemoryStream chunk
     // instead of four — the trigger-interval lever in driver form),

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Plan-inspection tool: dumps explain("formatted") for every query so
@@ -18,22 +17,12 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.lift(1).getOrElse("/tmp/plans.txt")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkEntry.toolSession("ERROR")
     val sb = new StringBuilder
     args.lift(2) match {
       case Some(name) =>
-        // variants reachable too (like JobProfile), so a candidate
-        // shape's executed plan can be audited before promotion
-        val fn = SparkEntry.queries.get(name).orElse(QBench.variants.get(name))
-          .getOrElse(
-            sys.error(s"unknown query '$name'; known: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}"))
+        val fn = SparkEntry.queries.getOrElse(name,
+          sys.error(s"unknown query '$name'; known: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}"))
         val df = fn(spark, sfDir)
         val t0 = System.nanoTime()
         df.collect() // collect (not count) so metrics land on THIS plan

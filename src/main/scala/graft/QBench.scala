@@ -1,76 +1,77 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.GraftTaskIO
 
 /** Single-query cold-JVM bench: the measurement tool behind the
   * "measured cold-JVM at sf0.1" comments throughout the operator
   * modules. `run / fork := true` gives every `runMain` a fresh JVM, so
-  * two invocations A/B two variants without JIT or page-cache
+  * two invocations A/B two builds without JIT or page-cache
   * cross-talk beyond the OS file cache (identical for both sides).
   *
   * Usage: runMain graft.QBench <sfDir> <query> [reps=3]
-  * `query` is a SparkEntry.queries key or one of the spec-only
-  * baseline variants registered below. Warms the SAME query at the
+  * `query` is a SparkEntry.queries key. Warms the SAME query at the
   * sf0.001 sibling first (like Bench's family warmup), then times
-  * `reps` runs and prints one JSON line with all rep timings — rep0
-  * carries any residual one-time cost, the min is the steady state.
+  * `reps` runs — rep0 carries any residual one-time cost, the min is
+  * the steady state. The last rep is also decomposed per Spark job
+  * (GraftTaskIO's job records): one stderr line per job with its wall
+  * ms, the gap since the previous job ended (pure driver/FS time; the
+  * first job's gap runs from the rep start, so it holds plan
+  * construction), its task count and call site. The final stdout JSON
+  * line carries every rep timing plus the last rep's `jobs`, `job_ms`
+  * (summed job wall time) and `driver_gap_ms` (rep wall time covered
+  * by no job — perfbench's meaning). For the probe queries, whose cost
+  * is dozens of small actions rather than one big scan, the gap is
+  * usually the number that moves.
   */
 object QBench {
-  /** Unregistered baseline twins, reachable by name for A/Bs (shared
-    * with JobProfile so the per-job decomposition can price a variant
-    * before it is promoted). */
-  private[graft] val variants: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ngram_jaccard_prefix" -> ((s, d) => ops.TextDedup.ngramJaccardPairsPrefix(s, d)),
-    "simhash_pairs_broadcast" -> ((s, d) => ops.TextDedup.simhashPairsBroadcast(s, d)),
-    "embed_near_dup_exact" -> ((s, d) => ops.Similarity.cosineNearDupPairsExact(s, d)),
-    "embed_near_dup_16x2" -> ((s, d) => ops.Similarity.cosineNearDupPairsHiRecall(s, d)),
-    "embed_near_dup_lean" -> ((s, d) => ops.Similarity.cosineNearDupPairsLean(s, d)),
-    "embed_near_dup_16x2_lean" -> ((s, d) =>
-      ops.Similarity.cosineNearDupPairsLean(s, d, bands = 16, rows = 2)),
-    "embed_near_dup_16x2_direct" -> ((s, d) =>
-      ops.Similarity.cosineNearDupPairsDirectAt(s, d, 16, 2)),
-    "cdc_chunks_hof" -> ((s, d) => ops.TrainingData.cdcChunksHof(s, d)),
-    "bpe_pairs_hof" -> ((s, d) => ops.TrainingData.bpePairsHof(s, d)),
-    // high-cardinality twins of the keyed window paths (r17, VERDICT
-    // r16 #2): event_id % 1000 as the series column on the same corpus
-    "indicators_by_1k" -> ((s, d) => ops.Indicators.indicatorsByWide(s, d, 1000)),
-    "feature_matrix_by_1k" -> ((s, d) => ops.Indicators.featureMatrixByWide(s, d, 1000)),
-    // r18 one-shuffle aux candidate for interval_join_pivot (A/B'd
-    // before any registered-plan change — see OPTIMIZATION_r18.md)
-    "interval_join_pivot_sharedaux" -> ((s, d) =>
-      ops.Joins.intervalJoinPivotOver(s, d, sharedAux = true))
-  )
-
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: QBench <sfDir> <query> [reps]")
     val sfDir = args(0)
     val name = args(1)
     val reps = if (args.length > 2) args(2).toInt else 3
     require(reps >= 1, s"QBench: reps must be >= 1, got $reps")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val fn = SparkEntry.queries.get(name).orElse(variants.get(name)).getOrElse(
-      sys.error(s"unknown query '$name'; known: " +
-        (SparkEntry.queries.keys ++ variants.keys).toSeq.sorted.mkString(", ")))
+    val fn = SparkEntry.queries.getOrElse(name, sys.error(
+      s"unknown query '$name'; known: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}"))
+    val spark = SparkEntry.toolSession()
+    val io = GraftTaskIO.install(spark)
     val warm = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.001")
     if (warm.isDirectory) fn(spark, warm.getPath).count()
     else System.err.println(
       s"[qbench] WARNING: no sf0.001 sibling of $sfDir — warmup skipped, rep0 absorbs JIT")
-    val times = (0 until reps).map { _ =>
+    def rep(): (Double, Long) = {
       val t0 = System.nanoTime()
       val n = fn(spark, sfDir).count()
       ((System.nanoTime() - t0) / 1e9, n)
     }
+    val early = (1 until reps).map(_ => rep())
+    val s0 = GraftTaskIO.snapshot(spark, io)
+    val w0 = System.currentTimeMillis()
+    val last = rep()
+    val w1 = System.currentTimeMillis()
+    val jobs = (GraftTaskIO.snapshot(spark, io) - s0).jobs.sortBy(_.start)
+    var prevEnd = w0
+    jobs.foreach { j =>
+      System.err.println(f"[qbench] job ${j.id}%5d ${j.end - j.start}%7d ms " +
+        f"gap ${j.start - prevEnd}%6d ms ${j.tasks}%5d tasks  ${j.callSite}")
+      prevEnd = math.max(prevEnd, j.end)
+    }
+    val times = early :+ last
     println(s"""{"query":"$name","sf":"$sfDir","rows":${times.head._2},""" +
       s""""reps":[${times.map(t => f"${t._1}%.3f").mkString(",")}],""" +
-      s""""min":${f"${times.map(_._1).min}%.3f"}}""")
+      s""""min":${f"${times.map(_._1).min}%.3f"},"jobs":${jobs.size},""" +
+      s""""job_ms":${jobs.map(j => j.end - j.start).sum},""" +
+      s""""driver_gap_ms":${uncoveredMs(jobs, w0, w1)}}""")
     spark.stop()
+  }
+
+  /** Milliseconds of [lo, hi] during which none of `jobs` ran. */
+  private[graft] def uncoveredMs(jobs: Seq[GraftTaskIO.Job], lo: Long, hi: Long): Long = {
+    var covered = 0L
+    var reach = lo
+    jobs.sortBy(_.start).foreach { j =>
+      val b = math.min(j.end, hi)
+      if (b > reach) { covered += b - math.max(j.start, reach); reach = b }
+    }
+    (hi - lo) - covered
   }
 }

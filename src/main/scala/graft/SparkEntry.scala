@@ -41,4 +41,21 @@ object SparkEntry {
     require(unknown.isEmpty, s"oracle for unknown queries: $unknown")
     all
   }
+
+  /** The one session every tool main (Bench, QBench, Verify, Explain,
+    * ScanDump and the test-side runners) runs on: `local[n]` with n
+    * shuffle partitions, n from SPARK_GRAFT_CPUS (default 4), UTC, AQE
+    * on, no UI. */
+  private[graft] def toolSession(logLevel: String = "WARN"): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
+  }
 }

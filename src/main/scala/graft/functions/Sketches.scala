@@ -177,8 +177,8 @@ object TokenNgrams {
 /** Character n-grams of a string: element i is code points [i, i+n)
   * of the input; strings shorter than n yield an empty array.
   * Semantically identical to the HOF form `transform(sequence(1,
-  * length(s)-n+1), i -> concat(substr(s,i,1), ...))` (kept as the
-  * QBench baseline `bpe_pairs_hof`) and to the DuckDB oracle's
+  * length(s)-n+1), i -> concat(substr(s,i,1), ...))` it replaced
+  * and to the DuckDB oracle's
   * `s[i] || s[i+1]` — but one codegen'd loop instead of n interpreted
   * substr calls per position, keeping the tokenizer-training pair
   * explode inside WholeStageCodegen. substring() is code-point-based
@@ -224,9 +224,10 @@ object CharNgrams {
   * emit the poly-hash of each chunk (tokens joined with single
   * spaces). Element i is the i-th non-empty chunk in document order —
   * identical to the HOF form (filter(sequence) boundary positions +
-  * transform slot ranges + poly_hash(concat_ws(slice))) kept as the
-  * QBench baseline `cdc_chunks_hof`, but one codegen'd pass instead
-  * of two interpreted lambda layers hashing every token. Empty input
+  * transform slot ranges + poly_hash(concat_ws(slice))) that
+  * TrainingData.cdcChunkStreamHof keeps for the spec, but one
+  * codegen'd pass instead of two interpreted lambda layers hashing
+  * every token. Empty input
   * yields an empty array (no chunks), mirroring the HOF form, which
   * never sees n = 0 from split(). */
 case class CdcChunkHashes(child: Expression, modulus: Int) extends UnaryExpression {

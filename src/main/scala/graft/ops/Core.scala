@@ -78,7 +78,7 @@ object Core {
     * scan partition, so everything up to the first exchange (text
     * normalization, shingling, sketch expressions, band fan-out and
     * its self-join expansion, BPE encode joins that broadcast) runs in
-    * ONE task regardless of core count: JobProfile measured single
+    * ONE task regardless of core count: a per-job profile measured single
     * 2.6-14s one-task jobs inside 8 of the 20 most expensive
     * registered queries. Round-robin to the session's default
     * parallelism when — and only when — the planned frame is narrower

@@ -262,31 +262,20 @@ object Joins extends QueryModule {
     * rows 1,321 -> 13,762 (linear in SF), QBench cold-JVM sf0.01
     * [1.27, 0.90, 0.81]s vs sf0.1 [2.01, 1.42, 1.17]s — ~1.5x for 10x
     * data (fixed overhead dominates); r13's fixed-day fold ran this
-    * gate at 4.79s at sf0.1 and would have gone quadratic past it. */
-  def intervalJoinPivot(spark: SparkSession, dir: String): DataFrame =
-    intervalJoinPivotOver(spark, dir, sharedAux = false)
-
-  /** `sharedAux = true` is the r18 one-shuffle candidate shape: the
-    * four aux feeds derive from ONE groupBy(event_type, ts) aggregate
-    * (each branch then filters its own type), instead of four
-    * independent per-type groupBy(ts) aggregates — identical rows by
-    * construction (the type is a grouping key, so per-(type, ts)
-    * max_by is unchanged). MEASURED NEGATIVE (r18, VERDICT r17 #6,
-    * kept as the documented evidence): Catalyst pushes each branch's
-    * type filter back through the aggregate (a deterministic filter
-    * on a grouping key), recreating four distinct subtrees — the
-    * executed plans of BOTH shapes carry 6 Exchanges / 0 reused / 5
-    * parquet scans (/tmp-audited via graft.Explain, committed in
-    * plans/r18/), so there is no exchange to share and the QBench
-    * delta (1.10 vs 1.37s min-of-4) is noise-level shuffle-key
-    * variation, not a plan win. The registered query keeps the
-    * per-type shape; the query's cost decomposition (JobProfile,
-    * steady state 1.19s: density-gate pass ~0.34s at construction,
-    * the 430ms interval-join+pivot job, and the four aux agg jobs
-    * already overlapping under AQE with negative inter-job gaps) says
-    * the remaining cost IS the pivot itself. */
-  private[graft] def intervalJoinPivotOver(spark: SparkSession, dir: String,
-      sharedAux: Boolean): DataFrame = {
+    * gate at 4.79s at sf0.1 and would have gone quadratic past it.
+    *
+    * The four aux feeds keep one groupBy(ts) aggregate each. Deriving
+    * them from ONE groupBy(event_type, ts) aggregate (each branch
+    * filtering its own type) was measured negative in r18: Catalyst
+    * pushes each branch's type filter back through the aggregate (a
+    * deterministic filter on a grouping key), recreating four
+    * distinct subtrees, so both shapes execute 6 Exchanges / 0 reused
+    * / 5 parquet scans (plans/r18/) and there is no exchange to share.
+    * The query's per-job decomposition (steady state 1.19s:
+    * density-gate pass ~0.34s at construction, the 430ms
+    * interval-join+pivot job, and the four aux agg jobs already
+    * overlapping under AQE) says the remaining cost IS the pivot. */
+  def intervalJoinPivot(spark: SparkSession, dir: String): DataFrame = {
     val ev0 = Core.events(spark, dir)
     val stats = ev0.agg(
       min(unix_micros(col("ts"))).as("mn"),
@@ -298,18 +287,10 @@ object Joins extends QueryModule {
     val ev = ev0.withColumn("ts", timestamp_micros(unix_micros(col("ts")) % modulus))
     val deep = ev.filter(col("event_type") === "purchase")
       .select(col("event_id"), col("ts"), col("value"))
-    val auxAgg: String => DataFrame =
-      if (sharedAux) {
-        val all = ev
-          .filter(col("event_type").isin("view", "click", "signup", "error"))
-          .groupBy(col("event_type"), col("ts"))
-          .agg(max_by(col("value"), col("event_id")).as("v0"))
-        t => all.filter(col("event_type") === t).select(col("ts"), col("v0"))
-      } else { t =>
-        ev.filter(col("event_type") === t)
-          .groupBy(col("ts"))
-          .agg(max_by(col("value"), col("event_id")).as("v0"))
-      }
+    def auxAgg(t: String): DataFrame =
+      ev.filter(col("event_type") === t)
+        .groupBy(col("ts"))
+        .agg(max_by(col("value"), col("event_id")).as("v0"))
     val auxes = Seq(
       "vix" -> auxAgg("view").select(col("ts"), col("v0").as("vix")),
       "vol" -> auxAgg("click").select(col("ts"),

@@ -519,7 +519,7 @@ object Relational extends QueryModule {
       // one the join plans anyway — but a USER-pinned partition count
       // stops AQE's input-byte coalescing from narrowing the quadratic
       // bucket expansion to 1-2 tasks (bytes IN say nothing about
-      // pairs OUT; JobProfile measured the join stage at 2 tasks
+      // pairs OUT; a per-job profile measured the join stage at 2 tasks
       // carrying ~80% of the query under AQE's advisory sizing)
       .repartition(spark.sparkContext.defaultParallelism, col("bucket"))
     withB.as("a").join(withB.as("b"),

@@ -417,9 +417,9 @@ object Similarity extends QueryModule {
     * JVM simply reached it colder (18 new queries between it and the
     * family warmup diluted JIT/code-cache locality). The
     * exchange-reuse suspect was also tested head-on: a
-    * late-materialization twin ([[cosineNearDupPairsLean]], QBench
-    * `embed_near_dup_lean`) that shuffles only (vec_id, band, bkey)
-    * and re-joins vectors for the verify measured 2.14/1.57/1.47/1.25
+    * late-materialization twin ([[cosineNearDupPairsLean]]) that
+    * shuffles only (vec_id, band, bkey) and re-joins vectors for the
+    * verify measured 2.14/1.57/1.47/1.25
     * — a tie at this SF (within noise steady, worse cold: two extra
     * joins to codegen). The direct form stays registered; the lean
     * shape becomes preferable when embedding payload dominates the
@@ -580,13 +580,12 @@ object Similarity extends QueryModule {
     * and recorded "the lean shape becomes preferable when embedding
     * payload dominates the band shuffle (dims >> 32 or bands > 8)" —
     * and every hi-recall tier has 16 bands. Re-measured head-on at
-    * the 16x2 point (QBench `embed_near_dup_16x2_direct` vs
-    * `embed_near_dup_16x2_lean` — the direct baseline stays reachable
-    * through [[cosineNearDupPairsDirectAt]]; fresh JVMs, sf0.1): direct
-    * 6.46/6.27s, lean 4.43/3.42/3.23s (with the duplicate-id terminal
-    * distinct; 2.95s without) — ~2x, identical 908
-    * rows, because the 16-way band fan-out otherwise shuffles the
-    * ~150-byte embedding+norm payload 16 times per vector where the
+    * the 16x2 point (direct vs lean banded shape at 16 bands of 2
+    * rows, fresh JVMs, sf0.1): direct 6.46/6.27s, lean
+    * 4.43/3.42/3.23s (with the duplicate-id terminal distinct; 2.95s
+    * without) — ~2x, identical 908 rows, because the 16-way band
+    * fan-out otherwise shuffles the ~150-byte embedding+norm payload
+    * 16 times per vector where the
     * lean shape shuffles 24-byte keys and joins vectors back once
     * per DISTINCT candidate. The 8x4 registered point keeps the
     * direct shape (measured tie, better cold). Output sets are
@@ -613,7 +612,7 @@ object Similarity extends QueryModule {
       cosineNearDupPairsLean(spark, dir, ndThreshold, bands, rows))
   }
 
-  /** Forced-tier variant for measurement (QBench A/B, TierMeasure) —
+  /** Forced-tier variant for measurement (TierMeasure) —
     * not registered; runs the SAME lean shape as the adaptive pick so
     * tier measurements price the production plan. */
   private[graft] def cosineNearDupPairsAt(spark: SparkSession, dir: String,
@@ -650,7 +649,7 @@ object Similarity extends QueryModule {
     * verify — the band shuffle carries 24 bytes/row instead of the
     * ~150-byte embedding+norm payload, at the price of two extra
     * vec_id joins. Born as the A/B twin of [[cosineNearDupPairs]]
-    * (QBench `embed_near_dup_lean`: tie at 8 bands), PROMOTED in r9
+    * (tie at 8 bands), PROMOTED in r9
     * to the production shape of every hi-recall tier
     * ([[cosineNearDupPairsHiRecall]]: measured 2.1x at 16 bands).
     * Output set provably equals the direct shape's (same bands, same
@@ -671,7 +670,7 @@ object Similarity extends QueryModule {
     // candidate expansion (the quadratic-in-bucket term), and the
     // cosine verify all run pre-exchange when the corpus is a narrow
     // scan and the planner broadcasts the small build side —
-    // JobProfile measured the whole generator as ONE 2.6s task
+    // a per-job profile measured the whole generator as ONE 2.6s task
     val emb = Core.spreadNarrowScan(corpus)
       .select(col("vec_id"), col("embedding"),
         sqrt(dot(col("embedding"), col("embedding"))).as("norm"))
@@ -699,14 +698,6 @@ object Similarity extends QueryModule {
       // on unique-id corpora.
       .distinct()
   }
-
-  /** Forced-DIRECT banded generator at caller-chosen geometry — kept
-    * so the lean-vs-direct A/B behind the r9 promotion stays
-    * reproducible at HEAD (QBench `embed_near_dup_16x2_direct`):
-    * without it no code path reaches the direct shape at 16 bands. */
-  private[graft] def cosineNearDupPairsDirectAt(spark: SparkSession,
-      dir: String, bands: Int, rows: Int): DataFrame =
-    bandedNearDupPairs(spark, dir, ndThreshold, bands, rows)
 
   /** THE PRODUCTION-THRESHOLD REGIME, oracle-gated (r9/r10 verdict:
     * the claim that "production near-dup thresholds >= 0.9 keep p^r

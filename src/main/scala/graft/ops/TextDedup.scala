@@ -370,7 +370,7 @@ object TextDedup extends QueryModule {
   def dedupExactNormalized(spark: SparkSession, dir: String): DataFrame =
     // spreadNarrowScan: the NFC/case/control normalization is the
     // per-row-heavy term and runs pre-exchange — single-task on a
-    // narrow scan (JobProfile: one 1-task job carried ~95% of the
+    // narrow scan (per-job profile: one 1-task job carried ~95% of the
     // query) — while the digest groupBy only spreads AFTER it
     textNormalizeFrom(Core.spreadNarrowScan(Core.documents(spark, dir)))
       .groupBy(md5(col("text_norm").cast("binary")).as("digest"))

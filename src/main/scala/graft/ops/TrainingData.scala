@@ -355,9 +355,9 @@ object TrainingData extends QueryModule {
   /** The HOF baseline the native kernel replaced: boundary positions
     * via filter(sequence) — an interpreted poly_hash per token — then
     * slot ranges via transform and a second poly_hash over each
-    * chunk's concat_ws(slice). Kept spec-equal + QBench-reachable
-    * (`cdc_chunks_hof`); the tail slot is empty exactly when the last
-    * token is a boundary, hence the s <= e filter. */
+    * chunk's concat_ws(slice). Kept as the boundary-invariance spec's
+    * independent reference; the tail slot is empty exactly when the
+    * last token is a boundary, hence the s <= e filter. */
   private[graft] def cdcChunkStreamHof(df: DataFrame): DataFrame = {
     val base = withToks(df).select(col("doc_id"), toks, size(toks).as("n"))
     // 1-based positions of boundary tokens; poly_hash is in [0, P) so
@@ -391,10 +391,6 @@ object TrainingData extends QueryModule {
 
   def cdcChunks(spark: SparkSession, dir: String): DataFrame =
     cdcSummary(cdcChunkStream(Core.documents(spark, dir)))
-
-  /** QBench twin of [[cdcChunks]] over the interpreted HOF chunk build. */
-  private[graft] def cdcChunksHof(spark: SparkSession, dir: String): DataFrame =
-    cdcSummary(cdcChunkStreamHof(Core.documents(spark, dir)))
 
   val cdcChunksSql: String = {
     val tokHash = TextDedup.charHashSql("t[p]")
@@ -522,39 +518,25 @@ object TrainingData extends QueryModule {
     * pairs per token), one count shuffle on the pair, and a
     * TakeOrderedAndProject top-k — per-partition heaps, no global
     * sort, same shape as vocab_topk. Single-char tokens contribute no
-    * pairs (filtered before the lambda — Spark's sequence() runs
-    * DESCENDING when stop < start, so an unguarded length−1 bound
-    * would fabricate pairs for empty tokens). */
+    * pairs (filtered before the pair build, as the oracle's WHERE
+    * does). The pairs come from the native char_ngrams kernel; it
+    * replaced a per-position substr-concat lambda (cold-JVM A/B at
+    * sf0.1, reps: kernel 0.64/0.54/0.47s vs lambda 1.39/0.99/0.90s —
+    * the explode feeds straight from the codegen'd scan either way; the
+    * win is the per-position lambda interpretation). */
   private val defaultBpeK = 20
 
   // k is NOT a parameter on the registered form (same oracle-drift
   // rule as ngramLm): the SQL bakes in defaultBpeK
-  def bpePairs(spark: SparkSession, dir: String): DataFrame =
-    bpePairsCore(spark, dir, defaultBpeK,
-      tok => graft.functions.char_ngrams(tok, 2))
-
-  /** The interpreted-HOF pair build the native char_ngrams kernel
-    * replaced (QBench `bpe_pairs_hof`): one substr-concat lambda per
-    * position. Cold-JVM A/B at sf0.1 (reps): kernel 0.64/0.54/0.47s vs
-    * HOF 1.39/0.99/0.90s — the explode feeds straight from the
-    * codegen'd scan either way; the win is the per-position lambda
-    * interpretation. */
-  private[graft] def bpePairsHof(spark: SparkSession, dir: String): DataFrame =
-    bpePairsCore(spark, dir, defaultBpeK,
-      tok => transform(
-        sequence(lit(1), length(tok) - 1),
-        i => concat(tok.substr(i, lit(1)), tok.substr(i + 1, lit(1)))))
-
-  private def bpePairsCore(spark: SparkSession, dir: String, k: Int,
-      pairsOf: Column => Column): DataFrame = {
+  def bpePairs(spark: SparkSession, dir: String): DataFrame = {
     val tok = col("tok")
     withToks(Core.documents(spark, dir))
       .select(explode(toks).as("tok"))
       .filter(length(tok) >= 2)
-      .select(explode(pairsOf(tok)).as("pair"))
+      .select(explode(graft.functions.char_ngrams(tok, 2)).as("pair"))
       .groupBy("pair").agg(count(lit(1)).as("n_occurrences"))
       .orderBy(col("n_occurrences").desc, col("pair"))
-      .limit(k)
+      .limit(defaultBpeK)
   }
 
   val bpePairsSql: String =
@@ -757,8 +739,8 @@ object TrainingData extends QueryModule {
         .cast("int").as("tok_id"))
     val enc = merged.select(col("w"), split(col("s"), " ").as("syms"))
     // spreadNarrowScan: the double posexplode + two broadcast joins of
-    // the id-emission chain run pre-exchange — JobProfile measured the
-    // whole encode as ONE task on the narrow bench scan
+    // the id-emission chain run pre-exchange — a per-job profile
+    // measured the whole encode as ONE task on the narrow bench scan
     val words = withToks(Core.spreadNarrowScan(df))
       .select(col("doc_id"), posexplode(toks))
       .toDF("doc_id", "wpos", "w")

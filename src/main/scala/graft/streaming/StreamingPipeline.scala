@@ -127,27 +127,19 @@ object StreamingPipeline {
 
   /** As [[referenceDag]], deduplicating on `dedupKeys` instead of the
     * full row when non-empty. Full-row dedup stores and hashes every
-    * joined WIDE row in the dedup state store — StreamBench dagprofile
-    * measured it at ~32% of the whole DAG's cost (aux4 12.76 s with vs
-    * 8.66 s without, 20k events) — while a key subset that identifies
-    * the message (the deep event id plus each aux's timestamp: every
-    * other column is functionally dependent on those under
-    * deterministic sources, so at-least-once replay duplicates —
-    * the thing this stage exists to drop — always collide on them)
-    * keeps only the keys in state. Semantics differ from full-row
-    * dedup ONLY if two joined rows agree on all keys but differ in a
-    * payload column, which deterministic replay cannot produce. */
+    * joined WIDE row in the dedup state store — a structural profile
+    * of the DAG (r12) measured it at ~32% of the whole DAG's cost
+    * (aux4 12.76 s with vs 8.66 s without, 20k events) — while a key
+    * subset that identifies the message (the deep event id plus each
+    * aux's timestamp: every other column is functionally dependent on
+    * those under deterministic sources, so at-least-once replay
+    * duplicates — the thing this stage exists to drop — always
+    * collide on them) keeps only the keys in state. Semantics differ
+    * from full-row dedup ONLY if two joined rows agree on all keys but
+    * differ in a payload column, which deterministic replay cannot
+    * produce. */
   def referenceDag(deep: DataFrame, auxes: Seq[(String, DataFrame)],
       dedupKeys: Seq[String]): DataFrame = {
-    val joined = referenceDagJoins(deep, auxes)
-    if (dedupKeys.isEmpty) joined.dropDuplicatesWithinWatermark()
-    else joined.dropDuplicatesWithinWatermark(dedupKeys)
-  }
-
-  /** The join stage of [[referenceDag]] without the trailing dedup —
-    * separated so StreamBench's dagprofile mode can time the DAG's
-    * stateful stages independently. */
-  def referenceDagJoins(deep: DataFrame, auxes: Seq[(String, DataFrame)]): DataFrame = {
     val deepW = deep.withColumn("bucket", bucket5m(col("ts")))
       .withWatermark("ts", "5 minutes")
     val joined = auxes.foldLeft(deepW) { case (acc, (name, aux)) =>
@@ -169,7 +161,8 @@ object StreamingPipeline {
         case c => col(c)
       }: _*)
     }
-    joined
+    if (dedupKeys.isEmpty) joined.dropDuplicatesWithinWatermark()
+    else joined.dropDuplicatesWithinWatermark(dedupKeys)
   }
 
   /** Throughput twin of [[referenceDag]]: same wide output, 2 stateful
@@ -187,8 +180,8 @@ object StreamingPipeline {
     * rows once, and one pivot row per matched deep event. The dedup
     * stage disappears entirely: at-least-once replay duplicates land
     * in the SAME pivot group and the max-when collapses them, which is
-    * exactly the idempotence full-row dedup bought. StreamBench
-    * dagprofile (20k deep events, one data batch, cold JVM, quiet box):
+    * exactly the idempotence full-row dedup bought. Structural DAG
+    * profile (20k deep events, one data batch, cold JVM, quiet box):
     * chain 12.8 s / pivot 3.6 s — 3.5x. Semantics match [[referenceDag]]
     * exactly when each deep event matches <= 1 row per aux stream (the
     * reference cadence: one polled aux value per 5-min bucket); with
@@ -292,14 +285,14 @@ object StreamingPipeline {
   /** Throughput-regime configuration for [[referenceDag]] (and any
     * deep stateful DAG built from this layer).
     *
-    * The StreamBench forced-batch probe (r11) measured the DAG's cost
-    * model: ~4.7 s of FIXED cost per micro-batch cycle (incremental
-    * planning + one state-store commit/snapshot per partition per
+    * A forced-batch probe (r11) measured the DAG's cost model: ~4.7 s
+    * of FIXED cost per micro-batch cycle (incremental planning + one
+    * state-store commit/snapshot per partition per
     * stateful operator — this DAG has 9) against an ~8.5 s per-event
     * floor at 20k events, and ~40% of that fixed cost is the NO-DATA
     * micro-batch that follows every data batch to advance the
-    * watermark and flush closed windows. The r12 dagprofile split the
-    * per-event floor too: it is dominated by the 4 widening joins +
+    * watermark and flush closed windows. The r12 structural profile
+    * split the per-event floor too: it is dominated by the 4 widening joins +
     * full-row dedup — a DAG-SHAPE cost, removed by
     * [[referenceDagPivot]] (measured 2.6x). Levers, in order:
     *

@@ -2,22 +2,25 @@ package org.apache.spark
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
+  SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
-/** Cumulative task-level I/O counters for the bench artifact: input
-  * bytes read, shuffle bytes written/read, and bytes spilled, summed
-  * over every completed task since install. Bench snapshots the
-  * counters around each query's first rep, so the artifact carries a
-  * per-query I/O profile next to the timing — the number that says
-  * WHY a query costs what it costs, and the one that predicts scale
-  * behavior better than seconds do: at 1000 executors the wall-clock
-  * re-shuffles, but bytes-shuffled-per-input-byte is the plan's own
-  * constant. A query whose shuffle volume is a large multiple of its
-  * input has a scale bottleneck regardless of how fast this box runs
-  * it; one whose input bytes exceed its pruned-column expectation is
-  * missing pushdown (ScanAuditSpec gates the latter statically; this
-  * measures it).
+/** The engine's one Spark listener: cumulative task-level I/O
+  * counters (input bytes read, shuffle bytes written/read, bytes
+  * spilled, summed over every completed task since install) and one
+  * record per finished job. QBench reads the job records of its last
+  * rep (per-job wall time and the driver gap between jobs). Bench
+  * snapshots the counters around each query's first rep, so the
+  * artifact carries a per-query I/O profile next to the timing — the
+  * number that says WHY a query costs what it costs, and the one that
+  * predicts scale behavior better than seconds do: at 1000 executors
+  * the wall-clock re-shuffles, but bytes-shuffled-per-input-byte is
+  * the plan's own constant. A query whose shuffle volume is a large
+  * multiple of its input has a scale bottleneck regardless of how
+  * fast this box runs it; one whose input bytes exceed its
+  * pruned-column expectation is missing pushdown (ScanAuditSpec
+  * gates the latter statically; this measures it).
   *
   * Lives in the `org.apache.spark` package for the same reason
   * `GraftIterativeCheckpoint` lives in `o.a.s.sql`: the one
@@ -34,11 +37,20 @@ import org.apache.spark.sql.SparkSession
   * twice counts twice, which is exactly the per-query attribution the
   * bench wants. */
 object GraftTaskIO {
+  /** One finished Spark job: id, start and end (epoch ms, the
+    * listener's event times), task count over its stages, and its
+    * short call site (`collect at Foo.scala:12`). */
+  final case class Job(id: Int, start: Long, end: Long, tasks: Int, callSite: String)
+
   final class Counters private[GraftTaskIO] () extends SparkListener {
     private[GraftTaskIO] val input = new AtomicLong
     private[GraftTaskIO] val shuffleWrite = new AtomicLong
     private[GraftTaskIO] val shuffleRead = new AtomicLong
     private[GraftTaskIO] val spill = new AtomicLong
+    // written only by this listener's bus thread; the volatile read in
+    // `snapshot` (after the drain) sees every job that ended before it
+    private val started = new java.util.HashMap[Int, SparkListenerJobStart]
+    @volatile private[GraftTaskIO] var jobs = Vector.empty[Job]
 
     override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
       val m = te.taskMetrics
@@ -49,14 +61,25 @@ object GraftTaskIO {
         spill.addAndGet(m.diskBytesSpilled)
       }
     }
+
+    override def onJobStart(js: SparkListenerJobStart): Unit = started.put(js.jobId, js)
+
+    override def onJobEnd(je: SparkListenerJobEnd): Unit =
+      Option(started.remove(je.jobId)).foreach { js =>
+        // the result stage (highest id) is named by the job's short call site
+        val site = js.stageInfos.maxByOption(_.stageId).fold("")(_.name)
+        jobs :+= Job(js.jobId, js.time, je.time, js.stageInfos.map(_.numTasks).sum, site)
+      }
   }
 
-  /** (input, shuffle write, shuffle read, disk spill) in bytes. */
+  /** (input, shuffle write, shuffle read, disk spill) in bytes, and the
+    * jobs that have ended, in end order. A delta `b - a` holds the
+    * byte deltas and the jobs that ended between the two snapshots. */
   final case class Snapshot(input: Long, shuffleWrite: Long,
-      shuffleRead: Long, spill: Long) {
+      shuffleRead: Long, spill: Long, jobs: Vector[Job]) {
     def -(o: Snapshot): Snapshot = Snapshot(input - o.input,
       shuffleWrite - o.shuffleWrite, shuffleRead - o.shuffleRead,
-      spill - o.spill)
+      spill - o.spill, jobs.drop(o.jobs.size))
   }
 
   def install(spark: SparkSession): Counters = {
@@ -66,13 +89,13 @@ object GraftTaskIO {
   }
 
   /** Drain the listener bus, then read the counters — exact as of
-    * every task that has COMPLETED when this is called. A bus that
-    * cannot drain in 10s (a stuck listener elsewhere) yields a stale
-    * read rather than an exception: I/O attribution is bench
+    * every task and job that has COMPLETED when this is called. A bus
+    * that cannot drain in 10s (a stuck listener elsewhere) yields a
+    * stale read rather than an exception: I/O attribution is bench
     * evidence, never worth failing the run over. */
   def snapshot(spark: SparkSession, c: Counters): Snapshot = {
     try spark.sparkContext.listenerBus.waitUntilEmpty(10000L)
     catch { case _: java.util.concurrent.TimeoutException => }
-    Snapshot(c.input.get, c.shuffleWrite.get, c.shuffleRead.get, c.spill.get)
+    Snapshot(c.input.get, c.shuffleWrite.get, c.shuffleRead.get, c.spill.get, c.jobs)
   }
 }

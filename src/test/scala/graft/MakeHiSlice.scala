@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
@@ -33,13 +32,7 @@ object MakeHiSlice {
     val outDir = if (args.length > 1) args(1) else "/tmp/sfhi"
     val copies = if (args.length > 2) args(2).toInt else 5
 
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkEntry.toolSession("ERROR")
 
     Files.createDirectories(Paths.get(outDir))
     val tables = Seq("region", "nation", "customer", "supplier", "part",

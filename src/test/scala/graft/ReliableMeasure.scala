@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** One-off measurement runner for the reliable-checkpoint overhead
   * (r14, VERDICT r13 #4): `Test/runMain graft.ReliableMeasure [reps]`
   * times the connected-components loop over the sf0.1 hi-recall
@@ -22,14 +20,7 @@ import org.apache.spark.sql.SparkSession
   * when the loop's runtime dwarfs a restart" carries a number. */
 object ReliableMeasure {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkEntry.toolSession("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = args.headOption.map(_.toInt).getOrElse(3)
     // steal jiffies (field 8 of the aggregate cpu line) + host-visible

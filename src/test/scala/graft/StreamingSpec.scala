@@ -716,6 +716,53 @@ class StreamingSpec extends SparkSpec {
     assert(all.filter($"batch_id" === 8L).count() == 1)
   }
 
+  test("idempotent sinks land every row exactly once when a committed batch replays") {
+    // Exactly-once from a replayable source + the offset/commit log +
+    // an idempotent sink: two file-source batches commit, then deleting
+    // commits/1 stands in for a crash after the sink wrote batch 1 but
+    // before the engine committed it, so the restart on the same
+    // checkpoint hands batch 1 to the sink a second time
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.streaming.DataStreamWriter
+    import graft.streaming.Connectors
+    val url = "jdbc:derby:memory:graftreplay;create=true"
+    val props = new java.util.Properties()
+    val sinks: Seq[(String, (DataFrame, String) => DataStreamWriter[Row], String => DataFrame)] = Seq(
+      ("parquet",
+        (df, dir) => StreamingPipeline.foreachBatchParquetSink(df, s"$dir/data", s"$dir/ckpt"),
+        dir => spark.read.parquet(s"$dir/data")),
+      ("jdbc",
+        (df, dir) => Connectors.foreachBatchJdbcSink(df, url, "replayed", props, s"$dir/ckpt"),
+        _ => spark.read.jdbc(url, "replayed", props)))
+    sinks.foreach { case (name, sink, read) =>
+      val dir = Files.createTempDirectory(s"graft_replay_$name").toString
+      Files.createDirectories(Paths.get(s"$dir/in"))
+      Seq(Seq(1L, 2L), Seq(3L, 4L, 5L)).zipWithIndex.foreach { case (ids, i) =>
+        val tmp = Files.writeString(Paths.get(s"$dir/part$i.json"),
+          ids.map(id => s"""{"event_id": $id, "value": ${id * 1.5}}""").mkString("\n"))
+        Files.move(tmp, Paths.get(s"$dir/in/part$i.json"), StandardCopyOption.ATOMIC_MOVE)
+      }
+      def run(): Array[org.apache.spark.sql.streaming.StreamingQueryProgress] = {
+        val src = spark.readStream.schema("event_id LONG, value DOUBLE")
+          .option("maxFilesPerTrigger", 1).json(s"$dir/in")
+        val q = sink(src, dir).start()
+        try { q.processAllAvailable(); q.recentProgress }
+        finally q.stop()
+      }
+      assert(run().count(_.numInputRows > 0) == 2, s"$name: expected two data batches")
+      val commit1 = Paths.get(s"$dir/ckpt/commits/1")
+      assert(Files.exists(commit1), s"$name: batch 1 never committed")
+      Files.delete(commit1)
+      Files.deleteIfExists(Paths.get(s"$dir/ckpt/commits/.1.crc"))
+      val replay = run()
+      assert(replay.exists(p => p.batchId == 1 && p.numInputRows > 0),
+        s"$name: restart did not replay batch 1: ${replay.map(_.json).toSeq}")
+      val got = read(dir).select($"event_id").as[Long].collect().sorted.toSeq
+      assert(got == Seq(1L, 2L, 3L, 4L, 5L), s"$name: rows not exactly once: $got")
+    }
+  }
+
   test("processing-time trigger is applied to the sink and still delivers all rows") {
     import org.apache.spark.sql.streaming.Trigger
     implicit val sqlCtx = spark.sqlContext

@@ -292,10 +292,10 @@ class TextDedupSpec extends SparkSpec {
     assert(TextDedup.textNormalize(spark, sf0001).filter($"changed" =!= 0).isEmpty)
     // normalized dedup collapses variant classes raw dedup cannot: the
     // case/whitespace variants of one text share one normalized digest
-    val variants = Seq(
+    val forms = Seq(
       (1L, "Same  Doc"), (2L, "same doc"), (3L, "same\tDOC"), (4L, "other"))
       .toDF("doc_id", "text")
-    val collapsed = TextDedup.textNormalizeFrom(variants)
+    val collapsed = TextDedup.textNormalizeFrom(forms)
       .groupBy($"text_norm").count().filter($"count" === 3)
     assert(collapsed.count() == 1, "three variants must share one normalized form")
   }

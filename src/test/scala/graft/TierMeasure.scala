@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** One-off cold-JVM measurement runner for the hi-recall banding
   * tiers (r7 verdict #6): `Test/runMain graft.TierMeasure <rows>`
   * times the forced (16, rows) point at sf0.1 twice in a fresh JVM
@@ -10,14 +8,7 @@ import org.apache.spark.sql.SparkSession
   * genuinely cold (no shared-JVM ordering bias — the QBench rule). */
 object TierMeasure {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkEntry.toolSession("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     def time[T](f: => T): (T, Double) = {
       val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)

@@ -3,6 +3,9 @@
 
 Usage: python tools/parity.py [sfdir] [outdir] [query ...]
 
+Query names not in oracle_sql.json are refused, and a run that compared
+no query exits non-zero.
+
 Reads outdir/<name>/ parquet (written by graft.Verify) and
 outdir/oracle_sql.json, runs each oracle SQL in DuckDB against the
 sfdir parquet tables, and compares: row count, column names/types,
@@ -49,6 +52,11 @@ def main():
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
     oracle = json.load(open(f"{out}/oracle_sql.json"))
+    # a typo'd name would otherwise be skipped and the run would pass
+    # having compared nothing
+    unknown = sorted(only - oracle.keys())
+    if unknown:
+        sys.exit(f"unknown queries (not in {out}/oracle_sql.json): {', '.join(unknown)}")
     n_ok = n_bad = 0
     for name, sql in sorted(oracle.items()):
         if only and name not in only:
@@ -73,6 +81,8 @@ def main():
             print(f"ok   {name} ({len(got)} rows)")
             n_ok += 1
     print(f"== {n_ok} ok, {n_bad} fail")
+    if n_ok + n_bad == 0:
+        sys.exit("no query was compared")
     sys.exit(1 if n_bad else 0)
 
 if __name__ == "__main__":
