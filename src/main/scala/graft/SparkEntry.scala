@@ -45,7 +45,7 @@ object SparkEntry {
   /** The one session every tool main (Bench, QBench, Verify, Explain,
     * ScanDump and the test-side runners) runs on: `local[n]` with n
     * shuffle partitions, n from SPARK_GRAFT_CPUS (default 4), UTC, AQE
-    * on, no UI. */
+    * on, no UI, `file:` bound to [[LocalFs]]. */
   private[graft] def toolSession(logLevel: String = "WARN"): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
@@ -54,6 +54,7 @@ object SparkEntry {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
+      .config(LocalFs.sessionConf)
       .getOrCreate()
     spark.sparkContext.setLogLevel(logLevel)
     spark

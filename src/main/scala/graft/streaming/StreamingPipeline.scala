@@ -140,6 +140,9 @@ object StreamingPipeline {
     * produce. */
   def referenceDag(deep: DataFrame, auxes: Seq[(String, DataFrame)],
       dedupKeys: Seq[String]): DataFrame = {
+    // the caller starts the query next, and Spark fixes its checkpoint
+    // and state-store file manager at start
+    graft.ops.LocalFs.bind(deep.sparkSession)
     val deepW = deep.withColumn("bucket", bucket5m(col("ts")))
       .withWatermark("ts", "5 minutes")
     val joined = auxes.foldLeft(deepW) { case (acc, (name, aux)) =>
@@ -285,16 +288,18 @@ object StreamingPipeline {
   /** Throughput-regime configuration for [[referenceDag]] (and any
     * deep stateful DAG built from this layer).
     *
-    * A forced-batch probe (r11) measured the DAG's cost model: ~4.7 s
-    * of FIXED cost per micro-batch cycle (incremental planning + one
-    * state-store commit/snapshot per partition per
-    * stateful operator — this DAG has 9) against an ~8.5 s per-event
-    * floor at 20k events, and ~40% of that fixed cost is the NO-DATA
-    * micro-batch that follows every data batch to advance the
-    * watermark and flush closed windows. The r12 structural profile
-    * split the per-event floor too: it is dominated by the 4 widening joins +
-    * full-row dedup — a DAG-SHAPE cost, removed by
-    * [[referenceDagPivot]] (measured 2.6x). Levers, in order:
+    * Every micro-batch cycle pays a FIXED cost: incremental planning,
+    * one state-store commit per partition per stateful operator, and
+    * the offset and commit log entries. A NO-DATA micro-batch follows
+    * every data batch to advance the watermark and flush closed
+    * windows, and repeats the commit half of that cost. On top of it
+    * sits a per-event floor that the 4 widening joins plus the
+    * full-row dedup dominate: a DAG-SHAPE cost, which
+    * [[referenceDagPivot]] removes. The file half of the commit cost
+    * is [[graft.ops.LocalFs]]'s (bound by [[referenceDag]]); its
+    * per-layer reading is perfbench's traced
+    * `StreamingPipeline.referenceDag.state_commit_ms_p50`. Levers, in
+    * order:
     *
     *  0. DAG SHAPE — [[referenceDagPivot]] whenever per-stream
     *     cartesian fan-out is not load-bearing (see its scaladoc).
@@ -304,14 +309,13 @@ object StreamingPipeline {
     *     larger): the fixed cost amortizes linearly over the batch.
     *     Tradeoff: end-to-end latency rises with the interval.
     *  2. Flush cadence — this conf map disables no-data micro-batches,
-    *     removing the flush cycle that repeats the commit half of the
-    *     fixed cost after every data batch (probe: 16 forced batches
-    *     78.9 -> 45.7 s, +73% throughput). Tradeoff: a window whose
-    *     watermark passes between arrivals is emitted with the NEXT
-    *     data batch rather than immediately, so tail output latency of
-    *     closed windows becomes data-arrival-bound — right for
-    *     throughput-oriented backfills and steady high-rate feeds,
-    *     wrong for sparse feeds needing prompt window closure.
+    *     removing the flush cycle and its commits after every data
+    *     batch. Tradeoff: a window whose watermark passes between
+    *     arrivals is emitted with the NEXT data batch rather than
+    *     immediately, so tail output latency of closed windows becomes
+    *     data-arrival-bound — right for throughput-oriented backfills
+    *     and steady high-rate feeds, wrong for sparse feeds needing
+    *     prompt window closure.
     *
     * Apply via `confs.foreach { case (k, v) => spark.conf.set(k, v) }`
     * before `.start()` (the setting is read at query start). Measured

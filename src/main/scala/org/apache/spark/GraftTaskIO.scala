@@ -2,9 +2,12 @@ package org.apache.spark
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
-  SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd,
+  SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd,
+  SparkListenerSQLExecutionStart}
 
 /** The engine's one Spark listener: cumulative task-level I/O
   * counters (input bytes read, shuffle bytes written/read, bytes
@@ -39,7 +42,10 @@ import org.apache.spark.sql.SparkSession
 object GraftTaskIO {
   /** One finished Spark job: id, start and end (epoch ms, the
     * listener's event times), task count over its stages, and its
-    * short call site (`collect at Foo.scala:12`). */
+    * short call site (`collect at Foo.scala:12`). A job inside a SQL
+    * execution is named by the execution's description, the action's
+    * call site: under AQE each query-stage job is submitted from
+    * Spark's own thread, so its result stage names a Spark frame. */
   final case class Job(id: Int, start: Long, end: Long, tasks: Int, callSite: String)
 
   final class Counters private[GraftTaskIO] () extends SparkListener {
@@ -49,7 +55,8 @@ object GraftTaskIO {
     private[GraftTaskIO] val spill = new AtomicLong
     // written only by this listener's bus thread; the volatile read in
     // `snapshot` (after the drain) sees every job that ended before it
-    private val started = new java.util.HashMap[Int, SparkListenerJobStart]
+    private val started = new java.util.HashMap[Int, Job]
+    private val executions = new java.util.HashMap[String, String] // SQL execution id -> description
     @volatile private[GraftTaskIO] var jobs = Vector.empty[Job]
 
     override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
@@ -62,14 +69,23 @@ object GraftTaskIO {
       }
     }
 
-    override def onJobStart(js: SparkListenerJobStart): Unit = started.put(js.jobId, js)
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart => executions.put(s.executionId.toString, s.description)
+      case s: SparkListenerSQLExecutionEnd => executions.remove(s.executionId.toString)
+      case _ =>
+    }
+
+    override def onJobStart(js: SparkListenerJobStart): Unit = {
+      // outside any SQL execution, the result stage (highest id) is
+      // named by the job's short call site
+      val site = Option(js.properties).flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+        .flatMap(id => Option(executions.get(id)))
+        .getOrElse(js.stageInfos.maxByOption(_.stageId).fold("")(_.name))
+      started.put(js.jobId, Job(js.jobId, js.time, 0L, js.stageInfos.map(_.numTasks).sum, site))
+    }
 
     override def onJobEnd(je: SparkListenerJobEnd): Unit =
-      Option(started.remove(je.jobId)).foreach { js =>
-        // the result stage (highest id) is named by the job's short call site
-        val site = js.stageInfos.maxByOption(_.stageId).fold("")(_.name)
-        jobs :+= Job(js.jobId, js.time, je.time, js.stageInfos.map(_.numTasks).sum, site)
-      }
+      Option(started.remove(je.jobId)).foreach(j => jobs :+= j.copy(end = je.time))
   }
 
   /** (input, shuffle write, shuffle read, disk spill) in bytes, and the

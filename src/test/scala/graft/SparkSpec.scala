@@ -17,6 +17,7 @@ object SparkSpec {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(graft.ops.LocalFs.sessionConf)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -181,6 +181,35 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("reference DAG on the engine's local filesystem: same signals and checkpoint tree as Hadoop's") {
+    // one data batch, fed before start, so both checkpoints see the same batches
+    def run(s: org.apache.spark.sql.SparkSession, dir: String) = {
+      implicit val sqlCtx = s.sqlContext
+      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+      val deep = MemoryStream[(Long, Timestamp, Double)]
+      val aux = Seq(("vix", "10:01:00", 16.0), ("vol", "10:02:00", 5000.0),
+        ("cot", "10:03:00", 300000.0), ("ind", "10:00:30", 3.6))
+        .map { case (n, ts, v) => (n, MemoryStream[(Timestamp, Double)], (t(s"2024-01-01 $ts"), v)) }
+      deep.addData((7L, t("2024-01-01 10:00:10"), 100.5), (8L, t("2024-01-01 10:20:00"), 101.0))
+      aux.foreach { case (_, m, row) => m.addData(row) }
+      val wide = StreamingPipeline.referenceDag(deep.toDF().toDF("deep_id", "ts", "micro_price"),
+        aux.map { case (n, m, _) => n -> m.toDF().toDF("ts", s"${n}_value") })
+      val q = StreamingPipeline.foreachBatchParquetSink(wide, s"$dir/data", s"$dir/ckpt").start()
+      try q.processAllAvailable() finally q.stop()
+      val rows = s.read.parquet(s"$dir/data").collect().map(_.toString).sorted.toSeq
+      (rows, LocalFsSpec.tree(java.nio.file.Paths.get(s"$dir/ckpt")))
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft_dag_fs").toString
+    val stock = spark.newSession()
+    stock.conf.set(ops.LocalFs.AbstractFsKey, ops.LocalFs.StockAbstractFs)
+    assert(org.apache.hadoop.fs.FileContext.getFileContext(stock.sessionState.newHadoopConf())
+      .getDefaultFileSystem.getClass.getName == ops.LocalFs.StockAbstractFs)
+    val (engineRows, engineTree) = run(spark.newSession(), s"$dir/engine")
+    val (stockRows, stockTree) = run(stock, s"$dir/stock")
+    assert(engineRows.size == 1 && engineRows == stockRows)
+    assert(engineTree.exists(_._1.endsWith(".delta")) && engineTree == stockTree)
+  }
+
   test("pivot-shaped DAG twin matches the join-chain DAG (2 stateful ops vs 9)") {
     // Same fixture as the chain test: only deep row 7 has all four aux
     // partners; row 8 must be dropped by the inner semantics in BOTH

@@ -13,13 +13,15 @@ class TaskIoSpec extends SparkSpec {
   test("snapshot deltas attribute a job's input and shuffle bytes to its window") {
     val c = GraftTaskIO.install(spark)
     try {
-      val s0 = GraftTaskIO.snapshot(spark, c)
-      // a parquet scan + a wide groupBy: both input and shuffle traffic
-      ops.Core.documents(spark, sf0001)
+      // a parquet scan + a wide groupBy: both input and shuffle traffic;
+      // the frame (and its schema read) is built before the window, so
+      // the window holds the collect's jobs only
+      val grouped = ops.Core.documents(spark, sf0001)
         .groupBy("source").agg(org.apache.spark.sql.functions.sum(
           org.apache.spark.sql.functions.length(
             org.apache.spark.sql.functions.col("text"))))
-        .collect()
+      val s0 = GraftTaskIO.snapshot(spark, c)
+      grouped.collect()
       val d1 = GraftTaskIO.snapshot(spark, c) - s0
       assert(d1.input > 0, s"parquet scan bytes not counted: $d1")
       assert(d1.shuffleWrite > 0 && d1.shuffleRead > 0,
@@ -29,6 +31,13 @@ class TaskIoSpec extends SparkSpec {
       assert(d1.jobs.nonEmpty, s"groupBy window lists no jobs: $d1")
       d1.jobs.foreach { j =>
         assert(j.end >= j.start && j.tasks > 0 && j.callSite.nonEmpty, s"bad job record: $j")
+      }
+      // under AQE each stage job is submitted from Spark's own thread;
+      // its record is still named by the action's call site
+      assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+      d1.jobs.foreach { j =>
+        assert(!j.callSite.contains("CompletableFuture") && j.callSite.contains("TaskIoSpec.scala"),
+          s"job not named by its action: $j")
       }
 
       // a windowed no-op on cached memory: no NEW parquet input may be
