@@ -3,7 +3,6 @@ package graft.ops
 import java.io.File
 import java.net.URI
 import java.nio.file.Files
-import java.nio.file.attribute.PosixFilePermission
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsConstants,
@@ -43,19 +42,11 @@ object LocalFs {
     if (conf.get(AbstractFsKey) == StockAbstractFs) conf.set(AbstractFsKey, classOf[Fs].getName)
   }
 
-  private val rwx = PosixFilePermission.values.toSeq // owner rwx, group rwx, others rwx
-
   class Raw extends RawLocalFileSystem {
+    // the whole mode, sticky bit included, as Hadoop's chmod sets it;
     // toShort, never toString: an FsCreateModes prints both its modes
-    override def setPermission(p: Path, permission: FsPermission): Unit = {
-      val mode = permission.toShort.toInt
-      if ((mode & ~0x1ff) != 0) super.setPermission(p, permission) // sticky, setuid, setgid: above 0777
-      else {
-        val bits = java.util.EnumSet.noneOf(classOf[PosixFilePermission])
-        rwx.zipWithIndex.foreach { case (b, i) => if ((mode & (0x100 >> i)) != 0) bits.add(b) }
-        Files.setPosixFilePermissions(pathToFile(p).toPath, bits)
-      }
-    }
+    override def setPermission(p: Path, permission: FsPermission): Unit =
+      Files.setAttribute(pathToFile(p).toPath, "unix:mode", Int.box(permission.toShort.toInt))
 
     // Hadoop readlinks the file named by the path's string form and,
     // for anything but a link, returns getFileStatus

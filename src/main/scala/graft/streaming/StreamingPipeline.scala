@@ -212,8 +212,14 @@ object StreamingPipeline {
     * (append-mode aggregation semantics). Right for steady feeds and
     * backfills; prefer the chain when per-row emission latency under
     * sparse/stalled aux feeds matters more than throughput.
-    * StreamingSpec pins pivot == chain on the unit fixture. */
+    * StreamingSpec pins pivot == chain on the unit fixture.
+    * A streaming `deep` binds [[graft.ops.LocalFs]] as
+    * [[referenceDag]] does, for callers that stream the pivot (the
+    * repo's own workloads stream only the chain); a batch caller such
+    * as [[graft.ops.Joins.intervalJoinPivot]] writes no checkpoint and
+    * leaves the context's binding alone. */
   def referenceDagPivot(deep: DataFrame, auxes: Seq[(String, DataFrame)]): DataFrame = {
+    if (deep.isStreaming) graft.ops.LocalFs.bind(deep.sparkSession)
     // zero aux streams: the chain degrades to watermark + dedup of the
     // deep frame; the pivot must be a drop-in twin on that degenerate
     // input too (its tagged union and pivot agg need >= 1 stream)
@@ -295,11 +301,11 @@ object StreamingPipeline {
     * windows, and repeats the commit half of that cost. On top of it
     * sits a per-event floor that the 4 widening joins plus the
     * full-row dedup dominate: a DAG-SHAPE cost, which
-    * [[referenceDagPivot]] removes. The file half of the commit cost
-    * is [[graft.ops.LocalFs]]'s (bound by [[referenceDag]]); its
-    * per-layer reading is perfbench's traced
-    * `StreamingPipeline.referenceDag.state_commit_ms_p50`. Levers, in
-    * order:
+    * [[referenceDagPivot]] removes. Each commit writes its files
+    * through [[graft.ops.LocalFs]] (bound by [[referenceDag]]), so it
+    * forks no process; perfbench's traced
+    * `StreamingPipeline.referenceDag.state_commit_ms_p50` reads the
+    * commit's share per batch. Levers, in order:
     *
     *  0. DAG SHAPE — [[referenceDagPivot]] whenever per-stream
     *     cartesian fan-out is not load-bearing (see its scaladoc).

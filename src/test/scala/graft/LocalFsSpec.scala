@@ -10,6 +10,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{CreateFlag, FileContext, FileStatus, FileSystem, Options, Path,
   RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.ops.LocalFs
@@ -39,8 +40,8 @@ class LocalFsSpec extends SparkSpec {
 
   /** The calls a checkpoint or a parquet write makes: nested
     * directories, a temp file renamed over its final name, a plain
-    * created file, and a directory set to mode 01777 (a sticky mode
-    * takes Hadoop's own path). */
+    * created file, and a directory set to mode 01777 (a mode above
+    * the rwx bits). */
   private val apis: Seq[(String, (Configuration, JPath) => Unit)] = Seq(
     "FileContext" -> { (c, root) =>
       val fc = FileContext.getFileContext(c)
@@ -144,17 +145,32 @@ class LocalFsSpec extends SparkSpec {
     }
   }
 
-  test("after referenceDag, FileContext resolves file: to the engine filesystem") {
+  private val dagBuilders: Seq[(String, (DataFrame, Seq[(String, DataFrame)]) => DataFrame)] = Seq(
+    "referenceDag" -> ((d, a) => StreamingPipeline.referenceDag(d, a)),
+    "referenceDagPivot" -> ((d, a) => StreamingPipeline.referenceDagPivot(d, a)))
+
+  for ((name, build) <- dagBuilders)
+    test(s"after $name, FileContext resolves file: to the engine filesystem") {
+      import spark.implicits._
+      implicit val sqlCtx = spark.sqlContext
+      withBinding(LocalFs.StockAbstractFs) {
+        val before = FileContext.getFileContext(spark.sessionState.newHadoopConf())
+        assert(before.getDefaultFileSystem.getClass.getName == LocalFs.StockAbstractFs)
+        build(MemoryStream[(Long, java.sql.Timestamp)].toDF().toDF("deep_id", "ts"),
+          Seq("vix" -> MemoryStream[(java.sql.Timestamp, Double)].toDF().toDF("ts", "vix_value")))
+        val after = FileContext.getFileContext(spark.sessionState.newHadoopConf())
+        assert(after.getDefaultFileSystem.isInstanceOf[LocalFs.Fs])
+      }
+    }
+
+  test("a batch referenceDagPivot leaves the context's binding alone") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
+    val ts = java.sql.Timestamp.valueOf("2024-01-02 10:00:00")
     withBinding(LocalFs.StockAbstractFs) {
-      val before = FileContext.getFileContext(spark.sessionState.newHadoopConf())
-      assert(before.getDefaultFileSystem.getClass.getName == LocalFs.StockAbstractFs)
-      StreamingPipeline.referenceDag(
-        MemoryStream[(Long, java.sql.Timestamp)].toDF().toDF("deep_id", "ts"),
-        Seq("vix" -> MemoryStream[(java.sql.Timestamp, Double)].toDF().toDF("ts", "vix_value")))
-      val after = FileContext.getFileContext(spark.sessionState.newHadoopConf())
-      assert(after.getDefaultFileSystem.isInstanceOf[LocalFs.Fs])
+      StreamingPipeline.referenceDagPivot(Seq((1L, ts)).toDF("deep_id", "ts"),
+        Seq("vix" -> Seq((ts, 1.0)).toDF("ts", "vix_value")))
+      assert(spark.sparkContext.hadoopConfiguration.get(LocalFs.AbstractFsKey) ==
+        LocalFs.StockAbstractFs)
     }
   }
 }
